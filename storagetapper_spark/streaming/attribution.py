@@ -6,7 +6,8 @@ last purchase) is carried across micro-batches in a tiny per-user
 state table; each purchase closes the episode, splitting its value
 equally across the open touches (or crediting '(direct)' when there
 are none), and the per-channel credit totals fold into a running
-aggregate — write-new + swap, the house state protocol.
+aggregate — both committed by ``statefs.commit_state``, the house
+state protocol.
 
 Because attribution is sequential per user, folding ORDERED batches on
 top of the carried state equals the one-shot batch computation exactly
@@ -17,12 +18,12 @@ per-user Arrow batches.
 
 from __future__ import annotations
 
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 
 _CHANNELS = ["view", "click"]
 
@@ -107,64 +108,43 @@ def attribution_sink(event_stream: DataFrame, state_dir: str,
                      checkpoint_dir: str,
                      trigger_available_now: bool = True):
     """foreachBatch attribution: carried episode state + running
-    per-channel credit totals, write-new + swap both."""
-    spark = event_stream.sparkSession
+    per-channel credit totals, each committed once per batch by
+    ``statefs.commit_state`` (protocol in the statefs module
+    docstring), credits first."""
+    st_cur = join_uri(state_dir, "episodes", "current")
+    cr_cur = join_uri(state_dir, "credits", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        # Replay guard (foreachBatch is at-least-once, ADVICE r3): a
+        # table that already records this batch is never re-folded —
+        # that would double-count credits or re-advance episodes.  A
+        # crash between the two commits leaves credits applied and the
+        # episodes pre-batch, so the replay folds and commits episodes
+        # only.
+        cr_due = committed_batch(cr_cur) < batch_id
+        st_due = committed_batch(st_cur) < batch_id
+        if batch_df.isEmpty() or not (cr_due or st_due):
             return
         # use the MICRO-BATCH's session for state reads: joining a
         # foreachBatch frame against a DataFrame from the outer session
         # can silently miss the broadcast seed (observed: episodes
         # closed as '(direct)' despite recorded open touches)
         bspark = batch_df.sparkSession
-        st_cur = join_uri(state_dir, "episodes", "current")
-        cr_cur = join_uri(state_dir, "credits", "current")
-        st_v = st_cur.replace("current", f"v{batch_id}")
-        cr_v = cr_cur.replace("current", f"v{batch_id}")
-        cr_done = exists(join_uri(cr_v, "_SUCCESS"))
-        st_done = exists(join_uri(st_v, "_SUCCESS"))
-        # Replay guard (foreachBatch is at-least-once, ADVICE r3): a
-        # completed v{batch_id} already contains this batch folded in —
-        # re-folding on top of 'current' would double-count credits and
-        # re-advance episode state.  Republishing the stored version is
-        # idempotent whichever side of the swap the crash hit.
-        if cr_done and st_done:
-            bspark.read.parquet(cr_v).write.mode("overwrite").parquet(cr_cur)
-            bspark.read.parquet(st_v).write.mode("overwrite").parquet(st_cur)
-            return
-        if cr_done:
-            # crash landed between the credit publish and the state
-            # write: cr_cur may ALREADY include this batch, so never
-            # re-accumulate credits — republish cr_v, and redo only the
-            # state fold (st_cur is still pre-batch).
-            bspark.read.parquet(cr_v).write.mode("overwrite").parquet(cr_cur)
-            state = (bspark.read.parquet(st_cur)
-                     if exists(st_cur) else None)
-            new_state, _ = fold_attribution_batch(state, batch_df)
-            new_state.write.mode("overwrite").parquet(st_v)
-            bspark.read.parquet(st_v).write.mode("overwrite").parquet(st_cur)
-            return
         state = (bspark.read.parquet(st_cur)
                  if exists(st_cur) else None)
         new_state, credits = fold_attribution_batch(state, batch_df)
-        if exists(cr_cur):
-            prev = bspark.read.parquet(cr_cur)
-            credits = (prev.unionByName(credits)
-                       .groupBy("channel")
-                       .agg(F.sum("credit").alias("credit"),
-                            F.sum("n_credits").alias("n_credits")))
-        # WRITE ORDER MATTERS: credits first.  Overwriting the episode
-        # state path invalidates every cached plan that read it (Spark
-        # refreshes caches by path on insert), so a credits lineage
-        # executed AFTER the state swap would recompute against the NEW
-        # state and mis-credit closed episodes as '(direct)' (observed).
-        # Writing each df to its versioned path first pins its value
-        # while all inputs are still the pre-batch files.
-        for df, cur in ((credits, cr_cur), (new_state, st_cur)):
-            nxt = cur.replace("current", f"v{batch_id}")
-            df.write.mode("overwrite").parquet(nxt)
-            bspark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        # COMMIT ORDER MATTERS: credits first.  Each commit writes its
+        # frame before it moves its table, so the credits lineage runs
+        # while the episode files it reads are still the pre-batch ones.
+        if cr_due:
+            if exists(cr_cur):
+                credits = (bspark.read.parquet(cr_cur).unionByName(credits)
+                           .groupBy("channel")
+                           .agg(F.sum("credit").alias("credit"),
+                                F.sum("n_credits").alias("n_credits")))
+            commit_state(credits, cr_cur, batch_id)
+        if st_due:
+            commit_state(new_state, st_cur, batch_id)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

@@ -6,7 +6,7 @@ how production monitors run, so a drift can't poison its own
 baseline), and the two-sided recursion
     S⁺ₜ = max(0, S⁺ₜ₋₁ + xₜ - μ - k),   S⁻ mirrored
 is carried across micro-batches in a tiny per-series state table
-(write-new + swap, the house state protocol).  Because the recursion
+(``statefs.commit_state``, the house state protocol).  Because the recursion
 is sequential per series, each batch folds its days IN ORDER on top of
 the stored (sp, sn) — incremental folding equals the one-shot batch
 computation exactly (tested), the same invariant the SCD2/IVM sinks
@@ -22,7 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 
 
 def train_baseline(df: DataFrame, series_col: str = "event_type",
@@ -104,24 +105,18 @@ def cusum_sink(event_stream: DataFrame, baseline: DataFrame,
                state_dir: str, checkpoint_dir: str,
                series_col: str = "event_type", ts_col: str = "ts",
                trigger_available_now: bool = True):
-    """foreachBatch CUSUM monitor over a raw event stream."""
+    """foreachBatch CUSUM monitor over a raw event stream; the state
+    commit protocol is in the statefs module docstring."""
     spark = event_stream.sparkSession
     base = baseline.persist()
     base.count()
+    cur = join_uri(state_dir, "cusum", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = join_uri(state_dir, "cusum", "current")
-        nxt = join_uri(state_dir, "cusum", f"v{batch_id}")
-        # Replay guard (foreachBatch is at-least-once): a completed
-        # v{batch_id} means this batch's days are ALREADY folded into
-        # that version — re-folding them onto 'current' would corrupt
-        # sp/sn and alarm counts (ADVICE r3).  Re-publishing the stored
-        # version is idempotent whichever side of the current-swap the
-        # crash happened on.
-        if exists(join_uri(nxt, "_SUCCESS")):
-            spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        # Replay guard (foreachBatch is at-least-once): once the state
+        # records this batch its days are ALREADY folded in — re-folding
+        # them would corrupt sp/sn and alarm counts (ADVICE r3).
+        if batch_df.isEmpty() or committed_batch(cur) >= batch_id:
             return
         daily = (batch_df.groupBy(series_col,
                                   F.to_date(ts_col).alias("d"))
@@ -131,8 +126,8 @@ def cusum_sink(event_stream: DataFrame, baseline: DataFrame,
         # side table instead of silently dropping them (ADVICE r3).
         # Batch-partitioned dynamic overwrite, NOT append: an
         # at-least-once replay that crashed after this write but before
-        # v{batch_id}/_SUCCESS replaces its own _batch partition instead
-        # of duplicating rows (ADVICE r4 — the replay guard above only
+        # the state commit replaces its own _batch partition instead of
+        # duplicating rows (ADVICE r4 — the replay guard above only
         # protects the folded state, not this side table).
         unmatched = (daily.select(series_col).distinct()
                      .join(F.broadcast(base.select(series_col)),
@@ -144,9 +139,8 @@ def cusum_sink(event_stream: DataFrame, baseline: DataFrame,
              .partitionBy("_batch")
              .parquet(join_uri(state_dir, "cusum", "unmonitored")))
         state = spark.read.parquet(cur) if exists(cur) else None
-        new = fold_cusum_batch(state, daily, base, series_col)
-        new.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        commit_state(fold_cusum_batch(state, daily, base, series_col), cur,
+                     batch_id)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

@@ -4,7 +4,7 @@ The streaming form of plans/drift2.drift_ks_by_feature: the sufficient
 state for a two-sample KS on integer value grids is one COUNT per
 (feature, value, side) — mergeable across micro-batches by plain
 addition, so the monitor folds each batch's grid counts into a
-grid-sized state table (write-new + swap, statefs-portable) and
+grid-sized state table (``statefs.commit_state``) and
 recomputes the exact KS from state alone.  Incremental == batch
 bit-exactly (tested): counts are exact integers, and the KS evaluation
 is the same DECIMAL cross-product expression the batch query uses.
@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 
 _DEC = "decimal(19,0)"
 
@@ -86,24 +87,20 @@ def drift_sink(event_stream: DataFrame, reference: DataFrame,
                feature_cols, state_dir: str, checkpoint_dir: str,
                trigger_available_now: bool = True):
     """foreachBatch drift monitor: fold each batch's value-grid counts
-    into live-side state (write-new + swap, replay-idempotent)."""
+    into live-side state, committed once per batch by
+    ``statefs.commit_state`` (protocol in the statefs module docstring;
+    a replay is skipped)."""
     spark = event_stream.sparkSession
     ref = reference.persist()
     ref.count()
+    cur = join_uri(state_dir, "drift", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = join_uri(state_dir, "drift", "current")
-        nxt = join_uri(state_dir, "drift", f"v{batch_id}")
-        if exists(join_uri(nxt, "_SUCCESS")):
-            spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        if batch_df.isEmpty() or committed_batch(cur) >= batch_id:
             return
         grid = grid_counts(batch_df, feature_cols(batch_df))
         state = spark.read.parquet(cur) if exists(cur) else None
-        new = fold_grid_batch(state, grid)
-        new.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        commit_state(fold_grid_batch(state, grid), cur, batch_id)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

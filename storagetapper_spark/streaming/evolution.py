@@ -34,7 +34,8 @@ from pyspark.sql import types as T
 
 from storagetapper_spark.operators.merge import latest_state
 from storagetapper_spark.schema.evolution import apply_change, conform, parse_ddl
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 from storagetapper_spark.state import Registry
 
 #: Fixed wire schema of an evolving CDC feed (CommonFormat analog).
@@ -60,15 +61,14 @@ def _merge_segment(spark: SparkSession, rows: DataFrame,
              T.StructField("seqno", T.LongType())]
             + [f for f in schema.fields if f.name not in ("pk", "op", "seqno")]))
     cur_path = join_uri(state_path, "current")
+    # a batch commits once per segment, so the versions count segments
+    # (replays converge through max-seqno-wins, not the marker)
+    version = committed_batch(cur_path) + 1
     if exists(cur_path):
-        cur = conform(spark.read.parquet(cur_path), decoded.schema)
-        merged = latest_state(cur.unionByName(decoded), pk_cols,
-                              drop_deleted=False)
-    else:
-        merged = latest_state(decoded, pk_cols, drop_deleted=False)
-    tmp = join_uri(state_path, "next")
-    merged.write.mode("overwrite").parquet(tmp)
-    spark.read.parquet(tmp).write.mode("overwrite").parquet(cur_path)
+        decoded = conform(spark.read.parquet(cur_path),
+                          decoded.schema).unionByName(decoded)
+    commit_state(latest_state(decoded, pk_cols, drop_deleted=False),
+                 cur_path, version)
 
 
 class SchemaCompatError(ValueError):

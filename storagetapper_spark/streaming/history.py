@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from storagetapper_spark.operators.history import delta_stream, scd2_history
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 from storagetapper_spark.operators.merge import latest_state
 
 
@@ -139,24 +140,21 @@ def scd2_sink(cdc_stream: DataFrame, history_dir: str, checkpoint_dir: str,
               pk_cols: list[str], seqno_col: str = "seqno",
               op_col: str = "op", trigger_available_now: bool = True):
     """foreachBatch maintenance of an SCD2 history table (the streaming
-    form of ``scd2_apply_batch``), same write-new + swap state protocol
-    as ``pipeline.incremental_upsert_sink``; replay-safe because
-    ``scd2_apply_batch`` is idempotent per batch."""
-    import os
-
+    form of ``scd2_apply_batch``), committed once per batch by
+    ``statefs.commit_state`` (protocol in the statefs module
+    docstring); a replay is skipped by the commit marker, and
+    ``scd2_apply_batch`` is idempotent per batch besides."""
     spark = cdc_stream.sparkSession
+    cur_path = join_uri(history_dir, "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_df.isEmpty() or committed_batch(cur_path) >= batch_id:
             return
-        cur_path = join_uri(history_dir, "current")
         cur = (spark.read.parquet(cur_path)
                if exists(cur_path) else None)
-        merged = scd2_apply_batch(cur, batch_df, pk_cols,
-                                  seqno_col=seqno_col, op_col=op_col)
-        nxt = join_uri(history_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur_path)
+        commit_state(scd2_apply_batch(cur, batch_df, pk_cols,
+                                      seqno_col=seqno_col, op_col=op_col),
+                     cur_path, batch_id)
 
     writer = (cdc_stream.writeStream
               .foreachBatch(process_batch)
@@ -168,8 +166,6 @@ def scd2_sink(cdc_stream: DataFrame, history_dir: str, checkpoint_dir: str,
 
 
 def read_history(spark, history_dir: str) -> DataFrame:
-    import os
-
     return spark.read.parquet(join_uri(history_dir, "current"))
 
 
@@ -179,26 +175,27 @@ def ivm_sink(cdc_stream: DataFrame, state_dir: str, checkpoint_dir: str,
     """foreachBatch maintenance of a materialized SUM/COUNT aggregate
     (the streaming form of ``apply_delta_batch``): per micro-batch, fold
     the batch's signed deltas into the stored aggregate and refresh the
-    per-key lag-seed table, write-new + swap both.  The aggregate and
-    keystate are group-/key-cardinality sized, so state IO stays small
-    no matter how large the fact stream is."""
-    import os
-
+    per-key lag-seed table, each committed by ``statefs.commit_state``
+    (protocol in the statefs module docstring), the aggregate first.  A
+    replay commits only the table that still lacks the batch, so no
+    delta is folded twice.  The aggregate and keystate are group-/key-
+    cardinality sized, so state IO stays small no matter how large the
+    fact stream is."""
     spark = cdc_stream.sparkSession
+    agg_cur = join_uri(state_dir, "agg", "current")
+    key_cur = join_uri(state_dir, "keystate", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        todo = [committed_batch(cur) < batch_id for cur in (agg_cur, key_cur)]
+        if batch_df.isEmpty() or not any(todo):
             return
-        agg_cur = join_uri(state_dir, "agg", "current")
-        key_cur = join_uri(state_dir, "keystate", "current")
         agg = spark.read.parquet(agg_cur) if exists(agg_cur) else None
         ks = spark.read.parquet(key_cur) if exists(key_cur) else None
-        agg2, ks2 = apply_delta_batch(agg, ks, batch_df, pk_cols, value_col,
-                                      group_col)
-        for df, cur in ((agg2, agg_cur), (ks2, key_cur)):
-            nxt = cur.replace("current", f"v{batch_id}")
-            df.write.mode("overwrite").parquet(nxt)
-            spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        tables = apply_delta_batch(agg, ks, batch_df, pk_cols, value_col,
+                                   group_col)
+        for df, cur, due in zip(tables, (agg_cur, key_cur), todo):
+            if due:
+                commit_state(df, cur, batch_id)
 
     writer = (cdc_stream.writeStream
               .foreachBatch(process_batch)
@@ -210,6 +207,4 @@ def ivm_sink(cdc_stream: DataFrame, state_dir: str, checkpoint_dir: str,
 
 
 def read_aggregate(spark, state_dir: str) -> DataFrame:
-    import os
-
     return spark.read.parquet(join_uri(state_dir, "agg", "current"))

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storagetapper_spark.operators.merge import latest_state
-from storagetapper_spark.statefs import exists, join_uri, listdir, rmtree
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri, rmtree)
 
 
 def read_changelog_stream(spark: SparkSession, path: str,
@@ -78,15 +79,18 @@ def read_changelog_stream_with_dlq(spark: SparkSession, path: str,
     return stream, route
 
 
-def _gc_old_versions(state_dir: str, keep: str, prefix: str = "v") -> None:
-    """Drop versioned state snapshots older than ``keep`` once the swap
-    to ``current`` has committed — the newest snapshot stays as the
-    crash-recovery copy, so state_dir stays O(2×state) on a long-
-    running stream instead of growing one v* dir per micro-batch."""
-    for name in listdir(state_dir):
-        if (name.startswith(prefix) and name != keep
-                and name[len(prefix):].isdigit()):
-            rmtree(join_uri(state_dir, name))
+def _merge_into_state(spark: SparkSession, cur_path: str, batch_df: DataFrame,
+                      pk_cols: list[str], seqno_col: str,
+                      op_col: str) -> DataFrame:
+    """Latest state after ``batch_df``: one max-seqno window over the
+    stored state and the raw batch.  Tombstones stay in state
+    (drop_deleted=False) so a replayed older insert can never resurrect
+    a deleted key; readers filter."""
+    if exists(cur_path):
+        cur = spark.read.parquet(cur_path)
+        batch_df = cur.unionByName(batch_df.select(*cur.columns))
+    return latest_state(batch_df, pk_cols, seqno_col=seqno_col,
+                        op_col=op_col, drop_deleted=False)
 
 
 def incremental_upsert_sink(cdc_stream: DataFrame, state_dir: str,
@@ -95,37 +99,27 @@ def incremental_upsert_sink(cdc_stream: DataFrame, state_dir: str,
                             trigger_available_now: bool = True):
     """foreachBatch materialization of latest-state (O1/E5 streaming form).
 
-    Each micro-batch: resolve the batch to one row per PK (max seqno),
-    merge against the current state table under the same rule, write the
-    new state atomically (write-new + swap).  Idempotent under batch
-    replay — max-seqno-wins is commutative/idempotent, the reference's
-    exact recovery argument (pipe/kafka.go:43-53).
+    Each micro-batch: one max-seqno window over ``current ∪ batch``
+    (max-seqno-wins is associative, so resolving the batch on its own
+    first changes nothing, and the window already keeps one row per key
+    map-side), committed by ``statefs.commit_state`` — the commit
+    protocol is in the statefs module docstring.  Idempotent under batch
+    replay twice over: the commit skips a batch the state already
+    records, and max-seqno-wins is commutative/idempotent, the
+    reference's exact recovery argument (pipe/kafka.go:43-53).
 
     With Delta/Iceberg this is MERGE INTO; plain parquet here, so the
     state rewrite is full-file — fine for dimension-sized state; for
     100 TB fact state use a partitioned MERGE sink.
     """
     spark = cdc_stream.sparkSession
+    cur_path = join_uri(state_dir, "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        resolved = latest_state(batch_df, pk_cols, seqno_col=seqno_col,
-                                op_col=op_col, drop_deleted=False)
-        cur_path = join_uri(state_dir, "current")
-        if exists(cur_path):
-            cur = spark.read.parquet(cur_path)
-            merged = latest_state(
-                cur.unionByName(resolved.select(*cur.columns)),
-                pk_cols, seqno_col=seqno_col, op_col=op_col,
-                drop_deleted=False)
-        else:
-            merged = resolved
-        # keep tombstones in state (drop_deleted=False) so a replayed
-        # older insert can never resurrect a deleted key; readers filter.
-        nxt = join_uri(state_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        swap = spark.read.parquet(nxt)
-        swap.write.mode("overwrite").parquet(cur_path)
-        _gc_old_versions(state_dir, keep=f"v{batch_id}")
+        if committed_batch(cur_path) < batch_id:
+            commit_state(_merge_into_state(spark, cur_path, batch_df,
+                                           pk_cols, seqno_col, op_col),
+                         cur_path, batch_id)
 
     writer = (cdc_stream.writeStream
               .foreachBatch(process_batch)
@@ -155,15 +149,19 @@ def gtid_guarded_upsert_sink(cdc_stream: DataFrame, state_dir: str,
     re-derived seqno.
 
     Per batch: filter rows whose GTID the saved set contains → apply
-    the usual max-seqno merge → persist the new state, THEN the folded
-    GTID set (crash between the two replays the batch, and replay is
-    filtered/idempotent — never skips).  The set itself is a 1-row
-    string parquet under ``state_dir/gtid_current``: interval-coalesced,
-    so it stays bytes-sized however long the stream runs."""
+    the usual max-seqno merge → commit the new state, THEN the folded
+    GTID set, each with ``statefs.commit_state`` (protocol in the
+    statefs module docstring).  A crash between the two replays the
+    batch: the state commit is skipped, the filter still sees the
+    pre-batch set, and the set commit completes — never a skip.  The
+    set itself is a 1-row string parquet under
+    ``state_dir/gtid_current``: interval-coalesced, so it stays
+    bytes-sized however long the stream runs."""
     from storagetapper_spark.sources.gtid import (GTIDSet, filter_unexecuted,
                                                   fold_batch)
 
     spark = cdc_stream.sparkSession
+    cur_path = join_uri(state_dir, "current")
     gtid_path = join_uri(state_dir, "gtid_current")
 
     def _load_set() -> GTIDSet:
@@ -173,47 +171,28 @@ def gtid_guarded_upsert_sink(cdc_stream: DataFrame, state_dir: str,
                 # a silent empty set here would re-enable exactly the
                 # stale-seqno resurrection this sink exists to prevent
                 raise RuntimeError(
-                    f"{gtid_path} exists but holds no row (crash "
-                    "mid-write?) — restore it from the newest gtid_v* "
-                    "snapshot before resuming")
+                    f"{gtid_path} exists but holds no row (not written "
+                    "by this sink's commit) — restore the executed set "
+                    "before resuming")
             return GTIDSet.parse(row[0]["executed_gtid_set"])
         return GTIDSet()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        state_done = committed_batch(cur_path) >= batch_id
+        if state_done and committed_batch(gtid_path) >= batch_id:
+            return
         state = _load_set()
-        fresh = filter_unexecuted(batch_df, state, gtid_col=gtid_col)
-        fresh = fresh.localCheckpoint(eager=True)  # the merge below
-        # overwrites paths the lineage may read; sever it first
-        resolved = latest_state(fresh, pk_cols, seqno_col=seqno_col,
-                                op_col=op_col, drop_deleted=False)
-        cur_path = join_uri(state_dir, "current")
-        if exists(cur_path):
-            cur = spark.read.parquet(cur_path)
-            merged = latest_state(
-                cur.unionByName(resolved.select(*cur.columns)),
-                pk_cols, seqno_col=seqno_col, op_col=op_col,
-                drop_deleted=False)
-        else:
-            merged = resolved
-        nxt = join_uri(state_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur_path)
-        _gc_old_versions(state_dir, keep=f"v{batch_id}")
-        # state committed — now advance the executed set (this order
-        # makes a crash replay, never skip).  Same write-new + swap
-        # discipline as the state table: a crash mid-overwrite of
-        # gtid_current leaves gtid_v{batch_id} as the restore copy
-        # (and _load_set raises on an empty dir rather than silently
-        # resetting the set).
+        # read twice (merge, fold): pin the filtered batch once
+        fresh = filter_unexecuted(batch_df, state, gtid_col=gtid_col
+                                  ).localCheckpoint(eager=True)
+        if not state_done:
+            commit_state(_merge_into_state(spark, cur_path, fresh, pk_cols,
+                                           seqno_col, op_col),
+                         cur_path, batch_id)
         folded = fold_batch(state, fresh, gtid_col=gtid_col)
-        gtid_nxt = join_uri(state_dir, f"gtid_v{batch_id}")
-        (spark.createDataFrame([(folded.to_string(),)],
-                               "executed_gtid_set string")
-         .write.mode("overwrite").parquet(gtid_nxt))
-        spark.read.parquet(gtid_nxt).write.mode("overwrite") \
-            .parquet(gtid_path)
-        _gc_old_versions(state_dir, keep=f"gtid_v{batch_id}",
-                         prefix="gtid_v")
+        commit_state(spark.createDataFrame([(folded.to_string(),)],
+                                           "executed_gtid_set string"),
+                     gtid_path, batch_id)
 
     writer = (cdc_stream.writeStream
               .foreachBatch(process_batch)

@@ -3,7 +3,8 @@
 The streaming form of the rolling-distinct query
 (plans/relational10.rolling_distinct_users): each micro-batch folds its
 per-day Datasketches HLL into a persistent state table keyed by day,
-write-new + swap (the same state protocol as streaming/history.ivm_sink).
+committed by ``statefs.commit_state`` (the protocol is in its module
+docstring).
 Because HLL union is associative, commutative, AND idempotent (re-merging
 the same sketch adds nothing — set semantics), the maintained state is
 simultaneously (a) equal to the one-shot batch computation over the
@@ -21,7 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 
 
 def day_sketches(df: DataFrame, key_col: str = "user_id",
@@ -46,17 +48,14 @@ def sketch_sink(event_stream: DataFrame, state_dir: str,
                 ts_col: str = "ts", trigger_available_now: bool = True):
     """foreachBatch maintenance of the per-day sketch state table."""
     spark = event_stream.sparkSession
+    cur = join_uri(state_dir, "sketches", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if batch_df.isEmpty() or committed_batch(cur) >= batch_id:
             return
-        cur = join_uri(state_dir, "sketches", "current")
         state = spark.read.parquet(cur) if exists(cur) else None
-        merged = merge_sketch_batch(state, day_sketches(batch_df, key_col,
-                                                        ts_col))
-        nxt = join_uri(state_dir, "sketches", f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        commit_state(merge_sketch_batch(
+            state, day_sketches(batch_df, key_col, ts_col)), cur, batch_id)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

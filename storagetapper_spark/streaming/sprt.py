@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from storagetapper_spark.plans.stats import _HI, _LA, _LB, _LO
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
+                                        join_uri)
 
 _STATE_COLS = ["arm", "s", "f", "decision", "n_at_decision",
                "s_at_decision"]
@@ -98,25 +99,18 @@ def trials_from_events(events: DataFrame) -> DataFrame:
 
 def sprt_sink(event_stream: DataFrame, state_dir: str,
               checkpoint_dir: str, trigger_available_now: bool = True):
-    """foreachBatch SPRT monitor over a raw event stream — the
-    write-new + swap versioned state protocol (replay-idempotent,
-    object-store safe via statefs)."""
+    """foreachBatch SPRT monitor over a raw event stream; state is
+    committed once per batch by ``statefs.commit_state`` (protocol in
+    the statefs module docstring), so a replay is skipped."""
     spark = event_stream.sparkSession
+    cur = join_uri(state_dir, "sprt", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        cur = join_uri(state_dir, "sprt", "current")
-        nxt = join_uri(state_dir, "sprt", f"v{batch_id}")
-        # at-least-once replay guard: a completed v{batch_id} already
-        # folded this batch; republish it idempotently
-        if exists(join_uri(nxt, "_SUCCESS")):
-            spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        if batch_df.isEmpty() or committed_batch(cur) >= batch_id:
             return
         state = spark.read.parquet(cur) if exists(cur) else None
-        new = fold_sprt_batch(state, trials_from_events(batch_df))
-        new.write.mode("overwrite").parquet(nxt)
-        spark.read.parquet(nxt).write.mode("overwrite").parquet(cur)
+        commit_state(fold_sprt_batch(state, trials_from_events(batch_df)),
+                     cur, batch_id)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

@@ -66,3 +66,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def assert_only_current():
+    """Check a state table's directory after its sink ran: it holds
+    ``current`` (plus any ``others``, e.g. side tables) and no version or
+    staging directory, and ``current`` carries the commit marker of
+    ``batch_id`` (statefs.commit_state)."""
+    def check(table_dir, batch_id, others=()):
+        names = sorted(os.listdir(table_dir))
+        assert names == sorted(["current", *others]), names
+        marks = [n for n in os.listdir(os.path.join(table_dir, "current"))
+                 if n.startswith("_batch_")]
+        assert marks == [f"_batch_{batch_id}"], marks
+    return check

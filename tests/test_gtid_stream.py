@@ -99,10 +99,10 @@ def test_full_redelivery_is_a_noop(spark, tmp_path):
     assert after == before
 
 
-def test_old_version_snapshots_are_gcd(spark, tmp_path):
-    """state_dir must stay O(2×state) on a long stream: after each
-    swap to current, only the newest v*/gtid_v* snapshot survives as
-    the crash-recovery copy."""
+def test_old_version_snapshots_are_gcd(spark, tmp_path, assert_only_current):
+    """state_dir must stay O(state) on a long stream: each batch commits
+    the state and then the GTID set once, and no v*/gtid_v* version
+    survives its promotion to current/gtid_current."""
     src, state, ckpt = (str(tmp_path / d) for d in ("feed", "st", "ck"))
     _drop(src, "b1.json", [
         {"pk": 1, "val": "a", "op": "insert", "seqno": 1,
@@ -112,11 +112,8 @@ def test_old_version_snapshots_are_gcd(spark, tmp_path):
         {"pk": 2, "val": "b", "op": "insert", "seqno": 2,
          "gtid": f"{U}:2"}])
     _run(spark, src, state, ckpt)
-    names = os.listdir(state)
-    vs = sorted(n for n in names if n.startswith("v") and n[1:].isdigit())
-    gvs = sorted(n for n in names if n.startswith("gtid_v")
-                 and n[len("gtid_v"):].isdigit())
-    assert vs == ["v1"] and gvs == ["gtid_v1"], names
+    assert_only_current(state, 1, others=["gtid_current"])
+    assert "_batch_1" in os.listdir(os.path.join(state, "gtid_current"))
     got = {r.pk: r.val for r in read_state(spark, state).collect()}
     assert got == {1: "a", 2: "b"}
 

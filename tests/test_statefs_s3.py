@@ -9,7 +9,9 @@ sinks call is exercised here against S3 semantics, not a POSIX mount.
 pyarrow→moto multipart UPLOADS are incompatible (moto returns an error
 body in a 200 CompleteMultipartUpload), so objects are seeded via boto3
 and the read/exists/delete side — what the sinks' replay guards and
-cleanup actually use — is verified through statefs.
+cleanup actually use — is verified through statefs, as is the state
+commit protocol's recovery: promote by copy + delete (S3 has no
+directory rename), the batch marker, and the replay no-op.
 """
 
 import io
@@ -102,3 +104,73 @@ def test_statefs_reads_parquet_over_s3(s3_env):
     got = pq.read_table(p, filesystem=f)
     assert got.num_rows == 2
     assert sorted(got.column("seqno").to_pylist()) == [10, 11]
+
+
+def _parquet_bytes(pks):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"pk": pks}), buf)
+    return buf.getvalue()
+
+
+def _keys(c, bucket, prefix):
+    """Object keys under ``prefix``, without the empty directory-marker
+    objects pyarrow leaves behind when it deletes a directory."""
+    out = c.list_objects_v2(Bucket=bucket, Prefix=prefix).get("Contents", [])
+    return sorted(o["Key"][len(prefix):] for o in out
+                  if not o["Key"].endswith("/"))
+
+
+def test_commit_recovery_over_s3(s3_env, spark):
+    """statefs.committed_batch / commit_state over s3a:// (no directory
+    rename): a complete version newer than current's marker is promoted
+    by copy + delete with its marker, a torn version (no _SUCCESS) is
+    removed, and a replayed batch writes nothing."""
+    import pyarrow.parquet as pq
+
+    from storagetapper_spark.sinks.files import _resolve_fs
+    from storagetapper_spark.statefs import commit_state, committed_batch
+
+    c = s3_env
+    c.create_bucket(Bucket="commitbkt")
+    # crash window: v2 was written completely, current still holds
+    # batch 1, and v3's write was torn
+    c.put_object(Bucket="commitbkt", Key="st/t/current/part-0.parquet",
+                 Body=_parquet_bytes([1]))
+    c.put_object(Bucket="commitbkt", Key="st/t/current/_batch_1", Body=b"")
+    c.put_object(Bucket="commitbkt", Key="st/t/v2/part-0.parquet",
+                 Body=_parquet_bytes([1, 2]))
+    c.put_object(Bucket="commitbkt", Key="st/t/v2/_SUCCESS", Body=b"")
+    c.put_object(Bucket="commitbkt", Key="st/t/v3/part-0.parquet",
+                 Body=_parquet_bytes([9]))
+
+    cur = "s3a://commitbkt/st/t/current"
+    assert committed_batch(cur) == 2
+    assert _keys(c, "commitbkt", "st/t/") == [
+        "current/_SUCCESS", "current/_batch_2", "current/part-0.parquet"]
+    f, p = _resolve_fs(cur)
+    got = pq.read_table(f"{p}/part-0.parquet", filesystem=f)
+    assert sorted(got.column("pk").to_pylist()) == [1, 2]
+
+    # replaying batch 2 is a no-op: no write is attempted (a Spark
+    # write to s3a:// would fail here — no hadoop-aws jar)
+    assert not commit_state(spark.range(1), cur, 2)
+    assert committed_batch(cur) == 2
+
+
+def test_missing_current_recovers_over_s3(s3_env):
+    """Crash after an object-store promote deleted current but before
+    the copy landed: the complete version becomes current."""
+    from storagetapper_spark.statefs import committed_batch
+
+    c = s3_env
+    c.create_bucket(Bucket="recoverbkt")
+    c.put_object(Bucket="recoverbkt", Key="st/gtid_v4/part-0.parquet",
+                 Body=_parquet_bytes([7]))
+    c.put_object(Bucket="recoverbkt", Key="st/gtid_v4/_SUCCESS", Body=b"")
+    assert committed_batch("s3a://recoverbkt/st/gtid_current") == 4
+    assert _keys(c, "recoverbkt", "st/") == [
+        "gtid_current/_SUCCESS", "gtid_current/_batch_4",
+        "gtid_current/part-0.parquet"]

@@ -34,7 +34,7 @@ def _drop(path, name, events):
             f.write(json.dumps(e) + "\n")
 
 
-def test_incremental_upsert(spark, tmp_path):
+def test_incremental_upsert(spark, tmp_path, assert_only_current):
     src = str(tmp_path / "feed")
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
@@ -71,12 +71,10 @@ def test_incremental_upsert(spark, tmp_path):
     got = {r.pk: r.val for r in read_state(spark, state).collect()}
     assert got == {1: "a2", 3: "c"}
 
-    # versioned-snapshot GC: after three micro-batches only the NEWEST
-    # v* dir survives next to current (state_dir stays O(2×state) on a
-    # long-running stream instead of one snapshot per batch)
-    vs = sorted(n for n in os.listdir(state)
-                if n.startswith("v") and n[1:].isdigit())
-    assert vs == ["v2"], vs
+    # one commit per micro-batch: after three batches state_dir holds
+    # only current, marked with the last batch id — no v* or staging
+    # directory survives (state_dir stays O(state) on a long stream)
+    assert_only_current(state, 2)
 
 
 EV_SCHEMA = T.StructType([

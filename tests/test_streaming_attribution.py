@@ -67,7 +67,7 @@ def test_users_absent_from_batch_keep_state(spark):
     assert math.isclose(cr["view"], 100.0, rel_tol=1e-9)
 
 
-def test_attribution_sink_end_to_end(spark, tmp_path):
+def test_attribution_sink_end_to_end(spark, tmp_path, assert_only_current):
     schema = T.StructType([
         T.StructField("user_id", T.LongType()),
         T.StructField("event_id", T.LongType()),
@@ -98,6 +98,8 @@ def test_attribution_sink_end_to_end(spark, tmp_path):
     cr = {r.channel: round(r.credit, 6)
           for r in read_credits(spark, state).collect()}
     assert cr == {"view": 45.0, "click": 45.0, "(direct)": 50.0}
+    for table in ("credits", "episodes"):
+        assert_only_current(os.path.join(state, table), 1)
 
 
 def test_attribution_sink_replay_is_idempotent(spark, tmp_path):

@@ -112,7 +112,8 @@ def test_cusum_sink_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert after == before, "replayed batch re-folded CUSUM state"
 
 
-def test_cusum_sink_surfaces_unmonitored_series(spark, tmp_path):
+def test_cusum_sink_surfaces_unmonitored_series(spark, tmp_path,
+                                                assert_only_current):
     """A series missing from the frozen baseline lands in the
     'unmonitored' side table instead of vanishing (ADVICE r3)."""
     import json
@@ -139,6 +140,8 @@ def test_cusum_sink_surfaces_unmonitored_series(spark, tmp_path):
     cusum_sink(stream, base, state, ckpt).awaitTermination(60)
     un = spark.read.parquet(os.path.join(state, "cusum", "unmonitored"))
     assert [r.event_type for r in un.collect()] == ["brand_new"]
+    assert_only_current(os.path.join(state, "cusum"), 0,
+                        others=["unmonitored"])
 
 
 def test_cusum_unmonitored_replay_does_not_duplicate(spark, tmp_path):
@@ -169,14 +172,15 @@ def test_cusum_unmonitored_replay_does_not_duplicate(spark, tmp_path):
     stream = spark.readStream.schema(schema).json(src)
     cusum_sink(stream, base, state, ckpt).awaitTermination(60)
     # simulate a crash AFTER the unmonitored write but BEFORE the state
-    # version committed: delete both the commit marker and v0, forcing a
-    # full re-execution of batch 0 (not just the replay-guard republish)
+    # committed: delete both the checkpoint's commit marker and the
+    # batch's state, forcing a full re-execution of batch 0 (not just
+    # the replay guard's skip)
     import shutil
     os.remove(os.path.join(ckpt, "commits", "0"))
     crc = os.path.join(ckpt, "commits", ".0.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    shutil.rmtree(os.path.join(state, "cusum", "v0"))
+    shutil.rmtree(os.path.join(state, "cusum", "current"))
     stream = spark.readStream.schema(schema).json(src)
     cusum_sink(stream, base, state, ckpt).awaitTermination(60)
     un = spark.read.parquet(os.path.join(state, "cusum", "unmonitored"))

@@ -57,7 +57,7 @@ def test_ks_from_state_matches_batch_query(spark, sf_dir):
     assert got == want
 
 
-def test_availablenow_drift_sink(spark, sf_dir, tmp_path):
+def test_availablenow_drift_sink(spark, sf_dir, tmp_path, assert_only_current):
     li = t(spark, sf_dir, "lineitem")
     src = str(tmp_path / "src")
     li.filter(F.year("l_shipdate") == 1996).write.mode("overwrite") \
@@ -75,3 +75,4 @@ def test_availablenow_drift_sink(spark, sf_dir, tmp_path):
         li.filter(F.year("l_shipdate") == 1996), _features(li))
         .collect())
     assert got == want
+    assert_only_current(str(tmp_path / "state" / "drift"), 0)

@@ -106,7 +106,7 @@ def test_keystate_tracks_latest_per_key(spark, sf_dir):
             assert live == 1 and math.isclose(lv, r.value, abs_tol=1e-9)
 
 
-def test_scd2_sink_end_to_end(spark, sf_dir, tmp_path):
+def test_scd2_sink_end_to_end(spark, sf_dir, tmp_path, assert_only_current):
     """File-source micro-batches → scd2_sink → history table (the
     streaming form; mirrors test_streaming.test_incremental_upsert)."""
     import json
@@ -153,6 +153,7 @@ def test_scd2_sink_end_to_end(spark, sf_dir, tmp_path):
     assert cur == {1: "a2"}
     versions = sorted((r.pk, r.valid_from, r.valid_to) for r in rows)
     assert versions == [(1, 1, 3), (1, 3, None), (2, 2, 4)]
+    assert_only_current(hist, 1)
 
 
 def test_one_feed_three_consistent_products(spark, sf_dir, tmp_path):
@@ -237,7 +238,7 @@ def test_one_feed_three_consistent_products(spark, sf_dir, tmp_path):
     assert folded[1] == (40.0, 1)
 
 
-def test_ivm_sink_end_to_end(spark, tmp_path):
+def test_ivm_sink_end_to_end(spark, tmp_path, assert_only_current):
     """File-source micro-batches → ivm_sink → maintained aggregate."""
     import json
     import os
@@ -284,3 +285,5 @@ def test_ivm_sink_end_to_end(spark, tmp_path):
     agg = {r.grp: (float(r.sum_value), r.n_live)
            for r in read_aggregate(spark, state).collect()}
     assert agg == {0: (15.0, 1), 1: (7.0, 1)}
+    for table in ("agg", "keystate"):
+        assert_only_current(os.path.join(state, table), 1)

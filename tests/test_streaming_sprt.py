@@ -68,7 +68,7 @@ def test_decision_freezes_after_crossing(spark, sf_dir):
             assert r.s + r.f > r.n_at_decision  # counters kept moving
 
 
-def test_availablenow_sink_run(spark, sf_dir, tmp_path):
+def test_availablenow_sink_run(spark, sf_dir, tmp_path, assert_only_current):
     src = str(tmp_path / "src")
     events_t(spark, sf_dir).write.mode("overwrite").parquet(src)
     stream = (spark.readStream.schema(spark.read.parquet(src).schema)
@@ -80,3 +80,4 @@ def test_availablenow_sink_run(spark, sf_dir, tmp_path):
     ev = events_t(spark, sf_dir)
     want = _key(fold_sprt_batch(None, trials_from_events(ev)).collect())
     assert got == want
+    assert_only_current(str(tmp_path / "state" / "sprt"), 0)

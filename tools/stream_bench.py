@@ -16,6 +16,10 @@ untimed; the timed region is the drain itself.  Feeds are carved from
 the deterministic sf fixtures, split into 3 micro-batches by key so
 cross-batch state folding is actually exercised.
 
+Each row's ``batches`` is the length of its query's own
+``recentProgress`` after the drain; the listener's snapshot lags the
+asynchronous listener bus.
+
 Usage: python tools/stream_bench.py [--sf SF_DIR] [module ...]
 """
 
@@ -81,7 +85,8 @@ def _foreach_drain(stream, ckpt: str, sink_fn):
 # ---------------------------------------------------------------------
 # adapters: name -> fn(spark, sf, work) -> (rows, state_dir_for_du)
 # Each prepares its feed untimed, then returns a zero-arg `run`
-# closure; the harness times run() only.
+# closure that returns the streaming query it drained (None for the
+# batch-API modules); the harness times run() only.
 # ---------------------------------------------------------------------
 
 def _events(spark, sf):
@@ -122,6 +127,7 @@ def ad_pipeline(spark, sf, work):
                                     os.path.join(work, "ckpt"),
                                     pk_cols=["pk"])
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -134,6 +140,7 @@ def ad_history(spark, sf, work):
         q = scd2_sink(_stream(spark, feed), os.path.join(work, "hist"),
                       os.path.join(work, "ckpt"), pk_cols=["pk"])
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "hist")
 
 
@@ -153,6 +160,7 @@ def ad_stateful(spark, sf, work):
              .option("checkpointLocation", os.path.join(work, "ckpt"))
              .trigger(availableNow=True).start())
         q.awaitTermination(600)
+        return q
     return rows, run, out
 
 
@@ -188,6 +196,7 @@ def ad_evolution(spark, sf, work):
                                  os.path.join(work, "ckpt"),
                                  pk_cols=["pk"])
         q.awaitTermination(600)
+        return q
     return len(cdc), run, os.path.join(work, "state")
 
 
@@ -239,8 +248,8 @@ def ad_absorption(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       lambda b, i: M.ingest_batch(spark, b, i, state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              lambda b, i: M.ingest_batch(spark, b, i, state))
     return rows, run, state
 
 
@@ -252,8 +261,8 @@ def ad_agreement(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       lambda b, i: M.ingest_batch(spark, b, i, state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              lambda b, i: M.ingest_batch(spark, b, i, state))
     return rows, run, state
 
 
@@ -265,8 +274,8 @@ def ad_lifecycle(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       lambda b, i: M.ingest_batch(spark, b, i, state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              lambda b, i: M.ingest_batch(spark, b, i, state))
     return rows, run, state
 
 
@@ -277,8 +286,8 @@ def ad_bloom(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       bloom_sink(state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              bloom_sink(state))
     return rows, run, state
 
 
@@ -289,8 +298,8 @@ def ad_cms(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       cms_sink(state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              cms_sink(state))
     return rows, run, state
 
 
@@ -302,8 +311,8 @@ def ad_conformal(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       lambda b, i: M.ingest_batch(spark, b, i, state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              lambda b, i: M.ingest_batch(spark, b, i, state))
     return rows, run, state
 
 
@@ -317,6 +326,7 @@ def ad_curation(spark, sf, work):
         q, _stats = run_curation_stream(spark, _stream(spark, feed),
                                         root, os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, root
 
 
@@ -327,8 +337,8 @@ def ad_importance(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
-                       lambda b, i: M.ingest_batch(spark, b, i, state))
+        return _foreach_drain(_stream(spark, feed), os.path.join(work, "ckpt"),
+                              lambda b, i: M.ingest_batch(spark, b, i, state))
     return rows, run, state
 
 
@@ -339,7 +349,7 @@ def ad_reservoir(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(
+        return _foreach_drain(
             _stream(spark, feed), os.path.join(work, "ckpt"),
             lambda b, i: M.ingest_batch(spark, b, i, state,
                                         strata_cols=["lang"], k=64))
@@ -355,7 +365,7 @@ def ad_target_encoding(spark, sf, work):
     state = os.path.join(work, "state")
 
     def run():
-        _foreach_drain(
+        return _foreach_drain(
             _stream(spark, feed), os.path.join(work, "ckpt"),
             lambda b, i: M.ingest_batch(spark, b, i, state,
                                         cat_col="l_returnflag",
@@ -373,6 +383,7 @@ def ad_attribution(spark, sf, work):
                              os.path.join(work, "state"),
                              os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -392,6 +403,7 @@ def ad_cusum(spark, sf, work):
                        os.path.join(work, "state"),
                        os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -414,6 +426,7 @@ def ad_drift(spark, sf, work):
                        os.path.join(work, "state"),
                        os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -427,6 +440,7 @@ def ad_sketches(spark, sf, work):
                         os.path.join(work, "state"),
                         os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -439,6 +453,7 @@ def ad_sprt(spark, sf, work):
         q = sprt_sink(_stream(spark, feed), os.path.join(work, "state"),
                       os.path.join(work, "ckpt"))
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -455,6 +470,7 @@ def ad_ann_index(spark, sf, work):
                             os.path.join(work, "idx"),
                             os.path.join(work, "ckpt"), cents)
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "idx")
 
 
@@ -472,6 +488,7 @@ def ad_semantic(spark, sf, work):
                                 os.path.join(work, "ckpt"), cents,
                                 threshold=0.92)
         q.awaitTermination(600)
+        return q
     return rows, run, os.path.join(work, "state")
 
 
@@ -525,16 +542,19 @@ def main() -> int:
             rows, run, state_dir = ADAPTERS[name](spark, args.sf, work)
             seen = set(rec.progress)
             t0 = time.time()
-            run()
+            q = run()
             wall = time.time() - t0
             entry = {"rows": rows, "wall_sec": round(wall, 3),
                      "rows_per_sec": round(rows / wall) if wall else None,
                      "state_bytes": _du(state_dir)}
+            if q is not None:
+                # the query's own progress log is complete once it has
+                # stopped; the listener may not have heard of it yet
+                entry["batches"] = len(q.recentProgress)
             # monitor.py telemetry for the query this adapter started
             for qid, p in rec.progress.items():
                 if qid in seen:
                     continue
-                entry["batches"] = p.get("batches")
                 for k in ("state_rows", "state_memory_bytes",
                           "conflation_ratio"):
                     if k in p:
