@@ -105,11 +105,10 @@ def run_snapshot_job(spark: SparkSession, registry: Registry,
     # json → newline text (reference file pipe shape); binary codecs →
     # parquet binary `value` column (the splittable Spark container for
     # opaque record bytes — each cell holds the exact codec wire bytes)
-    manifest = write_files(encoded, out_dir,
-                           fmt="text" if codec.name == "json" else "parquet",
-                           compression=compression,
-                           max_records_per_file=max_records_per_file,
-                           write_manifest=False)
+    fmt = "text" if codec.name == "json" else "parquet"
+    write_files(encoded, out_dir, fmt=fmt, compression=compression,
+                max_records_per_file=max_records_per_file,
+                write_manifest=False)
     # Schema precedes consumability (streamer/snapshot.go:231-234 pushes
     # the schema message before the first row): the _SCHEMA doc lands
     # before _DONE, so a consumer gated on the manifest always finds it.
@@ -118,7 +117,7 @@ def run_snapshot_job(spark: SparkSession, registry: Registry,
             f.write(schema_doc)
     from storagetapper_spark.sinks.files import _write_manifest_distributed
 
-    manifest = _write_manifest_distributed(spark, out_dir)
+    manifest = _write_manifest_distributed(spark, out_dir, fmt)
     registry.clear_need_snapshot(reg.key)
     return manifest
 

@@ -8,9 +8,11 @@ Reference behavior re-expressed Spark-first:
   - _DONE manifest with sha256 + record count per file
     (pipe/file.go:717-758)                            → post-write manifest job
 
-The manifest step lists files and hashes them driver-side; at 100 TB the
-same step runs as a distributed job over the file list (binaryFile source)
-— kept driver-side here because manifests are per-output, not per-row.
+The manifest is one Spark action that runs entirely in the JVM
+(``_file_stats``): a binaryFile scan hashes every file, and the writer's
+own format reader counts its records.  Only the small per-file manifest
+reaches the driver.  ``_write_manifest`` is the driver-side form of the
+same manifest, kept as the reference the tests compare against.
 """
 
 from __future__ import annotations
@@ -64,7 +66,7 @@ def write_files(df: DataFrame, path: str, fmt: str = "text",
     else:
         raise ValueError(f"unsupported format: {fmt}")
     if write_manifest:
-        return _write_manifest_distributed(df.sparkSession, path)
+        return _write_manifest_distributed(df.sparkSession, path, fmt)
     return {}
 
 
@@ -75,62 +77,61 @@ def _count_records(fp: str) -> int:
     if fp.endswith(".parquet"):
         import pyarrow.parquet as pq
         return pq.read_metadata(fp).num_rows
+    if fp.endswith(".orc"):
+        import pyarrow.orc as po
+        return po.ORCFile(fp).nrows
     with open(fp, "rb") as f:
         return sum(1 for _ in f)
 
 
-def _write_manifest_distributed(spark, path: str) -> dict:
-    """The _DONE marker computed as a Spark job: binaryFile source →
-    per-file sha256/bytes/record-count in executors.  The driver only
-    assembles the (small) manifest dict — at 100 TB the hashing work is
-    the same order as the write itself and must not serialize through
-    one process (the driver-side form below remains as a no-session
-    fallback)."""
+def _file_stats(spark, path: str, fmt: str | None = None) -> dict:
+    """{relative path: {"sha256", "bytes"[, "records"]}} for every data
+    file under ``path``, computed in executors by one action with no
+    Python worker.  A binaryFile scan gives sha256 and length.  With
+    ``fmt`` (the format the files were written in, as ``write_files``
+    takes it), that format's reader counts each file's records: lines for
+    text, json and csv, rows for orc and parquet.  Both scans key files
+    by ``_metadata.file_path``, which is URL-encoded in both (binaryFile's
+    ``path`` is not); a file with no records has no count row, so the
+    left join reads 0."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    out_schema = T.StructType([
-        T.StructField("rel", T.StringType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("bytes", T.LongType()),
-        T.StructField("records", T.LongType()),
-    ])
-
-    def stat_files(batches):
-        import gzip as _gzip
-        import io
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                fp = p[len("file:"):] if p.startswith("file:") else p
-                base = os.path.basename(fp)
-                if base.startswith(("_", ".")):
-                    continue
-                data = bytes(content)
-                if fp.endswith(".gz"):
-                    n = sum(1 for _ in _gzip.GzipFile(fileobj=io.BytesIO(data)))
-                elif fp.endswith(".parquet"):
-                    import pyarrow.parquet as pq
-                    n = pq.read_metadata(io.BytesIO(data)).num_rows
-                elif fp.endswith(".orc"):
-                    import pyarrow.orc as po
-                    n = po.ORCFile(io.BytesIO(data)).nrows
-                else:
-                    n = data.count(b"\n") + (1 if data and not data.endswith(b"\n") else 0)
-                rows.append((os.path.relpath(fp, path),
-                             hashlib.sha256(data).hexdigest(), len(data), n))
-            yield pd.DataFrame(rows, columns=["rel", "sha256", "bytes", "records"])
-
+    key = F.col("_metadata.file_path").alias("key")
     stats = (spark.read.format("binaryFile")
              .option("recursiveFileLookup", "true").load(path)
-             .select("path", "content")
-             .mapInPandas(stat_files, out_schema)
-             .collect())
-    files = {r.rel: {"sha256": r.sha256, "bytes": r.bytes, "records": r.records}
-             for r in stats}
+             .select(key, "path", F.sha2("content", 256).alias("sha256"),
+                     F.col("length").alias("bytes")))
+    if fmt is not None:
+        # Only _metadata is read, so an empty schema spares orc and
+        # parquet the footer-reading job of schema inference.  lineSep:
+        # text splits on \n only, as _count_records does.
+        reader = fmt if fmt in ("orc", "parquet") else "text"
+        counts = (spark.read.format(reader)
+                  .schema(T.StructType())
+                  .option("recursiveFileLookup", "true")
+                  .option("lineSep", "\n")
+                  .load(path).select(key).groupBy("key")
+                  .agg(F.count(F.lit(1)).alias("records")))
+        stats = (stats.join(counts, "key", "left")
+                 .withColumn("records", F.coalesce("records", F.lit(0))))
+    out = {}
+    for r in stats.drop("key").collect():
+        meta = r.asDict()
+        fp = meta.pop("path")
+        out[os.path.relpath(fp[len("file:"):] if fp.startswith("file:")
+                            else fp, path)] = meta
+    return out
+
+
+def _write_manifest_distributed(spark, path: str, fmt: str) -> dict:
+    """The _DONE marker (EndOfStreamMark analog, pipe/file.go:717-758),
+    computed by ``_file_stats`` in executors: at 100 TB the hashing work
+    is the same order as the write itself and must not serialize through
+    the driver.  ``fmt`` is the format ``write_files`` wrote."""
+    files = _file_stats(spark, path, fmt)
     manifest = {"files": files,
-                "total_records": int(sum(r.records for r in stats)),
+                "total_records": sum(m["records"] for m in files.values()),
                 "created_at": int(time.time())}
     with open(os.path.join(path, "_DONE"), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
@@ -138,8 +139,8 @@ def _write_manifest_distributed(spark, path: str) -> dict:
 
 
 def _write_manifest(path: str) -> dict:
-    """The _DONE marker (EndOfStreamMark analog, pipe/file.go:717-758):
-    per-file sha256, byte size and record count."""
+    """Driver-side reference form of ``_write_manifest_distributed``:
+    per-file sha256, byte size and record count, read file by file."""
     files = {}
     total = 0
     for fp in sorted(glob.glob(os.path.join(path, "**", "*"), recursive=True)):
@@ -292,52 +293,21 @@ def decrypt_file(fp: str, key: bytes) -> bytes:
 def verify_manifest(spark, path: str) -> dict:
     """Consumer-side integrity check (the reference consumer validates
     the EndOfStreamMark before trusting a file batch): recompute every
-    file's sha256/bytes/records IN EXECUTORS and diff against _DONE.
+    file's sha256 and size in executors and diff against _DONE.
 
     Returns {"ok": bool, "checked": n, "mismatched": [rel...],
-    "missing": [rel...], "extra": [rel...]}.  Scale: the re-hash is the
-    same distributed binaryFile job the manifest writer ran — no
-    driver-side file loop.
+    "missing": [rel...], "extra": [rel...]}.  The re-hash is the
+    manifest writer's own ``_file_stats`` scan, without record counts.
 
     On a local FS Hadoop's own .crc sidecars may fail the read before
     this check runs — equally loud corruption detection; this function
     is the path for stores without sidecars (s3a, raw copies)."""
-    manifest = read_manifest(path)
-    expected = manifest["files"]
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("rel", T.StringType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("bytes", T.LongType()),
-    ])
-
-    def stat_files(batches):
-        import io  # noqa: F401  (parity with writer; hashing only here)
-
-        import pandas as pd
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                fp = p[len("file:"):] if p.startswith("file:") else p
-                base = os.path.basename(fp)
-                if base.startswith(("_", ".")):
-                    continue
-                data = bytes(content)
-                rows.append((os.path.relpath(fp, path),
-                             hashlib.sha256(data).hexdigest(), len(data)))
-            yield pd.DataFrame(rows, columns=["rel", "sha256", "bytes"])
-
-    actual = {r.rel: (r.sha256, r.bytes) for r in
-              (spark.read.format("binaryFile")
-               .option("recursiveFileLookup", "true").load(path)
-               .select("path", "content")
-               .mapInPandas(stat_files, out_schema).collect())}
+    expected = read_manifest(path)["files"]
+    actual = _file_stats(spark, path)
     mismatched = [rel for rel, meta in expected.items()
                   if rel in actual
-                  and (actual[rel][0] != meta["sha256"]
-                       or actual[rel][1] != meta["bytes"])]
+                  and (actual[rel]["sha256"] != meta["sha256"]
+                       or actual[rel]["bytes"] != meta["bytes"])]
     missing = [rel for rel in expected if rel not in actual]
     extra = [rel for rel in actual if rel not in expected]
     return {"ok": not (mismatched or missing or extra),

@@ -6,8 +6,11 @@ import hashlib
 import json
 import os
 
+import pytest
+
 from storagetapper_spark.functions.json_codec import encode_json
 from storagetapper_spark.sinks.files import (
+    _write_manifest,
     decrypt_file,
     encrypt_files,
     read_manifest,
@@ -186,3 +189,54 @@ def test_write_csv_orc_roundtrip(spark, tmp_path):
     assert sorted(tuple(r) for r in back_orc.collect()) == \
         sorted(tuple(r) for r in df.collect())
     assert m2["total_records"] == 50
+
+
+def _typed(spark, n=60):
+    return spark.range(n).selectExpr("id", "id * 2 as v",
+                                     "concat('k', id) as name")
+
+
+# case → (frame builder, write_files keywords); one case per write_files
+# format plus rotation, partition values that need escaping, zero rows
+_MANIFEST_CASES = {
+    "text_gzip": (lambda s: _encoded(s, 60),
+                  {"fmt": "text", "compression": "gzip"}),
+    # a bare \r inside a value is not a record separator; empty lines count
+    "text_none": (lambda s: s.range(40).selectExpr(
+        "if(id % 7 = 3, '', concat('v', id, if(id % 5 = 0, '\\r', ''), 'x'))"
+        " as value"),
+        {"fmt": "text", "compression": None}),
+    "json": (_typed, {"fmt": "json", "compression": None}),
+    "csv_gzip": (_typed, {"fmt": "csv", "compression": "gzip"}),
+    "orc": (_typed, {"fmt": "orc", "compression": "zlib"}),
+    "parquet": (_typed, {"fmt": "parquet", "compression": "snappy"}),
+    "rotation": (lambda s: _encoded(s, 60).coalesce(2),
+                 {"fmt": "text", "compression": "gzip",
+                  "max_records_per_file": 7}),
+    "partition_by": (lambda s: s.range(30).selectExpr(
+        "if(id % 3 = 0, 'a b%', 'log') as stream",
+        "cast(id as string) as value"),
+        {"fmt": "text", "compression": None, "partition_by": ["stream"]}),
+    "zero_rows_text": (lambda s: _encoded(s, 0),
+                       {"fmt": "text", "compression": "gzip"}),
+    "zero_rows_parquet": (lambda s: _typed(s, 0), {"fmt": "parquet"}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MANIFEST_CASES))
+def test_manifest_matches_driver_side_reference(spark, tmp_path, case):
+    """The executor-side _DONE manifest equals the driver-side reference
+    (_write_manifest) file by file: sha256, bytes and record count."""
+    build, kw = _MANIFEST_CASES[case]
+    out = str(tmp_path / case)
+    got = write_files(build(spark), out, **kw)
+    ref = _write_manifest(out)
+    assert got["files"] and got["files"] == ref["files"]
+    assert got["total_records"] == ref["total_records"]
+    if case == "rotation":
+        assert max(m["records"] for m in got["files"].values()) == 7
+    if case == "partition_by":
+        assert any(rel.startswith("stream=a b%25" + os.sep)
+                   for rel in got["files"])
+    if case.startswith("zero_rows"):
+        assert got["total_records"] == 0

@@ -11,8 +11,12 @@ Usage:
   python tools/profile_query.py [--sf SF_DIR] [--reps N]
          [--explain-dir DIR] [--suffix before|after] name [name ...]
 
-Prints one line per query: `name  best_sec  (rep times)` and, with
---explain-dir, writes DIR/<name>_<suffix>.txt.
+Prints one line per query: `name  best_sec  (rep times)  compiles [..]
+jit_s [..]` and, with --explain-dir, writes DIR/<name>_<suffix>.txt.
+The two lists hold one entry per rep, the untimed warm-up first: the
+Janino compiles (codegen cache misses) and the JVM's JIT compile seconds
+during that rep (session.codegen_counters).  A steady-state rep should
+show 0 compiles.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from storagetapper_spark.plans.registry import QUERIES
-    from storagetapper_spark.session import get_spark
+    from storagetapper_spark.session import codegen_counters, get_spark
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -53,18 +57,22 @@ def main() -> int:
                                    f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
             spark.catalog.clearCache()
-        times = []
+        times, compiles, jit_s = [], [], []
         for rep in range(args.reps + 1):  # rep 0 is the untimed warm-up
             spark.sparkContext.setJobDescription(f"profile:{name}#{rep}")
+            c0, j0 = codegen_counters(spark)
             t0 = time.time()
             df = fn(spark, args.sf)
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
+            c1, j1 = codegen_counters(spark)
+            compiles.append(c1 - c0)
+            jit_s.append(round(j1 - j0, 2))
             spark.catalog.clearCache()
             if rep > 0:
                 times.append(dt)
-        print(f"{name}  {min(times):.3f}  ({', '.join(f'{t:.3f}' for t in times)})",
-              flush=True)
+        print(f"{name}  {min(times):.3f}  ({', '.join(f'{t:.3f}' for t in times)})"
+              f"  compiles {compiles}  jit_s {jit_s}", flush=True)
     spark.stop()
     return 0
 
