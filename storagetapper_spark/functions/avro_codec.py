@@ -11,17 +11,14 @@ Reference semantics implemented Spark-side:
   - Avro output schema with [null, T] unions (types/avro.go:45-62) from
     schema.mysql_types.struct_to_avro_schema
 
-Binary encoding: spark-avro's ``to_avro`` when the package jar is on
-the classpath (preferred, JVM-side), else the self-contained Avro
-binary codec below (written against the public Avro 1.11 spec: zigzag
+Binary encoding: the self-contained Avro binary codec below (written
+against the public Avro 1.11 spec: zigzag
 varints, little-endian floats, length-prefixed bytes, union index
 prefix) exposed as Arrow pandas UDFs — byte-compatible with any Avro
 reader given the same schema.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,21 +49,6 @@ def avro_prepare(df: DataFrame, pk_cols: list[str],
         F.col(seqno_col).cast("long").alias("ref_key"),
         is_del.alias("is_deleted"),
     )
-
-
-def to_avro_binary(df: DataFrame, avro_schema: dict,
-                   struct_cols: list[str] | None = None) -> DataFrame:
-    """Binary-encode via spark-avro when available (requires the
-    org.apache.spark:spark-avro jar, not bundled here)."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "spark-avro package not on the classpath; add "
-            "org.apache.spark:spark-avro_2.13:<spark-version> via "
-            "spark.jars.packages") from e
-    cols = struct_cols or df.columns
-    return df.select(to_avro(F.struct(*cols), json.dumps(avro_schema)).alias("value"))
 
 
 # --- self-contained Avro binary codec (public Avro spec) ----------------

@@ -94,7 +94,7 @@ def shingle_grams(df: DataFrame, bucket_cols: list[str],
     :func:`ngram_jaccard_pairs` (r11, guide §1.2): one
     (bucket_cols…, id_col, _g) row per overlapping word n-gram
     OCCURRENCE (duplicates kept — a min-hash ignores them and the
-    Jaccard side applies its own ``distinct()``), with sub-n-word docs
+    Jaccard side's ``collect_set`` drops them), with sub-n-word docs
     contributing their whole normalized text as the single shingle.
 
     Split out so a query that needs BOTH the sketch and the exact
@@ -119,6 +119,19 @@ def shingle_grams(df: DataFrame, bucket_cols: list[str],
     shorts = (df.select(*keep, norm.alias("_g"))
                 .filter(F.size(F.split("_g", " ")) < shingle_n))
     return grams.unionByName(shorts)
+
+
+def _check_grams(grams: DataFrame, id_col: str,
+                 bucket_cols: list[str] = ()) -> None:
+    """Reject a ``grams=`` table that lacks a column its consumer
+    reads: a wrong table must fail here, not yield silently wrong
+    similarity numbers."""
+    missing = [c for c in (id_col, "_g", *bucket_cols)
+               if c not in grams.columns]
+    if missing:
+        raise ValueError(f"grams lacks column(s) {missing}; build it "
+                         f"with shingle_grams(df, bucket_cols, text_col, "
+                         f"id_col, shingle_n)")
 
 
 def minhash_signature(df: DataFrame, text_col: str = "text",
@@ -148,10 +161,15 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     Output: (id_col, mh_0 … mh_{k-1}).
 
     ``grams``: optionally a pre-built :func:`shingle_grams` table
-    (must carry ``id_col`` and ``_g``; extra bucket columns are
-    projected away) so a caller running several shingle consumers can
-    share one tokenize pass.
+    (must carry ``id_col`` and ``_g`` — a missing column raises
+    ``ValueError``; extra bucket columns are projected away) so a
+    caller running several shingle consumers can share one tokenize
+    pass.  ``df``, ``text_col`` and ``shingle_n`` are then unused:
+    ``grams`` must have been built with the ``shingle_n`` the caller
+    means.
     """
+    if grams is not None:
+        _check_grams(grams, id_col)
     # small fixture files arrive as one partition; shingle_grams fans
     # the regex/explode work out to cluster width (no-op at scale where
     # the scan is already many-partitioned — AQE coalesces)
@@ -288,6 +306,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     with million-member duplicate buckets from emitting 10^12 pairs;
     the emitted jaccard_est is then the similarity to the hub, not to
     every sibling.
+
+    ``grams``: as in :func:`minhash_signature` — must carry ``id_col``
+    and ``_g`` (else ``ValueError``) and come from the same
+    ``shingle_n``.
     """
     assert num_hashes % bands == 0
     # Materialize signatures before anything fans out over them: a
@@ -352,55 +374,52 @@ def ngram_jaccard_pairs(df: DataFrame, bucket_cols: list[str],
     (blocking on ``bucket_cols`` keeps this quadratic-in-bucket, linear
     overall — the standard blocked-dedup shape).
 
-    Implemented set-theoretically: explode distinct shingles, self-join
-    on (bucket, shingle) to count the intersection, join per-doc set
-    sizes for the union.  No array comparisons in the join — only
-    hashable narrow keys, so it's a plain shuffle join at scale.
+    Implemented set-theoretically: one doc-id set per (bucket,
+    shingle), an in-map pair explode counts the intersection, per-doc
+    set sizes give the union.  Only hashable narrow keys are shuffled,
+    so it's a plain shuffle aggregate at scale.
 
     Shingling is the same JVM-side lookahead-regex pass as
     ``minhash_signature`` (zero Python in the row path); Jaccard needs
-    SET semantics, so the exploded grams go through one ``distinct()``
-    (narrow rows: bucket keys + id + gram).  Bucket columns are plain
-    attributes, safe to carry through the generator — only computed
-    EXPRESSIONS get re-evaluated per exploded row.
+    SET semantics, which the per-(bucket, shingle) ``collect_set``
+    supplies.  Bucket columns are plain attributes, safe to carry
+    through the generator — only computed EXPRESSIONS get re-evaluated
+    per exploded row.
 
     ``grams``: optionally a pre-built :func:`shingle_grams` table
-    carrying the same ``bucket_cols`` — shares one tokenize pass with
-    other shingle consumers (r11, dedup_minhash_calibration).
+    carrying ``id_col``, ``_g`` and the same ``bucket_cols`` (a missing
+    column raises ``ValueError``) — shares one tokenize pass with other
+    shingle consumers (r11, dedup_minhash_calibration).  ``df``,
+    ``text_col`` and ``shingle_n`` are then unused: ``grams`` must have
+    been built with the ``shingle_n`` the caller means.
     """
     if grams is None:
         grams = shingle_grams(df, bucket_cols, text_col, id_col, shingle_n)
-    sh = (grams.select(*[F.col(c) for c in bucket_cols], F.col(id_col),
-                       F.col("_g").alias("sh"))
-          .distinct().persist())
-    # eager materialize: the self-join below reads this from both sides;
-    # an unmaterialized persist would race and compute the lineage twice
-    sh.count()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
+    else:
+        _check_grams(grams, id_col, bucket_cols)
     # r10 (guide §2.4): basket-array intersection build — ONE shuffle of
     # the gram table by (bucket, sh) + an in-map i<j combination explode
-    # replaces the two-sided (bucket, sh) self-join.  collect_set over
-    # the already-distinct gram rows lists each (bucket, sh)'s doc ids
-    # exactly once; sort_array + slice keeps the strict id_a < id_b
-    # orientation, so the per-pair shared-gram count is identical.
-    baskets = (sh.groupBy(*bucket_cols, "sh")
+    # replaces the two-sided (bucket, sh) self-join.  collect_set lists
+    # each (bucket, sh)'s doc ids exactly once (the SET semantics);
+    # sort_array + slice keeps the strict id_a < id_b orientation, so
+    # the per-pair shared-gram count is identical.
+    baskets = (grams.groupBy(*bucket_cols, F.col("_g").alias("sh"))
                .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
     # a pair lives in exactly ONE bucket (each doc has one bucket row),
     # so grouping by the bucket keys too leaves n_inter unchanged and
     # lets keep_bucket callers feed connected_components_blocked.
-    # r11: the explode is size-guarded — a boilerplate shingle shared
-    # by thousands of bucket-mates decomposes into redistributed
-    # chunk-pair units instead of an O(s²) single-task explode (exact
-    # same pair multiset — operators/skew.guarded_pair_explode).
+    # The explode is size-guarded and pins baskets
+    # (operators/skew.basket_units); sz reads the pinned baskets: a doc
+    # sits in one basket per distinct (bucket, gram), so its basket
+    # count is its distinct-gram count.
     from storagetapper_spark.operators.skew import guarded_pair_explode
 
-    # split=True (r11 session 3): sh is persisted AND counted, so the
-    # two size filters read a reused shuffle — small baskets explode in
-    # place with no spread exchange, only > cap stragglers ride it.
     inter = (guarded_pair_explode(baskets, "ids", "id_a", "id_b",
-                                  keep=tuple(bucket_cols), split=True)
+                                  keep=tuple(bucket_cols))
              .groupBy(*bucket_cols, "id_a", "id_b")
              .agg(F.count(F.lit(1)).alias("n_inter")))
+    sizes = (baskets.select(F.explode("ids").alias(id_col))
+             .groupBy(id_col).agg(F.count(F.lit(1)).alias("sz")))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     jac = (F.col("n_inter") / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")))
@@ -574,10 +593,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return votes.select(F.col(id_col), fp.alias("simhash"))
 
 
-def _bit_vote(mask: int):
-    return lambda acc, h: acc + F.when(h.bitwiseAND(F.lit(mask)) != 0, 1).otherwise(-1)
-
-
 def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
                        fp_col: str = "simhash", max_hamming: int = 3,
                        blocks: int = 4) -> DataFrame:
@@ -620,29 +635,20 @@ def ngram_containment_pairs(df: DataFrame, bucket_cols: list[str],
     containment 1.0).  Same blocked posting-list shape (and cost) as
     ``ngram_jaccard_pairs``; emits both directional containments plus
     the max."""
-    sh = (shingle_grams(df, bucket_cols, text_col, id_col, shingle_n)
-          .select(*[F.col(c) for c in bucket_cols], F.col(id_col),
-                  F.col("_g").alias("sh"))
-          .distinct().persist())
-    sh.count()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    # r10 (guide §2.4): the same basket-array intersection build as
-    # ngram_jaccard_pairs — ONE shuffle of the gram table by (bucket, sh)
-    # + an in-map strict i<j combination explode replaces the two-sided
-    # (bucket, sh) self-join.  collect_set over the already-distinct gram
-    # rows lists each (bucket, sh)'s doc ids exactly once; sort_array +
-    # slice keeps the id_a < id_b orientation, so n_inter is identical.
-    baskets = (sh.groupBy(*bucket_cols, "sh")
+    # the same basket-array intersection build as ngram_jaccard_pairs
+    # (collect_set == per-(bucket, gram) distinct doc ids; sort_array +
+    # slice keeps the id_a < id_b orientation, so n_inter is identical);
+    # the guarded explode pins baskets and sz reads them.
+    baskets = (shingle_grams(df, bucket_cols, text_col, id_col, shingle_n)
+               .groupBy(*bucket_cols, F.col("_g").alias("sh"))
                .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
-    # r11: size-guarded explode (hot-shingle chunk spread, exact same
-    # pair multiset — operators/skew.guarded_pair_explode).
     from storagetapper_spark.operators.skew import guarded_pair_explode
 
-    # split=True: same persisted-gram argument as ngram_jaccard_pairs.
-    inter = (guarded_pair_explode(baskets, "ids", "id_a", "id_b",
-                                  split=True)
+    inter = (guarded_pair_explode(baskets, "ids", "id_a", "id_b")
              .groupBy("id_a", "id_b")
              .agg(F.count(F.lit(1)).alias("n_inter")))
+    sizes = (baskets.select(F.explode("ids").alias(id_col))
+             .groupBy(id_col).agg(F.count(F.lit(1)).alias("sz")))
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     return (

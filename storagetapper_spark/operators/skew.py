@@ -12,34 +12,36 @@ whether a plan survives a 1000-executor, 100 TB run.
   recurring join bucketed+sorted on the key so the join is co-located
   (no Exchange in the plan) — the Spark analog of the reference's "one
   Kafka partition per key range" layout.
+- ``guarded_pair_explode`` / ``basket_units``: the one pair-guard rule
+  for basket-array pair builds — pin the basket table, read its largest
+  basket, explode in place or spread hot baskets' chunk-pair units.
 """
 
 from __future__ import annotations
 
-import os
+import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Guard thresholds for the basket-array pair builds (r11, VERDICT r10
-# #4 / guide §2.2+§2.5): a basket of s members explodes into s(s-1)/2
-# pair rows INSIDE one task, so an unbounded hot key (one giant order,
-# one boilerplate shingle shared by thousands of docs) concentrates
-# quadratic work — and O(s²) output rows — on a single executor.
-# Baskets with size ≤ _PAIR_CAP keep the r10 single-task explode
-# (cap²/2 ≈ 524k pair rows ≈ a few MB — trivially in-task); bigger
-# baskets are decomposed into chunk-pair work units of ≤ _PAIR_CHUNK²
-# pairs each and REDISTRIBUTED across the cluster before the explode,
-# so no task ever materializes more than chunk² ≈ 262k pairs no matter
-# how hot the key.  The linear collect_set array itself stays bounded
-# by max-basket-size × element width (a 10⁶-member basket is an 8 MB
-# array row — the same rows the old self-join also had to hold);
-# the quadratic stage is the hazard this guards.  Production tuning:
-# keep cap²·row_width under a small fraction of task memory and chunk
-# ≈ cap/2; both are env-overridable so a cluster profile can size them
-# without a code change.
-_PAIR_CAP = int(os.environ.get("SPARK_GRAFT_PAIR_CAP", "1024"))
-_PAIR_CHUNK = int(os.environ.get("SPARK_GRAFT_PAIR_CHUNK", "512"))
+_log = logging.getLogger(__name__)
+
+# Guard thresholds for the basket-array pair builds: a basket of s
+# members explodes into s(s-1)/2 pair rows INSIDE one task, so an
+# unbounded hot key (one giant order, one boilerplate shingle shared by
+# thousands of docs) concentrates quadratic work — and O(s²) output
+# rows — on a single executor.  When no basket exceeds _PAIR_CAP
+# (cap²/2 ≈ 524k pair rows ≈ a few MB — trivially in-task) every basket
+# explodes in place; otherwise baskets are decomposed into chunk-pair
+# work units of ≤ _PAIR_CHUNK² pairs each and REDISTRIBUTED across the
+# cluster before the explode, so no task ever materializes more than
+# chunk² ≈ 262k pairs no matter how hot the key.  The linear
+# collect_set array itself stays bounded by max-basket-size × element
+# width (a 10⁶-member basket is an 8 MB array row); the quadratic stage
+# is the hazard this guards.  Sizing rule: keep cap²·row_width under a
+# small fraction of task memory and chunk ≈ cap/2.
+_PAIR_CAP = 1024
+_PAIR_CHUNK = 512
 
 
 def pair_list_expr(arr: str, a: str, b: str) -> str:
@@ -52,53 +54,61 @@ def pair_list_expr(arr: str, a: str, b: str) -> str:
 
 
 def basket_units(baskets: DataFrame, arr: str = "ps",
-                 keep: tuple[str, ...] = (), cap: int | None = None,
-                 chunk: int | None = None) -> DataFrame:
-    """Decompose every basket into bounded pair-work units (r11).
+                 keep: tuple[str, ...] = (), cap: int = _PAIR_CAP,
+                 chunk: int = _PAIR_CHUNK) -> DataFrame:
+    """Decompose every basket into bounded pair-work units — the one
+    place that decides how a basket pair build is shaped.
 
-    Output: ``keep`` columns + ``_u = (xs, ys, diag)``.  A basket with
-    ``size(arr) ≤ cap`` (ALL baskets on TPC-H-shaped data, order size
-    ≤ ~7) emits ONE self unit ``(arr, [], true)`` — the caller's diag
-    expression over xs is exactly the r10 in-task pair explode/fold.
-    A bigger basket decomposes into chunk-pair units where xs/ys are
-    contiguous ``chunk``-sized slices of the sorted array and diag
-    marks xs==ys: every strict i<j pair of the basket lives in EXACTLY
-    one unit (within one chunk → that diag unit; across two chunks →
-    that (ca<cb) unit, where sortedness makes every x<y), so any
-    per-pair expression evaluated per unit reproduces the unguarded
-    result bit-for-bit.
+    Output: ``keep`` columns + ``_u = (xs, ys, diag)``.  A self unit
+    ``(arr, [], true)`` means "all strict i<j pairs of xs" — the
+    caller's diag expression over xs is exactly the r10 in-task pair
+    explode/fold.  A chunk-pair unit holds contiguous ``chunk``-sized
+    slices xs/ys of the sorted array and diag marks xs==ys: every
+    strict i<j pair of a basket lives in EXACTLY one unit (within one
+    chunk → that diag unit; across two chunks → that (ca<cb) unit,
+    where sortedness makes every x<y), so any per-pair expression
+    evaluated per unit reproduces the unguarded result bit-for-bit.
 
-    All units are hash-repartitioned on a deterministic
-    high-cardinality key (guide §2.5: never rand()) so one hot
-    basket's O((s/chunk)²) units spread over the cluster and per-task
-    pair fan-out is bounded by chunk².  Why SINGLE-path + repartition
-    rather than a small/large filter split: a split references the
-    basket aggregate twice, and the duplicated reduce-side
-    collect_set (ReuseExchange dedups only the shuffle write) measured
-    +0.17 s on the sf0.1 pagerank pair build, while this shape's one
-    narrow exchange of (key, array) unit rows measured +0.006 s —
-    and at scale it is one proxy-sized shuffle instead of a second
-    reduce-side fetch + array rebuild of the whole basket table.
-    The explicit numPartitions matters: unit rows are tiny pre-explode,
-    so AQE's size-based coalescing (which cannot see the quadratic
-    explode fan-out downstream) would merge them back into one
-    partition; a user-specified count is exempt, and
-    defaultParallelism keeps it cluster-sized rather than a local
-    constant.
+    The rule: pin ``baskets`` (persist) and run ONE aggregate,
+    ``max(size(arr))`` and ``count_if(size(arr) > cap)``; that action
+    both materializes the pin and returns the two numbers, which are
+    logged.  Every later reader of ``baskets`` — this helper's output
+    and the caller's other subtrees — reads the cache through the cache
+    manager, so the basket aggregate runs once.
+
+    - max ≤ cap (ALL baskets on TPC-H-shaped data, order size ≤ ~7):
+      one self unit per basket, no repartition — the upstream groupBy
+      hash already spread the baskets.
+    - otherwise: baskets ≤ cap stay one self unit, bigger ones become
+      chunk-pair units, and ALL units are hash-repartitioned on a
+      deterministic high-cardinality key (guide §2.5: never rand()) so
+      one hot basket's O((s/chunk)²) units spread over the cluster and
+      per-task pair fan-out is bounded by chunk².  The explicit
+      numPartitions matters: unit rows are tiny pre-explode, so AQE's
+      size-based coalescing (which cannot see the quadratic explode
+      fan-out downstream) would merge them back into one partition; a
+      user-specified count is exempt, and defaultParallelism keeps it
+      cluster-sized rather than a local constant.
     """
-    cap = _PAIR_CAP if cap is None else cap
-    chunk = _PAIR_CHUNK if chunk is None else chunk
+    baskets.persist()
+    size = F.size(arr)
+    mx, n_over = baskets.agg(F.max(size), F.count_if(size > cap)).first()
+    mx = mx or 0  # max over an empty basket table is NULL
+    _log.info("pair guard on %s: max basket %d, %d over cap %d",
+              arr, mx, n_over, cap)
+    keepc = [F.col(c) for c in keep]
+    self_unit = (f"named_struct('xs', {arr}, 'ys', slice({arr}, 1, 0), "
+                 f"'diag', true)")
+    if mx <= cap:
+        return baskets.select(*keepc, F.expr(self_unit).alias("_u"))
     nch = f"cast(ceil(size({arr}) / cast({chunk} as double)) as int)"
     units_expr = (
-        f"CASE WHEN size({arr}) <= {cap} THEN "
-        f"array(named_struct('xs', {arr}, 'ys', slice({arr}, 1, 0), "
-        f"'diag', true)) ELSE "
+        f"CASE WHEN size({arr}) <= {cap} THEN array({self_unit}) ELSE "
         f"flatten(transform(sequence(0, {nch} - 1), ca -> "
         f"transform(sequence(ca, {nch} - 1), cb -> named_struct("
         f"'xs', slice({arr}, ca * {chunk} + 1, {chunk}), "
         f"'ys', slice({arr}, cb * {chunk} + 1, {chunk}), "
         f"'diag', ca = cb)))) END")
-    keepc = [F.col(c) for c in keep]
     npart = baskets.sparkSession.sparkContext.defaultParallelism
     # get() not [0]: a self unit's ys is empty and ANSI indexing errors
     return (baskets.select(*keepc, F.explode(F.expr(units_expr))
@@ -111,61 +121,27 @@ def basket_units(baskets: DataFrame, arr: str = "ps",
 def guarded_pair_explode(baskets: DataFrame, arr: str = "ps",
                          a: str = "pa", b: str = "pb",
                          keep: tuple[str, ...] = (),
-                         cap: int | None = None,
-                         chunk: int | None = None,
-                         split: bool = False) -> DataFrame:
+                         cap: int = _PAIR_CAP,
+                         chunk: int = _PAIR_CHUNK) -> DataFrame:
     """All strict ``a < b`` element pairs per basket — the r10
-    basket-array pair build with the r11 hot-basket guard.
+    basket-array pair build with the hot-basket guard.
 
     Output: one row per (basket, unordered pair) — ``keep`` columns
     passed through plus ``a``/``b`` — an EXACT multiset match of the
     unguarded ``pair_list_expr`` explode (and of the pre-r10
-    distinct + self-join) for any cap/chunk.  See :func:`basket_units`
-    for the guard mechanics and exactness argument.
-
-    ``split=False`` (default): single-path — every basket becomes a
-    work unit and ALL units ride the spread exchange.  Right when the
-    basket table is an unmaterialized aggregate (a filter split would
-    evaluate it twice).
-
-    ``split=True``: two-branch — baskets ≤ cap explode IN PLACE with
-    no extra exchange (they are already spread by the upstream groupBy
-    hash); only the > cap stragglers go through the unit spread, whose
-    exchange is empty on well-behaved data.  The two filters reference
-    the basket aggregate twice, so this shape is for callers whose
-    basket input sits on a PERSISTED + MATERIALIZED table (the dedup
-    gram sites: `sh` is cached and counted, so the duplicated
-    reduce-side aggregate reads a reused shuffle, not the lineage) —
-    there it saves re-shuffling every (key, array) row just to guard
-    against the rare hot basket (measured ~0.2-0.3 s on
-    dedup_ngram_jaccard at sf0.1, the one site where the single-path
-    unit exchange was visible)."""
-    cap = _PAIR_CAP if cap is None else cap
+    distinct + self-join) for any cap/chunk.  One explode over the
+    units of :func:`basket_units`, which pins ``baskets`` and picks the
+    in-place or the spread shape from what it observed."""
     keepc = [F.col(c) for c in keep]
     cross = (f"flatten(transform(_u.xs, x -> transform(_u.ys, "
              f"y -> named_struct('{a}', x, '{b}', y))))")
     diag_u = pair_list_expr("_u.xs", a, b)
-    if split:
-        small = (baskets.filter(F.expr(f"size({arr}) <= {cap}"))
-                 .select(*keepc,
-                         F.explode(F.expr(pair_list_expr(arr, a, b)))
-                         .alias("_pr")))
-        big_units = basket_units(
-            baskets.filter(F.expr(f"size({arr}) > {cap}")),
-            arr, keep, cap, chunk)
-        big = big_units.select(*keepc,
-                               F.explode(F.expr(
-                                   f"CASE WHEN _u.diag THEN {diag_u} "
-                                   f"ELSE {cross} END")).alias("_pr"))
-        out = small.unionByName(big)
-    else:
-        units = basket_units(baskets, arr, keep, cap, chunk)
-        out = units.select(*keepc,
-                           F.explode(F.expr(
-                               f"CASE WHEN _u.diag THEN {diag_u} "
-                               f"ELSE {cross} END")).alias("_pr"))
-    return out.select(*keepc, F.col(f"_pr.{a}").alias(a),
-                      F.col(f"_pr.{b}").alias(b))
+    return (basket_units(baskets, arr, keep, cap, chunk)
+            .select(*keepc, F.explode(F.expr(
+                f"CASE WHEN _u.diag THEN {diag_u} ELSE {cross} END"))
+                .alias("_pr"))
+            .select(*keepc, F.col(f"_pr.{a}").alias(a),
+                    F.col(f"_pr.{b}").alias(b)))
 
 
 def salted_join(left: DataFrame, right: DataFrame, key: str,

@@ -248,16 +248,12 @@ def recsys_item_item_cosine(spark: SparkSession, sf: str) -> DataFrame:
     # pattern).
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-               .persist())
-    # r11 (guide §1.2): materialize — the single final action reads
-    # baskets from THREE concurrent subtrees (pair units + the two
-    # item-count broadcasts); unmaterialized, those racing readers each
-    # recompute the collect_set aggregate through the cold cache.
-    baskets.count()
-    # r11: size-guarded pair explode (exact same pair multiset —
-    # operators/skew.guarded_pair_explode); baskets is persisted, so
-    # the guard's second reference reads the cache.
+               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
+    # size-guarded pair explode (exact same pair multiset); its one
+    # action pins and materializes baskets (operators/skew.basket_units),
+    # so the single final action's three readers of baskets (pair units
+    # + the two item-count broadcasts) all read the cache instead of
+    # racing to recompute the collect_set aggregate.
     from storagetapper_spark.operators.skew import guarded_pair_explode
 
     cc = (guarded_pair_explode(baskets, "ps", "pa", "pb")

@@ -530,11 +530,11 @@ def graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     Exact BIGINT sufficient statistics over integer degrees; one final
     double expression (the ts_autocorrelation pattern)."""
     e = _edges(spark, sf).persist()
-    # r11 (guide §1.2): materialize — the single final action references
-    # the persisted pair build several times (adjacency fan-out + the
-    # existing-edge anti-join), and concurrent exchange map stages race
-    # an unmaterialized cache into recomputing the basket aggregate per
-    # reference.
+    # r11 (guide §1.2): materialize — the single final action reads the
+    # persisted edge list through adj several times (the degree
+    # aggregate behind both endpoint-degree broadcasts, and the adj scan
+    # they join onto), and concurrent exchange map stages race an
+    # unmaterialized cache into recomputing the pair build per reference.
     e.count()
     adj = _adj(e)
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))

@@ -617,20 +617,16 @@ def market_basket_rules(spark: SparkSession, sf: str) -> DataFrame:
     # (collect_set == per-order distinct; slice keeps pa < pb).
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-               .persist())
-    # r11 (guide §1.2): materialize — the single final action reads
-    # baskets from FOUR concurrent subtrees (pair units, the two item
-    # broadcasts, the order-count broadcast); unmaterialized, those
-    # racing readers each recompute the collect_set aggregate.
-    baskets.count()
+               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
     n_orders = baskets.agg(F.count(F.lit(1))
                            .cast("double").alias("n_orders"))
     item = (baskets.select(F.explode("ps").alias("l_partkey"))
             .groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item")))
-    # r11: size-guarded pair explode (exact same pair multiset —
-    # operators/skew.guarded_pair_explode); baskets is persisted, so
-    # the guard's second reference reads the cache, not the lineage.
+    # size-guarded pair explode (exact same pair multiset); its one
+    # action pins and materializes baskets (operators/skew.basket_units),
+    # so the single final action's four readers of baskets (pair units,
+    # the two item broadcasts, the order-count broadcast) all read the
+    # cache instead of racing to recompute the collect_set aggregate.
     from storagetapper_spark.operators.skew import guarded_pair_explode
 
     pairs = (guarded_pair_explode(baskets, "ps", "pa", "pb")

@@ -60,16 +60,3 @@ def kafka_stream_writer(df: DataFrame, bootstrap_servers: str, topic: str,
             .option("kafka.acks", acks)
             .option("checkpointLocation", checkpoint_dir))
 
-
-def kafka_reader(spark, bootstrap_servers: str, topic: str,
-                 starting_offsets: str = "earliest",
-                 max_offsets_per_trigger: int | None = None):
-    """Streaming consumer; maxOffsetsPerTrigger is the throughput
-    throttle (O5 analog)."""
-    r = (spark.readStream.format("kafka")
-         .option("kafka.bootstrap.servers", bootstrap_servers)
-         .option("subscribe", topic)
-         .option("startingOffsets", starting_offsets))
-    if max_offsets_per_trigger:
-        r = r.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
-    return r

@@ -1,5 +1,6 @@
 """Dedup operator semantics on constructed corpora."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from storagetapper_spark.operators.dedup import (
@@ -7,6 +8,7 @@ from storagetapper_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
+    shingle_grams,
     simhash,
     simhash_near_pairs,
 )
@@ -214,8 +216,6 @@ def test_shared_grams_matches_builtin_shingling(spark):
     dedup_minhash_calibration shape) must reproduce the operators'
     built-in shingling bit-for-bit — including short docs whose single
     shingle is the whole normalized text."""
-    from storagetapper_spark.operators.dedup import shingle_grams
-
     rows = [
         (1, DOC, "b1"),
         (2, DOC, "b1"),
@@ -240,3 +240,27 @@ def test_shared_grams_matches_builtin_shingling(spark):
     assert sorted(map(tuple, ex_shared.collect())) == \
         sorted(map(tuple, ex_own.collect()))
     grams.unpersist()
+
+
+@pytest.mark.parametrize("op,drop", [
+    ("minhash_signature", "doc_id"),
+    ("minhash_signature", "_g"),
+    ("minhash_lsh_pairs", "doc_id"),
+    ("minhash_lsh_pairs", "_g"),
+    ("ngram_jaccard_pairs", "doc_id"),
+    ("ngram_jaccard_pairs", "_g"),
+    ("ngram_jaccard_pairs", "bucket"),
+])
+def test_grams_missing_column_raises(spark, op, drop):
+    """A grams= table lacking a column its consumer reads must raise
+    ValueError up front, naming the column."""
+    docs = _docs(spark)
+    grams = shingle_grams(docs, ["bucket"], shingle_n=3).drop(drop)
+    calls = {
+        "minhash_signature": lambda: minhash_signature(docs, grams=grams),
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs, grams=grams),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(
+            docs, ["bucket"], grams=grams),
+    }
+    with pytest.raises(ValueError, match=f"'{drop}'"):
+        calls[op]()

@@ -7,6 +7,7 @@ it in one (the straggler/OOM hazard the guard exists for).
 """
 
 import itertools
+import logging
 
 import pytest
 from pyspark.sql import functions as F
@@ -94,19 +95,28 @@ def test_guard_exact_at_tiny_caps(spark, cap, chunk):
     assert got == exp
 
 
-@pytest.mark.parametrize("cap,chunk", [(3, 2), (5, 5), (1024, 512)])
-def test_split_path_matches_single_path(spark, cap, chunk):
-    # split=True (r11 session 3): small baskets explode in place, only
-    # > cap baskets ride the unit spread — exact same pair multiset as
-    # the single-path guard and the unguarded explode.
-    rows = [(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [10, 11, 12]),
-            (3, list(range(100, 120))), (4, [7]), (5, [])]
-    b = _baskets(spark, rows)
-    split = sorted((r.k, r.pa, r.pb) for r in guarded_pair_explode(
-        b, "ps", "pa", "pb", keep=("k",), cap=cap, chunk=chunk,
-        split=True).collect())
-    single = sorted((r.k, r.pa, r.pb) for r in guarded_pair_explode(
-        b, "ps", "pa", "pb", keep=("k",), cap=cap, chunk=chunk).collect())
-    exp = sorted((k, a, b2) for k, v in rows
-                 for a, b2 in itertools.combinations(v, 2))
-    assert split == single == exp
+@pytest.mark.parametrize("rows,max_basket,n_over", [
+    # every basket <= cap: in-place explode, no spread exchange
+    ([(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [10, 11, 12]), (4, [7]),
+      (5, [])], 8, 0),
+    # one basket > cap: every unit rides the xxhash64 spread
+    ([(1, [1, 2, 3, 4, 5, 6, 7, 8]), (2, [10, 11, 12]),
+      (3, list(range(100, 120))), (4, [7]), (5, [])], 20, 1),
+], ids=["all_within_cap", "one_over_cap"])
+def test_guard_observes_and_picks_shape(spark, caplog, rows, max_basket,
+                                        n_over):
+    # the one pair-guard rule: basket_units pins the baskets, reads the
+    # largest basket and the over-cap count in one action (logged), and
+    # spreads units only when some basket exceeds the cap
+    caplog.set_level(logging.INFO,
+                     logger="storagetapper_spark.operators.skew")
+    out = guarded_pair_explode(_baskets(spark, rows), "ps", "pa", "pb",
+                               keep=("k",), cap=10, chunk=4)
+    got = sorted((r.k, r.pa, r.pb) for r in out.collect())
+    exp = sorted((k, a, b) for k, v in rows
+                 for a, b in itertools.combinations(v, 2))
+    assert got == exp
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert ("xxhash64" in plan) == (n_over > 0)
+    assert (f"pair guard on ps: max basket {max_basket}, "
+            f"{n_over} over cap 10") in caplog.text
