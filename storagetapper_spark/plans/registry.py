@@ -92,31 +92,27 @@ for mod in (relational, relational2, relational3, relational4, relational5,
 # text surface) plus the 3 queries whose oracles were fixed this round
 # into the window.  Previously-green queries keep their recorded rows.
 _CHECK_FIRST = [
-    # Round-11 window (ROADMAP "Round-11 rotation", VERDICT r10 #9):
-    # the unwitnessed backlog is 0 after CORRECTNESS_r10, so this is a
-    # PURE RE-WITNESS window — zero new registrations this round.  The
-    # 13 CDC names whose last driver witness is round 3 (the stalest
-    # rows in the ledger) come first, then the oldest round-2
-    # relational rows in registry order fill the remaining 37 slots.
-    # All 50 are green in this round's full local gates (CHECK_ALL at
-    # sf0.01 + sf0.1).
-    "cdc_latest_state_agg", "cdc_json_roundtrip", "cdc_row_key",
-    "cdc_sql_encoder", "cdc_sql_encoder_idempotent",
-    "cdc_dedup_retransmit", "cdc_type_coercion", "cdc_avro_roundtrip",
-    "cdc_seqno_derivation", "cdc_msgpack_roundtrip", "cdc_avro_prepare",
-    "cdc_consistent_cut", "cdc_scd2_history",
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "join_semi_anti", "join_outer", "agg_rollup", "agg_cube",
-    "window_topk_per_group", "window_running", "sort_limit", "set_ops",
-    "scalar_functions", "json_extract", "agg_distinct_having",
-    "in_subquery", "window_event_time", "agg_stats", "agg_percentiles",
-    "pivot_returnflag", "date_functions", "string_functions2",
-    "null_semantics", "exists_correlated", "scalar_subquery_cross",
-    "array_functions", "grouping_sets", "posexplode_words",
-    "string_agg_ordered", "argmin_argmax", "bool_aggregates",
-    "regexp_counting", "schema_conform", "session_window_native",
-    "union_by_name_missing", "map_functions", "array_hof",
-    "q7_volume_shipping",
+    # Round-12 window: a PURE RE-WITNESS window, zero new registrations.
+    # The 50 stalest names by last witness round in CORRECTNESS_r01-r11,
+    # oldest first, registry order breaking ties: the 10 remaining
+    # round-2 rows, the 32 round-3 rows, then the first 8 round-4 rows.
+    "q10_returned_items", "q18_large_volume", "window_range_frame",
+    "unpivot_measures", "sample_stratified", "sketch_histogram",
+    "text_tfidf_search", "snapshot_diff_changelog", "q6_forecast_revenue",
+    "q4_order_priority", "conditional_agg", "window_sliding", "sessionize",
+    "agg_percentiles_approx", "approx_distinct", "text_ngram_freq",
+    "q2_min_cost_supplier", "q8_market_share", "q9_product_profit",
+    "q11_important_parts", "q12_priority_by_status",
+    "q13_customer_distribution", "q15_top_supplier", "q16_supplier_counts",
+    "q20_dominant_suppliers", "q21_last_shippers", "sketch_hll_union",
+    "cdc_incremental_agg", "cdc_column_audit", "cdc_time_travel",
+    "dedup_clusters", "dedup_corpus_summary", "sample_weighted",
+    "dedup_minhash_lsh", "dedup_minhash_lsh_star", "dedup_minhash_lsh_incr",
+    "profile_documents", "contamination_check", "decontaminate",
+    "quality_gate", "ann_srp", "dedup_embedding_srp", "q14_promo_effect",
+    "q17_small_quantity", "q22_global_sales_opportunity",
+    "q19_disjunctive_ranges", "text_pii_flags", "text_repetition",
+    "sample_reservoir_per_group", "embedding_kmeans_assign",
 ]
 assert len(_CHECK_FIRST) == 50, len(_CHECK_FIRST)
 assert all(n in _ALL for n in _CHECK_FIRST), "unknown name in _CHECK_FIRST"
