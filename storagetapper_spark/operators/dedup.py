@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storagetapper_spark.operators.graph import symmetrize
 from storagetapper_spark.operators.text import normalize_text
 
 
@@ -501,11 +502,8 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     edge list and the (node, comp) table ever shuffle.
     Deterministic, no driver-side graph state.
     """
-    sym = (edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-                .unionByName(
-                    edges.select(F.col(b_col).alias("src"),
-                                 F.col(a_col).alias("dst")))
-                .distinct())
+    sym = symmetrize(edges, a_col, b_col).select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")).distinct()
     sym.persist()
     labels = (sym.groupBy("src").agg(F.min("dst").alias("nbr_min"))
                  .select(F.col("src").alias("node"),

@@ -1,4 +1,6 @@
-"""Iterative graph algorithms over edge DataFrames.
+"""Graph primitives over edge DataFrames: ``pin`` (materialize a table
+before one action fans out over it), ``symmetrize`` (both orientations
+of an edge list in one read) and ``pagerank``.
 
 Complements operators/dedup.connected_components (min-label
 propagation): pagerank() is the other graph primitive a large-corpus
@@ -7,23 +9,56 @@ web-corpus analog: rank pages/domains by citation structure before
 sampling training data).
 
 Execution model: the edge list is the ONLY thing that shuffles; node
-payloads never move.  Each iteration is one join + one aggregate, with
-the new rank generation persisted eagerly and the old retired —
-without that, iteration k re-derives the whole k-deep lineage (same
-hazard documented in connected_components).  At 100 TB the edge table
-is bucketed by src so every iteration's join is co-partitioned.
+payloads never move.  Each iteration is one join + one aggregate.  A
+generation read once by the next round stays lazy; one read twice is
+pinned before the last is retired — an unmaterialized twice-read
+generation re-derives the whole k-deep lineage (same hazard documented
+in connected_components).  At 100 TB the edge table is bucketed by src
+so every iteration's join is co-partitioned.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and materialize it with one count; returns ``df``.
+
+    For a table that ONE later action reads from several subtrees:
+    persist() alone is lazy, so that action's concurrent exchange map
+    stages all find the cache cold and each recomputes the lineage.
+    The count fills the cache first and every reader then hits it.
+    Use it only where nothing reads the count: a site that needs the
+    row count persists and counts itself, so pinning never adds a job.
+    """
+    df.persist()
+    df.count()
+    return df
+
+
+def symmetrize(edges: DataFrame, a: str, b: str, *carry: str) -> DataFrame:
+    """Both orientations of every edge → (a, b, *carry): each input row
+    once as-is and once with ``a``/``b`` swapped, ``carry`` columns
+    copied onto both.
+
+    ONE explode over a two-struct array, emitted map-side: the input is
+    read once.  The self-union form it replaces referenced its input
+    twice, so an unpersisted edge subtree (e.g. a pair-build aggregate)
+    evaluated twice per action even when ReuseExchange shared the
+    shuffle underneath."""
+    kept = [F.col(c) for c in carry]
+    fwd = F.struct(F.col(a).alias(a), F.col(b).alias(b), *kept)
+    rev = F.struct(F.col(b).alias(a), F.col(a).alias(b), *kept)
+    return (edges.select(F.explode(F.array(fwd, rev)).alias("_e"))
+            .select("_e.*"))
 
 
 def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
              iterations: int = 5, damping: float = 0.85,
              directed: bool = False, dedup: bool = True,
-             eager: bool = True, scaled: bool = False,
+             scaled: bool = False,
              weight_col: str | None = None,
              personalization: DataFrame | None = None) -> DataFrame:
     """PageRank over an edge list → (node, pr).
@@ -40,14 +75,17 @@ def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
     strict a<b orientation, whose two mirrored directions cannot
     collide).  That elides a full shuffle of the edge list.
 
-    ``eager`` picks the iteration style.  True: persist + materialize
-    each rank generation before retiring the last — mandatory for
-    many/convergence-tested iterations, where unmaterialized lineage
-    depth explodes.  False: build one lazy plan across all iterations
-    — for a FIXED small count this is ~35% faster (measured 5.3s vs
-    8.0s at sf0.1): Catalyst plans once, the rank side of every round
-    is a chained broadcast join against the single persisted adjacency
-    cache, and no per-generation action pays scheduler overhead.
+    The iteration style follows from ``directed``, by the rule that a
+    lazy generation is safe only when it is read once:
+
+    - undirected: a round reads the previous rank generation once, so
+      all rounds form ONE lazy plan — Catalyst plans once, the rank
+      side of every round is a chained broadcast join against the one
+      persisted adjacency, and no per-generation action pays scheduler
+      overhead (measured 5.3 s vs 8.0 s eager at sf0.1, 5 rounds);
+    - directed: a round reads it twice (link contributions and the
+      dangling-mass aggregate), so a lazy plan would double per round;
+      each generation is pinned before the last is retired.
 
     ``scaled=True`` multiplies pr by the node count before returning
     (≈1.0 under a uniform distribution) — done here because only the
@@ -65,49 +103,26 @@ def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
 
     Returns pr at full precision — callers round at the boundary.
     """
-    if directed and not eager:
-        # a directed round references the previous generation TWICE
-        # (link contributions + the dangling-mass aggregate), so an
-        # unmaterialized lazy plan doubles per iteration — 2^k lineage.
-        # Directed mode therefore always iterates eagerly.
-        eager = True
-    cols = [F.col(a_col).alias("src"), F.col(b_col).alias("dst")] + (
-        [F.col(weight_col).cast("double").alias("w")] if weight_col else [])
+    w = [weight_col] if weight_col else []
     if not directed:
-        # r11 (guide §1.2): symmetrize with ONE explode instead of a
-        # self-union — the union referenced the caller's (usually
-        # unpersisted) edge subtree twice, so its final aggregate (the
-        # pair-build distinct/groupBy) evaluated twice per run even
-        # with ReuseExchange deduplicating the shuffle underneath.
-        # Identical row multiset, just emitted map-side in one pass.
-        w = ([("w", F.col(weight_col).cast("double"))]
-             if weight_col else [])
-        fwd = F.struct(F.col(a_col).alias("src"),
-                       F.col(b_col).alias("dst"),
-                       *[v.alias(k) for k, v in w])
-        rev = F.struct(F.col(b_col).alias("src"),
-                       F.col(a_col).alias("dst"),
-                       *[v.alias(k) for k, v in w])
-        sym = (edges.select(F.explode(F.array(fwd, rev)).alias("_e"))
-               .select("_e.*"))
-    else:
-        sym = edges.select(*cols)
+        edges = symmetrize(edges, a_col, b_col, *w)
+    sym = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"),
+                       *[F.col(c).cast("double").alias("w") for c in w])
     if dedup:
         sym = sym.distinct()
     if not weight_col:
         sym = sym.withColumn("w", F.lit(1.0))
-    # out-strength folded onto each edge once, outside the loop — the
-    # loop then joins rank → edge on src only
-    deg = sym.groupBy("src").agg(F.sum("w").alias("out_w"))
-    adj = sym.join(deg, "src").persist()
+    # out-strength folded onto each edge once, outside the loop, so the
+    # loop joins rank → edge on src only.  A window sum reads sym once
+    # (a join to its own groupBy read it twice); exact, since weights
+    # are integer-valued doubles.
+    adj = sym.withColumn(
+        "out_w", F.sum("w").over(Window.partitionBy("src"))).persist()
     if directed:
-        # the node set must include pure SINKS (dst-only nodes) — they
+        # the node set must include pure SINKS (dst-only nodes): they
         # hold rank, receive link mass, and their dangling mass is
-        # redistributed each round (ADVICE r3: building ranks only from
-        # summed dst keys dropped no-in-edge nodes after iteration 1
-        # and silently lost sink mass)
-        nodes = (sym.select("src")
-                 .unionByName(sym.select(F.col("dst").alias("src")))
+        # redistributed each round (ADVICE r3)
+        nodes = (symmetrize(sym, "src", "dst").select("src")
                  .distinct().persist())
         n_nodes = nodes.count()
         sinks = nodes.join(adj.select("src").distinct(),
@@ -119,10 +134,8 @@ def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
         if personalization is None or scaled:
             n_nodes = nodes.count()  # hits the cache
         else:
-            # r10: unscaled personalized mode never reads n_nodes
-            # (restart mass is p0-shaped, no uniform term) — a plain
-            # count materializes the adjacency cache for the lazy loop
-            # without paying a distinct aggregation nobody consumes
+            # unscaled personalized mode never reads n_nodes: a plain
+            # count materializes adj without the unused distinct
             n_nodes = None
             adj.count()
 
@@ -143,9 +156,8 @@ def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
         ranks = nodes.select(F.col("src").alias("node"),
                              F.lit(1.0 / n_nodes).alias("pr"))
         restart = F.lit((1.0 - damping) / n_nodes)
-    if eager:
-        ranks = ranks.persist()
-        ranks.count()
+    if directed:
+        ranks = pin(ranks)
     for _ in range(iterations):
         contribs = (adj.join(ranks, adj.src == ranks.node)
                     .select("dst", (F.col("pr") * F.col("w")
@@ -153,62 +165,42 @@ def pagerank(edges: DataFrame, a_col: str = "id_a", b_col: str = "id_b",
         summed = (contribs.groupBy("dst")
                   .agg((F.lit(damping) * F.sum("contrib")).alias("_link")))
         if sinks is not None:
-            # dangling mass: rank sitting on out-degree-0 nodes this
-            # round, redistributed (uniformly, or onto p0 when
-            # personalized).  Collected as ONE scalar per round off the
-            # cached rank generation (directed mode is always eager) —
-            # keeping it a lazy aggregate would re-reference ranks and
-            # double the plan every iteration.
+            # dangling mass: rank on out-degree-0 nodes this round, ONE
+            # scalar collected off the pinned generation
             dm = (ranks.join(sinks, ranks.node == sinks.src)
                   .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("_dm"))
                   .collect()[0]._dm)
-        if p0 is not None and sinks is None:
-            # r10 (guide §2.4): in undirected mode contribs emits one
-            # row per edge regardless of rank value and the symmetrized
-            # edge list gives every node an in-edge, so summed already
-            # covers EVERY node — the per-round left-join against the
-            # nodes distinct (one distinct aggregation over the cached
-            # adjacency per iteration in the lazy plan) is redundant.
-            # restart + _link is the identical float expression (every
-            # summed row carries _link, so the former coalesce never
-            # fired; no dangling term exists without sinks).
-            new_ranks = (summed.join(p0, summed.dst == p0.node, "left")
-                         .select(F.col("dst").alias("node"),
-                                 (restart + F.col("_link")).alias("pr")))
-        elif p0 is not None:
-            # dangling mass lands back on the personalization vector in
-            # directed mode — one build per round (a conditional rebuild
-            # here used to leave a dead first assignment, ADVICE r4)
-            dangling = F.lit(damping * dm) * F.coalesce("p0", F.lit(0.0))
-            new_ranks = (nodes.join(summed, nodes.src == summed.dst, "left")
-                         .join(p0, nodes.src == p0.node, "left")
-                         .select(F.col("src").alias("node"),
-                                 (restart
-                                  + F.coalesce("_link", F.lit(0.0))
-                                  + dangling)
-                                 .alias("pr")))
-        elif sinks is not None:
-            new_ranks = (nodes.join(summed, nodes.src == summed.dst, "left")
-                         .select(F.col("src").alias("node"),
-                                 (restart
-                                  + F.coalesce("_link", F.lit(0.0))
-                                  + F.lit(damping * dm / n_nodes))
-                                 .alias("pr")))
+        if sinks is None:
+            # undirected: every node has an in-edge, so summed already
+            # covers every node and there is no dangling term
+            new_ranks = summed if p0 is None else summed.join(
+                p0, summed.dst == p0.node, "left")
+            new_ranks = new_ranks.select(
+                F.col("dst").alias("node"),
+                (restart + F.col("_link")).alias("pr"))
         else:
-            new_ranks = summed.select(F.col("dst").alias("node"),
-                                      (restart + F.col("_link")).alias("pr"))
-        if eager:
-            new_ranks = new_ranks.persist()
-            new_ranks.count()  # materialize gen k before retiring k-1
+            # directed: dangling mass is spread uniformly, or back onto
+            # the personalization vector
+            new_ranks = nodes.join(summed, nodes.src == summed.dst, "left")
+            if p0 is None:
+                dangling = F.lit(damping * dm / n_nodes)
+            else:
+                new_ranks = new_ranks.join(p0, nodes.src == p0.node, "left")
+                dangling = F.lit(damping * dm) * F.coalesce("p0", F.lit(0.0))
+            new_ranks = new_ranks.select(
+                F.col("src").alias("node"),
+                (restart + F.coalesce("_link", F.lit(0.0)) + dangling)
+                .alias("pr"))
+        if directed:
+            # materialize gen k before retiring k-1
+            new_ranks = pin(new_ranks)
             ranks.unpersist()
         ranks = new_ranks
-    if eager:
+    if directed:
         adj.unpersist()
-        if directed:
-            nodes.unpersist()
-            sinks.unpersist()
-    # lazy mode: adj stays persisted — the caller's single action
-    # consumes it; unpersisting here would evict before execution
+        nodes.unpersist()
+        sinks.unpersist()
+    # undirected: adj stays persisted for the caller's one action
     if scaled:
         ranks = ranks.select("node",
                              (F.col("pr") * F.lit(float(n_nodes)))

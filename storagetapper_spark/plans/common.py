@@ -7,6 +7,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.skew import guarded_pair_explode
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (the snapshot-scan stand-in — BASELINE.md
@@ -27,3 +29,32 @@ def events_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type in ("long", "bigint"):
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(l_orderkey, ps): every order's distinct part keys, sorted — the
+    basket table behind every co-purchase graph.  One groupBy(orderkey)
+    shuffle; collect_set is the per-order distinct of the oracles'
+    ``SELECT DISTINCT l_orderkey, l_partkey``, and the sort gives pair
+    builds their strict pa < pb orientation."""
+    return (t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+            .groupBy("l_orderkey")
+            .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
+
+
+def copurchase_pairs(baskets: DataFrame) -> DataFrame:
+    """(pa, pb, n_ab): every part pair bought together, pa < pb, with the
+    number of orders that contain both — the oracles' lineitem self-join
+    ``ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey``
+    grouped by pair, built from :func:`order_baskets` instead.
+
+    The pairs come from ``skew.guarded_pair_explode``, whose one action
+    pins ``baskets`` and picks the in-place or the hot-basket spread
+    explode (same pair multiset either way), so the caller's other
+    readers of ``baskets`` hit the cache.  Callers apply their own
+    support threshold (``n_ab >= 2`` for the strong graph); a caller
+    that selects only (pa, pb) gets a plain distinct — the unused count
+    is pruned."""
+    return (guarded_pair_explode(baskets, "ps", "pa", "pb")
+            .groupBy("pa", "pb")
+            .agg(F.count(F.lit(1)).alias("n_ab")))

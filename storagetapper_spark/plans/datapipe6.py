@@ -18,7 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from storagetapper_spark.plans.common import t
+from storagetapper_spark.operators.graph import symmetrize
+from storagetapper_spark.plans.common import (copurchase_pairs,
+                                              order_baskets, t)
 
 _MEASURES = [
     ("qty", "CAST(l_quantity AS BIGINT)"),
@@ -240,29 +242,11 @@ def recsys_item_item_cosine(spark: SparkSession, sf: str) -> DataFrame:
     baskets, never by catalog size — the blocked-pairs shape); margins
     broadcast from a per-part count; per-item top-k is a bounded
     window.  Cosine is an IEEE expression over exact integer counts."""
-    # r10 (guide §2.4/§5): basket-array pair build — one
-    # groupBy(orderkey) shuffle (collect_set == per-order distinct)
-    # instead of distinct + self-join; the ordered (pa≠pb) table is the
-    # strict pa<pb counts symmetrized (n_ab is symmetric), and cnt
-    # explodes the SAME persisted baskets (the recsys_coverage_diversity
-    # pattern).
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    # size-guarded pair explode (exact same pair multiset); its one
-    # action pins and materializes baskets (operators/skew.basket_units),
-    # so the single final action's three readers of baskets (pair units
-    # + the two item-count broadcasts) all read the cache instead of
-    # racing to recompute the collect_set aggregate.
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    cc = (guarded_pair_explode(baskets, "ps", "pa", "pb")
-          .groupBy("pa", "pb")
-          .agg(F.count(F.lit(1)).alias("n_ab"))
-          .filter(F.col("n_ab") >= 2))
-    cooc = cc.unionByName(
-        cc.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"),
-                  "n_ab"))
+    # the ordered (pa≠pb) table is the strict pa<pb counts symmetrized
+    # (n_ab is symmetric), and cnt explodes the same pinned baskets
+    baskets = order_baskets(spark, sf)
+    cooc = symmetrize(copurchase_pairs(baskets).filter(F.col("n_ab") >= 2),
+                      "pa", "pb", "n_ab")
     cnt = (baskets.select(F.explode("ps").alias("l_partkey"))
            .groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_orders")))
     ca = cnt.select(F.col("l_partkey").alias("ka"),

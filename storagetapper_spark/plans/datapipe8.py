@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.graph import pin
 from storagetapper_spark.plans.common import t
 from storagetapper_spark.plans.graph2 import _EDGE_SQL, _adj, _edges
 
@@ -255,8 +256,7 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     e = _edges(spark, sf).persist()
-    adj = _adj(e).persist()
-    adj.count()
+    adj = pin(_adj(e))
 
     def peel(k: int) -> DataFrame:
         alive, prev_n = None, None

@@ -21,7 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.plans.common import t
+from storagetapper_spark.operators.graph import pin, symmetrize
+from storagetapper_spark.plans.common import (copurchase_pairs,
+                                              order_baskets, t)
 
 _EDGE_SQL = """
 li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -35,44 +37,17 @@ adj AS (SELECT pa AS u, pb AS v FROM e
 
 
 def _edges(spark: SparkSession, sf: str) -> DataFrame:
-    """Low→high co-purchase edges, ≥2 shared orders (graph_triangles).
-
-    r10 (guide §2.4): per-order basket ARRAYS — one groupBy(orderkey)
-    shuffle + an in-map combination explode — instead of distinct +
-    self-join, which shuffled the lineitem projection two more times
-    (distinct exchange + join exchange).  collect_set dedups
-    (orderkey, partkey) exactly like the former .distinct(), so the
-    per-pair order count (and the ≥2 filter) is identical; sort_array
-    + slice keeps the strict pa < pb orientation.
-
-    r11 (VERDICT r10 #4, guide §2.2/§2.5): the in-map pair explode is
-    now SIZE-GUARDED — baskets over the cap decompose into
-    redistributed chunk-pair units so one hot orderkey can never
-    concentrate O(s²) pair rows in a single task (exact same pair
-    multiset; see operators/skew.guarded_pair_explode)."""
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    return (guarded_pair_explode(baskets, "ps", "pa", "pb")
-            .groupBy("pa", "pb")
-            .agg(F.count(F.lit(1)).alias("n_ab"))
+    """Low→high co-purchase edges (pa, pb), ≥2 shared orders — the
+    strong graph of the whole family (``_EDGE_SQL``'s ``e``)."""
+    return (copurchase_pairs(order_baskets(spark, sf))
             .filter(F.col("n_ab") >= 2)
             .select("pa", "pb"))
 
 
 def _adj(e: DataFrame) -> DataFrame:
-    # r11 (guide §1.2, the operators/graph.pagerank lesson): symmetrize
-    # with ONE explode instead of a self-union — the union referenced
-    # the (often unmaterialized) persisted edge subtree twice, so the
-    # pair-build's final aggregate computed twice in the first job that
-    # touched adj (two union branches racing the cold cache).  Identical
-    # row multiset, emitted map-side in one pass.
-    fwd = F.struct(F.col("pa").alias("u"), F.col("pb").alias("v"))
-    rev = F.struct(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    return (e.select(F.explode(F.array(fwd, rev)).alias("_e"))
-            .select("_e.u", "_e.v"))
+    """(u, v): both orientations of every edge (``_EDGE_SQL``'s ``adj``)."""
+    return symmetrize(e, "pa", "pb").select(F.col("pa").alias("u"),
+                                            F.col("pb").alias("v"))
 
 
 _LP_TOPK = 20
@@ -87,13 +62,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     oriented edge list), degrees joined in from a tiny per-node agg.
     One top-k at the end (TakeOrderedAndProject).  No all-pairs stage
     anywhere: candidates exist only at distance 2."""
-    e = _edges(spark, sf).persist()
-    # r11 (guide §1.2): materialize — the single final action references
-    # the persisted pair build several times (adjacency fan-out + the
-    # existing-edge anti-join), and concurrent exchange map stages race
-    # an unmaterialized cache into recomputing the basket aggregate per
-    # reference.
-    e.count()
+    e = pin(_edges(spark, sf))
     adj = _adj(e)
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     a = adj.select(F.col("v").alias("w"), F.col("u").alias("cu"))
@@ -152,13 +121,7 @@ def graph_ra_link_prediction(spark: SparkSession, sf: str) -> DataFrame:
     floor(10⁶/deg(w)) — an exact INTEGER per center (no libm log as in
     Adamic-Adar, hence hash-exact cross-engine) — and the pair score is
     an exact integer sum of those micros."""
-    e = _edges(spark, sf).persist()
-    # r11 (guide §1.2): materialize — the single final action references
-    # the persisted pair build several times (adjacency fan-out + the
-    # existing-edge anti-join), and concurrent exchange map stages race
-    # an unmaterialized cache into recomputing the basket aggregate per
-    # reference.
-    e.count()
+    e = pin(_edges(spark, sf))
     adj = _adj(e)
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     wmicro = (deg.select(F.col("u").alias("w"),
@@ -223,13 +186,7 @@ def graph_jaccard_link_prediction_capped(spark: SparkSession,
     Scale shape: the cap rank is a window partitioned by center node —
     shuffle on w, never unpartitioned; everything downstream is the
     exact form's equi-join machinery on strictly smaller inputs."""
-    e = _edges(spark, sf).persist()
-    # r11 (guide §1.2): materialize — the single final action references
-    # the persisted pair build several times (adjacency fan-out + the
-    # existing-edge anti-join), and concurrent exchange map stages race
-    # an unmaterialized cache into recomputing the basket aggregate per
-    # reference.
-    e.count()
+    e = pin(_edges(spark, sf))
     adj = _adj(e)
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     degb = deg.select(F.col("u").alias("c"), "deg")
@@ -332,19 +289,14 @@ def graph_minhash_link_prediction(spark: SparkSession,
     stay registered for audit."""
     e = _edges(spark, sf).persist()
     adj = _adj(e)
-    sig = adj.groupBy("u").agg(*[
+    # one pin covers both: the final action reads sig three times (band
+    # explode + both signature join sides) and e twice (adjacency
+    # lineage + the existing-edge anti-join); computing sig caches e
+    # on the way
+    sig = pin(adj.groupBy("u").agg(*[
         F.min(F.md5(F.concat_ws("|", F.lit(str(i)),
                                 F.col("v").cast("string"))))
-         .alias(f"mh_{i}") for i in range(_MH_H)])
-    sig = sig.persist()
-    # r11 (guide §1.2): materialize — the single final action
-    # references sig THREE times (band explode + both signature join
-    # sides) and e twice (adjacency lineage + the existing-edge
-    # anti-join); unmaterialized, the concurrent exchange map stages
-    # race the cold cache and recompute the signature aggregate (and
-    # transitively the pair build) per reference.  This one node-sized
-    # count pins both: computing sig caches e on the way.
-    sig.count()
+         .alias(f"mh_{i}") for i in range(_MH_H)]))
     rows_per_band = _MH_H // _MH_BANDS
     bands = sig.select(
         "u",
@@ -464,14 +416,9 @@ def graph_bfs_distance(spark: SparkSession, sf: str) -> DataFrame:
     frontier is checkpointed per generation (operators/graph.py's
     persisted-generation pattern).  The hop count is bounded, so the
     whole profile is one lazy plan here."""
-    e = _edges(spark, sf)
-    adj = _adj(e).persist()
-    # r11 (guide §1.2): materialize the adjacency — the whole fixed-depth
-    # profile is ONE action that references adj once per hop plus the
-    # source agg; the first two readers launch concurrently and raced an
-    # unmaterialized cache into computing the pair build twice.  (e needs
-    # no persist of its own: adj is its only consumer.)
-    adj.count()
+    # the one action reads adj once per hop plus the source agg (e needs
+    # no persist of its own: adj is its only consumer)
+    adj = pin(_adj(_edges(spark, sf)))
     src = adj.agg(F.min("u").alias("u"))  # 1 row
     visited = src.select("u").persist()
     frontier = visited
@@ -529,13 +476,9 @@ def graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
 
     Exact BIGINT sufficient statistics over integer degrees; one final
     double expression (the ts_autocorrelation pattern)."""
-    e = _edges(spark, sf).persist()
-    # r11 (guide §1.2): materialize — the single final action reads the
-    # persisted edge list through adj several times (the degree
-    # aggregate behind both endpoint-degree broadcasts, and the adj scan
-    # they join onto), and concurrent exchange map stages race an
-    # unmaterialized cache into recomputing the pair build per reference.
-    e.count()
+    # e is read through adj twice: the degree aggregate behind both
+    # endpoint-degree broadcasts, and the adj scan they join onto
+    e = pin(_edges(spark, sf))
     adj = _adj(e)
     deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     du = deg.select(F.col("u").alias("su"), F.col("deg").alias("x"))
@@ -589,6 +532,25 @@ QUERIES["graph_degree_assortativity"] = (graph_degree_assortativity,
 _LPA_ROUNDS = 3
 
 
+def _lpa_labels(adj: DataFrame) -> DataFrame:
+    """(u, l): min node id within ``_LPA_ROUNDS`` hops of u — the
+    min-label propagation ladder over adjacency (u, v).  Each round
+    reads the previous generation twice (the union side and the join
+    side), so every generation is an eager localCheckpoint: persist()
+    never truncates the plan, and a lazy ladder re-executes ~2^rounds
+    times (measured 6.3–7.5 s lazy vs 3.8–4.0 s eager)."""
+    labels = (adj.select("u").distinct()
+              .select("u", F.col("u").alias("l"))
+              .localCheckpoint(eager=True))
+    for _ in range(_LPA_ROUNDS):
+        nbr = (adj.join(labels.withColumnRenamed("u", "v"), "v")
+               .select("u", "l"))
+        labels = (labels.unionByName(nbr)
+                  .groupBy("u").agg(F.min("l").alias("l"))
+                  .localCheckpoint(eager=True))
+    return labels
+
+
 def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     """Community detection by min-label propagation over the
     co-purchase graph: every node starts labeled with its own id; each
@@ -603,29 +565,11 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     are a long tail or a few giant blobs.
 
     Scale shape: each round is one equi-join frontier (adj ⋈ labels,
-    shuffle on node id) + one map-side-combined min aggregation — the
-    persisted-generation pattern (eager localCheckpoint per round keeps
-    the logical plan round-sized; operators/graph.py lesson).
-
-    r11 measured-and-REVERTED: a fully-lazy 3-round single plan (the
-    pagerank lazy-mode shape, betting on ReuseExchange to deduplicate
-    the twice-referenced previous generation) ran 6.3–7.5 s vs
-    3.8–4.0 s eager in interleaved A/B — the union side and the join
-    side of a generation optimize into DIFFERENT exchange subtrees, so
-    nothing is reused and the lineage re-executes ~2^rounds times.
-    Lazy mode is only safe when each generation is referenced ONCE
-    (pagerank) or materialized before reuse (kcore's count)."""
+    shuffle on node id) + one map-side-combined min aggregation over
+    checkpointed generations (:func:`_lpa_labels`)."""
     e = _edges(spark, sf).persist()
     adj = _adj(e).persist()
-    labels = (adj.select("u").distinct()
-              .select("u", F.col("u").alias("l"))
-              .localCheckpoint(eager=True))
-    for _ in range(_LPA_ROUNDS):
-        nbr = (adj.join(labels.withColumnRenamed("u", "v"), "v")
-               .select("u", "l"))
-        labels = (labels.unionByName(nbr)
-                  .groupBy("u").agg(F.min("l").alias("l"))
-                  .localCheckpoint(eager=True))
+    labels = _lpa_labels(adj)
     sizes = labels.groupBy("l").agg(F.count(F.lit(1)).alias("size"))
     return (sizes.groupBy("size")
             .agg(F.count(F.lit(1)).alias("n_communities"))
@@ -681,11 +625,10 @@ def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
     round beyond that).  Top-k is a TakeOrdered, never a global sort."""
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    edges = (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-             .select(F.col("o_custkey").alias("c"),
-                     F.col("l_partkey").alias("p"))
-             .distinct().persist())
-    edges.count()
+    edges = pin(li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+                .select(F.col("o_custkey").alias("c"),
+                        F.col("l_partkey").alias("p"))
+                .distinct())
 
     def norm(df: DataFrame, key: str, eager: bool = False) -> DataFrame:
         # r10 (guide §1.2): persist the half-step result — the max
@@ -780,20 +723,12 @@ def graph_clustering_coefficient(spark: SparkSession, sf: str) -> DataFrame:
     Scale: the degree orientation IS the 100 TB path (r6 verdict #3 —
     previously prose, now the executed plan); everything after the
     triangle join is node-sized."""
-    e = _edges(spark, sf).persist()
-    e.count()
-    # r10 (guide §1.2): oe persisted and shared across the triangle
-    # join's three self-references (each formerly re-derived
-    # e ⋈ deg ⋈ deg), and deg comes from the same helper instead of a
-    # second _adj aggregation — the graph_triangles_degree_oriented
-    # share applied here.
+    e = pin(_edges(spark, sf))
+    # oe is shared by the triangle join's three self-references
+    # (a1/a2/e3), and deg comes from the same helper instead of a
+    # second _adj aggregation
     oe, deg = _degree_oriented_edges(e)
-    oe = oe.persist()
-    # r11 (guide §1.2): materialize oe with its OWN cheap count — the
-    # single final action below references it three times (a1/a2/e3),
-    # and an unmaterialized persist lets those concurrent exchange map
-    # stages race the cold cache into recomputing the deg-join lineage.
-    oe.count()
+    oe = pin(oe)
     # r11 (guide §1.2): n_triangles no longer needs its own
     # materializing tri.count() action — every triangle contributes
     # exactly 3 corner rows, and every corner has deg ≥ 2 (its two
@@ -944,19 +879,10 @@ def graph_triangles_degree_oriented(spark: SparkSession, sf: str) -> DataFrame:
     orientation is the standard compact-forward bound, public
     literature (PAPERS.md graph section).
     """
-    e = _edges(spark, sf).persist()
-    e.count()
-    # r10 (guide §1.2): build the oriented edge table ONCE and persist —
-    # the former form derived oe independently inside
-    # _triangles_degree_oriented AND again for the degree stats, paying
-    # the deg agg + two joins twice per run.
+    e = pin(_edges(spark, sf))
+    # oe is built once and read four times (a1/a2/e3 + out_deg)
     oe, _ = _degree_oriented_edges(e)
-    oe = oe.persist()
-    # r11 (guide §1.2): materialize before the final action references
-    # oe four times (a1/a2/e3 + out_deg) — unmaterialized, those
-    # concurrent exchange map stages race the cold cache and recompute
-    # the deg-join lineage up to 3×.
-    oe.count()
+    oe = pin(oe)
     n_tri = (_triangles_from_oriented(oe)
              .agg(F.count(F.lit(1)).alias("n")))
     out_deg = oe.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
@@ -1035,9 +961,8 @@ def graph_rich_club(spark: SparkSession, sf: str) -> DataFrame:
     is identical, and the r6 no-persist verdict still holds — e's
     multiple references collapse under ReusedExchange at runtime."""
     e = _edges(spark, sf)
-    deg = (e.select(F.col("pa").alias("p"))
-           .unionAll(e.select(F.col("pb").alias("p")))
-           .groupBy("p").agg(F.count(F.lit(1)).alias("deg")))
+    deg = (_adj(e).groupBy(F.col("u").alias("p"))
+           .agg(F.count(F.lit(1)).alias("deg")))
     ks = [2, 4, 8, 16, 32]
     ej = (e.join(deg.withColumnRenamed("p", "pa")
                  .withColumnRenamed("deg", "da"), "pa")
@@ -1229,15 +1154,7 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     degree join; the community table is node-bounded."""
     e = _edges(spark, sf).persist()
     adj = _adj(e).persist()
-    labels = (adj.select("u").distinct()
-              .select("u", F.col("u").alias("l"))
-              .localCheckpoint(eager=True))
-    for _ in range(_LPA_ROUNDS):
-        nbr = (adj.join(labels.withColumnRenamed("u", "v"), "v")
-               .select("u", "l"))
-        labels = (labels.unionByName(nbr)
-                  .groupBy("u").agg(F.min("l").alias("l"))
-                  .localCheckpoint(eager=True))
+    labels = _lpa_labels(adj)
     la = labels.select(F.col("u").alias("pa"), F.col("l").alias("l1"))
     lb = labels.select(F.col("u").alias("pb"), F.col("l").alias("l2"))
     ec = (e.join(la, "pa").join(lb, "pb")

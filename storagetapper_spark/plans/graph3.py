@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.plans.common import t
+from storagetapper_spark.operators.graph import pin, symmetrize
+from storagetapper_spark.plans.common import (copurchase_pairs,
+                                              order_baskets, t)
 
 QUERIES: dict = {}
 
@@ -37,38 +39,13 @@ def graph_louvain_move_round(spark: SparkSession, sf: str) -> DataFrame:
     pagerank/LPA machinery), one struct-max argmax per node, two
     label joins for the modularity accounting.  Nothing is ever
     all-pairs and nothing sequential crosses the driver."""
-    # r10 (guide §2.4/§5): basket-array pair build (one groupBy(orderkey)
-    # shuffle instead of distinct + self-join; collect_set == per-order
-    # distinct so weights and the ≥2 threshold are identical), and the
-    # edge list is PERSISTED — it feeds sym (×2 via the union), both
-    # modularity accountings (qb, qa) and the edge count, which
-    # previously re-ran the whole lineitem pair build five times.
-    # r11: size-guarded pair explode (hot-basket chunk spread, exact
-    # same pair multiset — operators/skew.guarded_pair_explode).
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    edges = (guarded_pair_explode(baskets, "ps", "pa", "pb")
-             .groupBy("pa", "pb")
-             .agg(F.count(F.lit(1)).alias("w"))
-             .filter(F.col("w") >= 2)
-             .persist())
-    # r11 (guide §1.2): materialize — the single final action reads
-    # edges from FOUR concurrent subtrees (the symmetrized adjacency,
-    # the q4 edge join, the edge-count broadcast); unmaterialized, the
-    # racing exchange map stages each recompute the pair build.
-    edges.count()
-    # symmetrize with ONE explode, not a self-union (the _adj /
-    # operators/graph.pagerank lesson): identical row multiset, one
-    # read of the cached edge table instead of two.
-    sym = (edges.select(F.explode(F.array(
-        F.struct(F.col("pa").alias("i"), F.col("pb").alias("j"),
-                 F.col("w").alias("w")),
-        F.struct(F.col("pb").alias("i"), F.col("pa").alias("j"),
-                 F.col("w").alias("w")))).alias("_e"))
-           .select("_e.i", "_e.j", "_e.w"))
+    # the weighted strong graph; the final action reads it from the
+    # symmetrized adjacency, the q4 edge join and the edge count
+    edges = pin(copurchase_pairs(order_baskets(spark, sf))
+                .filter(F.col("n_ab") >= 2)
+                .select("pa", "pb", F.col("n_ab").alias("w")))
+    sym = symmetrize(edges, "pa", "pb", "w").select(
+        F.col("pa").alias("i"), F.col("pb").alias("j"), "w")
     # deg feeds lbl and both q4 accountings, lbl feeds tot/nbr/base/cand
     # — persist the tiny per-node tables (r10, guide §5).
     deg = sym.groupBy("i").agg(F.sum("w").alias("k")).persist()
@@ -107,22 +84,16 @@ def graph_louvain_move_round(spark: SparkSession, sf: str) -> DataFrame:
             * F.coalesce(F.col("w_own"), F.lit(0))
             - F.col("k").cast("decimal(19,0)")
             * (F.col("tot") - F.col("k"))).cast("decimal(38,0)")
-    # moved feeds the fused q4 accounting and counts — persist the tiny
-    # (i, c, c_new) label table so the chain runs once (r10, guide §5).
-    moved = (lbl.join(per_i, "i", "left")
-             .join(F.broadcast(tot), "c")
-             .crossJoin(F.broadcast(m2df))
-             .select("i", "c",
-                     F.when(F.col("b.g") > stay,
-                            F.col("b.cj")).otherwise(F.col("c"))
-                     .alias("c_new"))
-             .persist())
-    # r11 (guide §1.2): materialize — lj/lk (the q4 edge join's two
-    # label sides), tots and counts all read moved concurrently in the
-    # final action; unmaterialized, each reader replays the whole
-    # argmax chain.  The count itself is the n_nodes the query needs
-    # anyway conceptually, but stays a plain materializer here.
-    moved.count()
+    # moved (the tiny (i, c, c_new) label table) is read by lj/lk (the
+    # q4 edge join's two label sides), tots and counts: pinned, the
+    # argmax chain runs once
+    moved = pin(lbl.join(per_i, "i", "left")
+                .join(F.broadcast(tot), "c")
+                .crossJoin(F.broadcast(m2df))
+                .select("i", "c",
+                        F.when(F.col("b.g") > stay,
+                               F.col("b.cj")).otherwise(F.col("c"))
+                        .alias("c_new")))
 
     # r11 (VERDICT r10 #4): BOTH modularity accountings in one pass —
     # a stacked explode tags every edge/degree row 0=before/1=after,

@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from storagetapper_spark.plans.common import t
+from storagetapper_spark.plans.common import (copurchase_pairs,
+                                              order_baskets, t)
 from storagetapper_spark.operators.similarity import cosine
 
 QUERIES: dict = {}
@@ -530,37 +531,21 @@ def graph_pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     """Link-analysis scoring (the corpus-quality-weighting primitive:
     rank items by co-occurrence structure, as web pipelines rank
     domains by citation before sampling).  Graph: parts are nodes,
-    an edge joins parts bought in the same order (lineitem self-join
-    on orderkey — co-partitioned, pairs bounded by per-order basket
-    size, never all-pairs).  operators/graph.pagerank runs a fixed
-    5-iteration push: each round shuffles only the edge list, each
-    rank generation persisted before the last is retired.  Output is
+    an edge joins parts bought in the same order (per-order basket
+    pairs — bounded by basket size, never all-pairs).
+    operators/graph.pagerank runs a fixed 5-iteration push: each round
+    shuffles only the edge list, and the rounds form one lazy plan over
+    the persisted adjacency.  Output is
     pr scaled by node count (≈1.0 at uniform) rounded to 5dp — the
     fixed iteration count keeps it deterministic and oracle-checkable
     against a 5×-unrolled SQL recursion."""
     from storagetapper_spark.operators.graph import pagerank
 
-    # r10 (guide §2.4): build the co-purchase pairs from per-order
-    # basket ARRAYS — one groupBy(orderkey) shuffle + an in-map combo
-    # explode — instead of distinct + self-join, which shuffled the
-    # lineitem projection twice more (distinct exchange, then the join
-    # exchange).  collect_set dedups (orderkey, partkey) exactly like
-    # the former .distinct(); sort_array + slice keeps the strict
-    # id_a < id_b orientation; the pair SET is identical (measured:
-    # exceptAll both ways = 0 rows; full query bit-identical).  r11:
-    # the explode is size-guarded (hot-basket chunk spread, exact same
-    # pair multiset — operators/skew.guarded_pair_explode).
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    pairs = guarded_pair_explode(baskets, "ps", "id_a", "id_b").distinct()
-    # pairs are distinct with strict id_a < id_b, so the symmetrized
-    # edge set is unique by construction → dedup=False skips a shuffle;
-    # fixed 5 iterations → lazy single-plan mode (see pagerank docstring)
-    pr = pagerank(pairs, iterations=_PR_ITERS, damping=0.85,
-                  dedup=False, eager=False, scaled=True)
+    # pairs are distinct with strict pa < pb, so the symmetrized edge
+    # set is unique by construction → dedup=False skips a shuffle
+    pairs = copurchase_pairs(order_baskets(spark, sf)).select("pa", "pb")
+    pr = pagerank(pairs, "pa", "pb", iterations=_PR_ITERS, damping=0.85,
+                  dedup=False, scaled=True)
     return (pr.select(F.col("node").alias("part"),
                       F.round(F.col("pr"), 5).alias("pr_scaled"))
             .orderBy("part"))
@@ -608,31 +593,15 @@ def market_basket_rules(spark: SparkSession, sf: str) -> DataFrame:
     by basket size, never all-pairs); item counts broadcast back.  All
     metrics are closed-form doubles over exact BIGINT counts —
     engine-portable to the last bit before rounding."""
-    # r10: ONE persisted basket-array build feeds all three readouts
-    # (order count, item frequencies, pair counts).  The former shape
-    # evaluated the distinct-(order, part) subtree three times and paid
-    # a self-join exchange on top; baskets shuffle lineitem once, the
-    # basket row count IS the distinct-order count, and explode gives
-    # the per-item order frequencies.  All values identical
-    # (collect_set == per-order distinct; slice keeps pa < pb).
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
+    # ONE basket table feeds all three readouts: its row count IS the
+    # distinct-order count, its explode gives the per-item order
+    # frequencies, and copurchase_pairs' pin serves both from the cache
+    baskets = order_baskets(spark, sf)
     n_orders = baskets.agg(F.count(F.lit(1))
                            .cast("double").alias("n_orders"))
     item = (baskets.select(F.explode("ps").alias("l_partkey"))
             .groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item")))
-    # size-guarded pair explode (exact same pair multiset); its one
-    # action pins and materializes baskets (operators/skew.basket_units),
-    # so the single final action's four readers of baskets (pair units,
-    # the two item broadcasts, the order-count broadcast) all read the
-    # cache instead of racing to recompute the collect_set aggregate.
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    pairs = (guarded_pair_explode(baskets, "ps", "pa", "pb")
-             .groupBy("pa", "pb")
-             .agg(F.count(F.lit(1)).alias("n_ab"))
-             .filter(F.col("n_ab") >= 2))
+    pairs = copurchase_pairs(baskets).filter(F.col("n_ab") >= 2)
     na = item.select(F.col("l_partkey").alias("pa"),
                      F.col("n_item").alias("n_a"))
     nb = item.select(F.col("l_partkey").alias("pb"),
@@ -1412,22 +1381,9 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
     (then id), which provably bounds per-vertex wedge fan-out by
     out-degree ≤ √(2|E|); the id orientation here keeps the oracle
     simple on the thresholded (n_ab ≥ 2) basket graph."""
-    # r10 (guide §2.4): basket-array pair build — one groupBy(orderkey)
-    # shuffle instead of distinct + self-join (see graph_pagerank_
-    # copurchase); collect_set == per-order distinct so pair counts and
-    # the ≥2 threshold are identical.  r11: size-guarded explode (exact
-    # same pair multiset — operators/skew.guarded_pair_explode).
-    from storagetapper_spark.operators.skew import guarded_pair_explode
+    from storagetapper_spark.plans.graph2 import _edges
 
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    e = (guarded_pair_explode(baskets, "ps", "pa", "pb")
-         .groupBy("pa", "pb")
-         .agg(F.count(F.lit(1)).alias("n_ab"))
-         .filter(F.col("n_ab") >= 2)
-         .select("pa", "pb")
-         .persist())
+    e = _edges(spark, sf).persist()
     n_edges = e.count()  # eager: three branches below reuse the cache
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     wedges = e1.join(e2, F.col("e1.pb") == F.col("e2.pa"))
@@ -1633,27 +1589,13 @@ def graph_ppr_brand(spark: SparkSession, sf: str) -> DataFrame:
     oracle recursion replays bit-for-bit."""
     from storagetapper_spark.operators.graph import pagerank
 
-    # r10: basket-array pair build (see graph_pagerank_copurchase) —
-    # one orderkey shuffle replaces distinct + self-join; the per-pair
-    # co-occurrence counts (edge weights) are identical because
-    # collect_set per order == the former per-order distinct.  r11:
-    # size-guarded explode (exact same pair multiset —
-    # operators/skew.guarded_pair_explode).
-    from storagetapper_spark.operators.skew import guarded_pair_explode
-
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = (li.groupBy("l_orderkey")
-               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
-    pairs = (guarded_pair_explode(baskets, "ps", "id_a", "id_b")
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).cast("double").alias("w")))
+    pairs = copurchase_pairs(order_baskets(spark, sf))
     seeds = (t(spark, sf, "part")
              .filter(F.col("p_brand") == _PPR_BRAND)
              .select(F.col("p_partkey").alias("node"),
                      F.lit(1.0).alias("p0")))
-    pr = pagerank(pairs, iterations=_PPR_ITERS, damping=0.85,
-                  dedup=False, eager=False, weight_col="w",
-                  personalization=seeds)
+    pr = pagerank(pairs, "pa", "pb", iterations=_PPR_ITERS, damping=0.85,
+                  dedup=False, weight_col="n_ab", personalization=seeds)
     return (pr.select(F.col("node").alias("part"),
                       F.round(F.col("pr"), 6).alias("ppr"))
             .orderBy("part"))

@@ -40,7 +40,7 @@ def _reference_pagerank(edges, iterations, damping=0.85):
 def test_pagerank_matches_reference_model(spark, edges, iters):
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
     got = {r.node: r.pr for r in
-           pagerank(df, iterations=iters, eager=False).collect()}
+           pagerank(df, iterations=iters).collect()}
     want = _reference_pagerank(edges, iters)
     assert got.keys() == want.keys()
     for k in want:

@@ -120,3 +120,27 @@ def test_guard_observes_and_picks_shape(spark, caplog, rows, max_basket,
     assert ("xxhash64" in plan) == (n_over > 0)
     assert (f"pair guard on ps: max basket {max_basket}, "
             f"{n_over} over cap 10") in caplog.text
+
+
+def test_copurchase_pairs_match_python_combinations(spark, tmp_path):
+    """plans.common: order_baskets + copurchase_pairs count, per strict
+    pa < pb part pair, the orders holding both — duplicate lines of a
+    part within one order count once (the oracles' DISTINCT)."""
+    from collections import Counter
+
+    from storagetapper_spark.plans.common import (copurchase_pairs,
+                                                  order_baskets)
+
+    lines = [(1, 30), (1, 10), (1, 20), (1, 10),  # dup line for part 10
+             (2, 20), (2, 10), (3, 30), (3, 20), (3, 10), (3, 40),
+             (4, 50), (5, 40), (5, 30)]
+    (spark.createDataFrame(lines, "l_orderkey long, l_partkey long")
+     .write.parquet(str(tmp_path / "lineitem.parquet")))
+    got = {(r.pa, r.pb): r.n_ab for r in
+           copurchase_pairs(order_baskets(spark, str(tmp_path))).collect()}
+    per_order = {}
+    for o, p in lines:
+        per_order.setdefault(o, set()).add(p)
+    want = Counter(pair for parts in per_order.values()
+                   for pair in itertools.combinations(sorted(parts), 2))
+    assert got == dict(want)
