@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from storagetapper_spark.operators.merge import latest_state
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
-                                        join_uri, rmtree)
+                                        join_uri, read_for_keys)
 
 
 def read_changelog_stream(spark: SparkSession, path: str,
@@ -79,18 +79,17 @@ def read_changelog_stream_with_dlq(spark: SparkSession, path: str,
     return stream, route
 
 
-def _merge_into_state(spark: SparkSession, cur_path: str, batch_df: DataFrame,
-                      pk_cols: list[str], seqno_col: str,
-                      op_col: str) -> DataFrame:
-    """Latest state after ``batch_df``: one max-seqno window over the
-    stored state and the raw batch.  Tombstones stay in state
-    (drop_deleted=False) so a replayed older insert can never resurrect
-    a deleted key; readers filter."""
-    if exists(cur_path):
-        cur = spark.read.parquet(cur_path)
-        batch_df = cur.unionByName(batch_df.select(*cur.columns))
-    return latest_state(batch_df, pk_cols, seqno_col=seqno_col,
-                        op_col=op_col, drop_deleted=False)
+def _upsert(spark: SparkSession, cur_path: str, batch_df: DataFrame,
+            pk_cols: list[str], seqno_col: str, op_col: str,
+            batch_id: int) -> None:
+    """Commit the latest state: one max-seqno window over the stored rows
+    ``batch_df`` reaches and the raw batch.  Tombstones stay in state so
+    a replayed older insert can never resurrect a deleted key."""
+    rows, commit = read_for_keys(spark, cur_path, batch_df, pk_cols)
+    if rows is not None:
+        batch_df = rows.unionByName(batch_df.select(*rows.columns))
+    commit(latest_state(batch_df, pk_cols, seqno_col=seqno_col,
+                        op_col=op_col, drop_deleted=False), batch_id)
 
 
 def incremental_upsert_sink(cdc_stream: DataFrame, state_dir: str,
@@ -108,18 +107,21 @@ def incremental_upsert_sink(cdc_stream: DataFrame, state_dir: str,
     records, and max-seqno-wins is commutative/idempotent, the
     reference's exact recovery argument (pipe/kafka.go:43-53).
 
-    With Delta/Iceberg this is MERGE INTO; plain parquet here, so the
-    state rewrite is full-file — fine for dimension-sized state; for
-    100 TB fact state use a partitioned MERGE sink.
+    With Delta/Iceberg this is MERGE INTO.  Here the state is one flat
+    file while it fits one ``spark.sql.files.maxPartitionBytes`` split
+    and PK-hash-bucketed past that, so a batch reads and rewrites only
+    the buckets its keys hash into (``current`` above is then those
+    buckets).  The count follows the state's size
+    (``statefs.read_for_keys``).  One writer per ``state_dir`` (the
+    reference's per-table lease, state/lock.go).
     """
     spark = cdc_stream.sparkSession
     cur_path = join_uri(state_dir, "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if committed_batch(cur_path) < batch_id:
-            commit_state(_merge_into_state(spark, cur_path, batch_df,
-                                           pk_cols, seqno_col, op_col),
-                         cur_path, batch_id)
+            _upsert(spark, cur_path, batch_df, pk_cols, seqno_col, op_col,
+                    batch_id)
 
     writer = (cdc_stream.writeStream
               .foreachBatch(process_batch)
@@ -186,9 +188,8 @@ def gtid_guarded_upsert_sink(cdc_stream: DataFrame, state_dir: str,
         fresh = filter_unexecuted(batch_df, state, gtid_col=gtid_col
                                   ).localCheckpoint(eager=True)
         if not state_done:
-            commit_state(_merge_into_state(spark, cur_path, fresh, pk_cols,
-                                           seqno_col, op_col),
-                         cur_path, batch_id)
+            _upsert(spark, cur_path, fresh, pk_cols, seqno_col, op_col,
+                    batch_id)
         folded = fold_batch(state, fresh, gtid_col=gtid_col)
         commit_state(spark.createDataFrame([(folded.to_string(),)],
                                            "executed_gtid_set string"),
@@ -205,131 +206,25 @@ def gtid_guarded_upsert_sink(cdc_stream: DataFrame, state_dir: str,
 
 def read_state(spark: SparkSession, state_dir: str,
                op_col: str = "op") -> DataFrame:
-    """Consumer view of the materialized state: tombstones filtered."""
+    """Consumer view of the state: tombstones and bucket column dropped."""
     return (spark.read.parquet(join_uri(state_dir, "current"))
-            .filter(F.col(op_col) != "delete"))
-
-
-def partitioned_upsert_sink(cdc_stream: DataFrame, state_dir: str,
-                            checkpoint_dir: str, pk_cols: list[str],
-                            n_buckets: int = 256,
-                            seqno_col: str = "seqno", op_col: str = "op",
-                            trigger_available_now: bool = True):
-    """Scale-path state materialization: MERGE-style upsert that rewrites
-    only the hash buckets a micro-batch touches.
-
-    ``incremental_upsert_sink`` rewrites the whole state per batch —
-    O(|state|) per trigger, fine for dimension-sized state, fatal at
-    100 TB.  Here the state table is hash-partitioned on
-    ``pmod(xxhash64(pk), n_buckets)``:
-
-      1. resolve the batch to one row per PK (max seqno),
-      2. collect the DISTINCT bucket ids it touches (driver sees ≤
-         n_buckets ints, never rows),
-      3. read only those partition directories (partition pruning),
-         merge seqno-guarded, and
-      4. overwrite only those partitions (dynamic partition overwrite).
-
-    Per-trigger cost is O(|batch| + touched_buckets × bucket_size) —
-    independent of total state size for key-local workloads.  Size
-    ``n_buckets`` so a bucket fits an executor: ~state_size / 1 GiB.
-    This is exactly what Delta/Iceberg MERGE does under the hood; plain
-    parquet keeps the engine dependency-free (swap in MERGE INTO when a
-    table format is available).  Single-writer per state_dir (the
-    reference's per-table lease, state/lock.go) is assumed.
-    """
-    spark = cdc_stream.sparkSession
-    cur_path = join_uri(state_dir, "current")
-    bucket = F.pmod(F.xxhash64(*pk_cols), F.lit(n_buckets)).cast("int")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        resolved = (latest_state(batch_df, pk_cols, seqno_col=seqno_col,
-                                 op_col=op_col, drop_deleted=False)
-                    .withColumn("_bucket", bucket))
-        resolved.persist()
-        touched = [r._bucket for r in
-                   resolved.select("_bucket").distinct().collect()]
-        if exists(cur_path):
-            cur = (spark.read
-                   .option("basePath", cur_path)
-                   .parquet(*[join_uri(cur_path, f"_bucket={b}")
-                              for b in touched
-                              if exists(join_uri(cur_path, f"_bucket={b}"))]
-                            or [cur_path])
-                   .filter(F.col("_bucket").isin(touched)))
-            merged = latest_state(
-                cur.unionByName(resolved.select(*cur.columns)),
-                pk_cols, seqno_col=seqno_col, op_col=op_col,
-                drop_deleted=False).withColumn("_bucket", bucket)
-        else:
-            merged = resolved
-        # stage-then-commit: Spark forbids overwriting a path read in the
-        # same plan; the staged copy is only the touched buckets (the
-        # same copy-on-write amplification a Delta MERGE pays).
-        stage = join_uri(state_dir, f"stage_{batch_id}")
-        merged.repartition("_bucket").write.mode("overwrite").parquet(stage)
-        (spark.read.parquet(stage)
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("_bucket")
-         .parquet(cur_path))
-        resolved.unpersist()
-        rmtree(stage)
-
-    writer = (cdc_stream.writeStream
-              .foreachBatch(process_batch)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("update"))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def read_partitioned_state(spark: SparkSession, state_dir: str,
-                           op_col: str = "op") -> DataFrame:
-    """Consumer view of the bucket-partitioned state (tombstones
-    filtered, bucket column dropped)."""
-    return (spark.read.parquet(join_uri(state_dir, "current"))
-            .filter(F.col(op_col) != "delete")
-            .drop("_bucket"))
+            .filter(F.col(op_col) != "delete").drop("_bucket"))
 
 
 def propagate_deletes(spark: SparkSession, state_dir: str,
-                      keys: DataFrame, pk_cols: list[str],
-                      n_buckets: int = 256) -> int:
-    """Targeted hard-delete from the bucket-partitioned state (the
-    GDPR/right-to-be-forgotten path): physically remove the given keys,
-    rewriting ONLY the buckets they hash into — O(touched buckets), not
-    O(state).  Unlike a tombstone upsert, the rows are gone from disk.
-    Returns the number of rows removed."""
-    cur_path = join_uri(state_dir, "current")
-    bucket = F.pmod(F.xxhash64(*pk_cols), F.lit(n_buckets)).cast("int")
-    keyed = keys.select(*pk_cols).distinct().withColumn("_bucket", bucket)
-    keyed.persist()
-    touched = [r._bucket for r in keyed.select("_bucket").distinct().collect()]
-    dirs = [join_uri(cur_path, f"_bucket={b}") for b in touched
-            if exists(join_uri(cur_path, f"_bucket={b}"))]
-    if not dirs:
-        keyed.unpersist()
-        return 0
-    cur = spark.read.option("basePath", cur_path).parquet(*dirs)
-    before = cur.count()
-    kept = cur.join(F.broadcast(keyed.drop("_bucket")), pk_cols, "left_anti")
-    stage = join_uri(state_dir, "stage_delete")
-    kept.repartition("_bucket").write.mode("overwrite").parquet(stage)
-    staged = spark.read.parquet(stage)
-    removed = before - staged.count()
-    (staged.write.mode("overwrite")
-           .option("partitionOverwriteMode", "dynamic")
-           .partitionBy("_bucket").parquet(cur_path))
-    keyed.unpersist()
-    # dynamic overwrite only replaces buckets PRESENT in the staged
-    # data; a bucket whose every row was deleted must be removed by hand
-    remaining = {r._bucket for r in staged.select("_bucket").distinct().collect()}
-    for b in touched:
-        if b not in remaining:
-            rmtree(join_uri(cur_path, f"_bucket={b}"))
-    rmtree(stage)
+                      keys: DataFrame, pk_cols: list[str]) -> int:
+    """Hard delete (the GDPR path): physically remove the keys' rows from
+    the upsert state, rewriting only the buckets they hash into (or the
+    flat table); an emptied bucket goes.  The commit keeps the table's
+    batch id, so its stream neither skips nor replays a batch.  Returns
+    the number of rows removed."""
+    keys = F.broadcast(keys.select(*pk_cols).distinct())
+    rows, commit = read_for_keys(spark, join_uri(state_dir, "current"),
+                                 keys, pk_cols, grow=False)
+    removed = (rows.join(keys, pk_cols, "left_semi").count()
+               if rows is not None else 0)
+    if removed:
+        commit(rows.join(keys, pk_cols, "left_anti"), None)
     return removed
 
 
@@ -344,7 +239,7 @@ def publish_state_bucketed(spark: SparkSession, state_dir: str,
     scan plan and re-shuffling the whole state per consumer."""
     from storagetapper_spark.operators.skew import write_bucketed
 
-    write_bucketed(read_partitioned_state(spark, state_dir),
+    write_bucketed(read_state(spark, state_dir),
                    table_name, pk_col, n_buckets=n_buckets)
     return spark.table(table_name)
 

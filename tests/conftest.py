@@ -73,11 +73,26 @@ def assert_only_current():
     """Check a state table's directory after its sink ran: it holds
     ``current`` (plus any ``others``, e.g. side tables) and no version or
     staging directory, and ``current`` carries the commit marker of
-    ``batch_id`` (statefs.commit_state)."""
+    ``batch_id`` (statefs.commit_state).  A bucketed ``current`` must
+    record one bucket count, hold no data file outside its buckets, and
+    every bucket directory must be below the count and hold data.
+    Returns the bucket count (1: flat)."""
     def check(table_dir, batch_id, others=()):
         names = sorted(os.listdir(table_dir))
         assert names == sorted(["current", *others]), names
-        marks = [n for n in os.listdir(os.path.join(table_dir, "current"))
-                 if n.startswith("_batch_")]
+        cur = os.path.join(table_dir, "current")
+        marks = [n for n in os.listdir(cur) if n.startswith("_batch_")]
         assert marks == [f"_batch_{batch_id}"], marks
+        counts = [int(n[len("_buckets_"):]) for n in os.listdir(cur)
+                  if n.startswith("_buckets_")]
+        buckets = [n for n in os.listdir(cur) if n.startswith("_bucket=")]
+        if not counts and not buckets:
+            return 1
+        assert len(counts) == 1, counts
+        assert not [n for n in os.listdir(cur) if n.endswith(".parquet")]
+        for b in buckets:
+            assert 0 <= int(b[len("_bucket="):]) < counts[0], b
+            assert [n for n in os.listdir(os.path.join(cur, b))
+                    if n.endswith(".parquet")], b
+        return counts[0]
     return check

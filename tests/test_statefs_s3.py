@@ -11,7 +11,8 @@ body in a 200 CompleteMultipartUpload), so objects are seeded via boto3
 and the read/exists/delete side — what the sinks' replay guards and
 cleanup actually use — is verified through statefs, as is the state
 commit protocol's recovery: promote by copy + delete (S3 has no
-directory rename), the batch marker, and the replay no-op.
+directory rename), the batch marker, and the replay no-op, for flat
+tables and for bucketed ones (per-bucket promote, bucket-count change).
 """
 
 import io
@@ -174,3 +175,76 @@ def test_missing_current_recovers_over_s3(s3_env):
     assert _keys(c, "recoverbkt", "st/") == [
         "gtid_current/_SUCCESS", "gtid_current/_batch_4",
         "gtid_current/part-0.parquet"]
+
+
+def _pks(key):
+    import pyarrow.parquet as pq
+
+    from storagetapper_spark.sinks.files import _resolve_fs
+
+    f, p = _resolve_fs(key)
+    return sorted(pq.read_table(p, filesystem=f).column("pk").to_pylist())
+
+
+def test_bucket_promote_recovery_over_s3(s3_env, spark):
+    """Crash part-way through a bucketed version's per-bucket promote
+    over s3a://: bucket 0 was copied and its source half deleted (its
+    ``_touched`` mark already gone), bucket 1 is still pre-batch, bucket
+    3 is emptied by the batch, bucket 2 is untouched.  Recovery copies
+    bucket 1, removes bucket 3, leaves 0 and 2 alone and moves the
+    marker last."""
+    from storagetapper_spark.statefs import commit_state, committed_batch
+
+    c = s3_env
+    c.create_bucket(Bucket="bucketbkt")
+    for key, body in [
+            ("current/_SUCCESS", b""), ("current/_batch_1", b""),
+            ("current/_buckets_4", b""),
+            ("current/_bucket=0/part-0.parquet", _parquet_bytes([1, 2])),
+            ("current/_bucket=1/part-0.parquet", _parquet_bytes([3])),
+            ("current/_bucket=2/part-0.parquet", _parquet_bytes([5])),
+            ("current/_bucket=3/part-0.parquet", _parquet_bytes([7])),
+            ("v2/_SUCCESS", b""),
+            ("v2/_bucket=0/part-0.parquet", _parquet_bytes([99])),
+            ("v2/_bucket=1/_touched", b""),
+            ("v2/_bucket=1/part-0.parquet", _parquet_bytes([3, 4])),
+            ("v2/_bucket=3/_touched", b"")]:
+        c.put_object(Bucket="bucketbkt", Key="st/t/" + key, Body=body)
+
+    cur = "s3a://bucketbkt/st/t/current"
+    assert committed_batch(cur) == 2
+    assert _keys(c, "bucketbkt", "st/t/") == [
+        "current/_SUCCESS", "current/_batch_2",
+        "current/_bucket=0/part-0.parquet",
+        "current/_bucket=1/_touched", "current/_bucket=1/part-0.parquet",
+        "current/_bucket=2/part-0.parquet", "current/_buckets_4"]
+    assert _pks(cur + "/_bucket=0/part-0.parquet") == [1, 2]
+    assert _pks(cur + "/_bucket=1/part-0.parquet") == [3, 4]
+    assert not commit_state(spark.range(1), cur, 2)
+
+
+def test_bucket_count_change_recovery_over_s3(s3_env):
+    """Crash while a count change (2 → 4 buckets, a whole-table commit)
+    was deleting the old current over s3a://: some old-hashing files and
+    the old marker survive.  The complete version wins whole: no file of
+    the old hashing is left."""
+    from storagetapper_spark.statefs import committed_batch
+
+    c = s3_env
+    c.create_bucket(Bucket="countbkt")
+    seed = [("current/_batch_2", b""), ("current/_buckets_2", b""),
+            ("current/_bucket=1/part-0.parquet", _parquet_bytes([1, 3])),
+            ("v3/_SUCCESS", b""), ("v3/_buckets_4", b"")]
+    seed += [(f"v3/_bucket={b}/part-0.parquet", _parquet_bytes([b]))
+             for b in range(4)]
+    for key, body in seed:
+        c.put_object(Bucket="countbkt", Key="st/t/" + key, Body=body)
+
+    cur = "s3a://countbkt/st/t/current"
+    assert committed_batch(cur) == 3
+    assert _keys(c, "countbkt", "st/t/") == [
+        "current/_SUCCESS", "current/_batch_3",
+        *[f"current/_bucket={b}/part-0.parquet" for b in range(4)],
+        "current/_buckets_4"]
+    assert [_pks(f"{cur}/_bucket={b}/part-0.parquet") for b in range(4)] \
+        == [[0], [1], [2], [3]]

@@ -1,6 +1,9 @@
 """Audit physical plans of every registry query at a given SF: join
 strategies, pushed filters, exchanges, Python evaluation nodes.
 
+Every query is planned from an empty cache (``clearCache()`` first), so
+a row does not depend on what earlier queries left persisted.
+
 Usage: python tools/audit_plans.py [sf_dir]
 """
 
@@ -23,6 +26,7 @@ def main():
 
     rows = []
     for name, fn in sorted(QUERIES.items()):
+        spark.catalog.clearCache()
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
@@ -44,9 +48,12 @@ def main():
             flags.append(f"SMJ×{stats['smj']}")
         if stats["cart"]:
             flags.append(f"CARTESIAN×{stats['cart']}")
+        if stats["bnl"]:
+            flags.append(f"BNL×{stats['bnl']}")
         if plan.count("BatchEvalPython"):
             flags.append("ROW-PYTHON")
-        summary = (f"bhj={stats['bhj']} exch={stats['exch']} "
+        summary = (f"bhj={stats['bhj']} bnl={stats['bnl']} "
+                   f"exch={stats['exch']} "
                    f"pushed={stats['pushed']} py={stats['py']}"
                    + (" ⚠ " + ",".join(flags) if flags else ""))
         rows.append((name, summary))

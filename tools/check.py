@@ -112,6 +112,9 @@ def main():
             results[name] = ("SPARK_ERROR", str(e).split("\n")[0][:200])
             print(f"✗ {name}: SPARK_ERROR {results[name][1]}")
             continue
+        finally:
+            # a query's leftover pins must not serve or slow the next one
+            spark.catalog.clearCache()
         if name not in oracles:
             results[name] = ("ROWS_ONLY", len(srows))
             print(f"~ {name}: rows-only, {len(srows)} rows ({time.time()-t0:.1f}s)")
