@@ -1,5 +1,6 @@
-"""URI-aware filesystem helpers for stateful streaming sinks, and the
-one commit protocol their state tables share.
+"""URI-aware filesystem helpers for stateful streaming sinks, the one
+commit protocol their state tables share, and the one writer of their
+batch-delta logs.
 
 ``os.path`` / ``shutil`` work only on the driver's local disk, but a
 100 TB deployment keeps state on ``s3a://`` or ``hdfs://`` (the
@@ -64,6 +65,32 @@ rewrite that applies no batch (a hard delete) commits at the table's
 own batch id.  After a commit the table's directory holds only
 ``current``.  No sink may hold a lazy DataFrame over ``current`` across
 that table's own commit: the files it lists move away.
+
+Batch-delta logs
+----------------
+The second store is append-by-batch, separate from the
+``commit_state`` tables: a log directory of ``_batch=<id>``
+partitions (split further by any extra partition columns) whose fold
+over all batches — a sum, ``bit_or``, max or union — is the live
+state.  Nothing is promoted and no marker is kept.  Every log is
+written by ``write_delta(df, log_dir, batch_id, *partition_cols)``:
+
+1. An identical replay of a batch (foreachBatch is at-least-once)
+   replaces exactly its own partitions: the write is an overwrite with
+   the per-write dynamic ``partitionOverwriteMode`` option, so every
+   other batch's partitions stay as they are.  It never reads or sets
+   the session conf; a foreachBatch body runs on the stream's cloned
+   session, so a conf set on another session is not seen and the
+   write falls back to a static overwrite of the whole log.
+2. An empty delta writes nothing, not even the log directory.  A
+   replay whose delta is now empty therefore leaves that batch's
+   earlier partitions in place; curation relies on this (a replayed
+   batch finds its own hashes already accepted).  A reprocessing that
+   can shrink a batch must ``rmtree`` the batch's partition first.
+3. ``delta_batches`` lists a log's batch ids.  A compaction writes its
+   fold under the newest folded batch id before it deletes the older
+   partitions, so a crash between the two leaves rows an idempotent
+   fold (max, ``bit_or``) absorbs.
 """
 
 from __future__ import annotations
@@ -75,6 +102,7 @@ from storagetapper_spark.sinks.files import _resolve_fs
 
 _MARKER = re.compile(r"_batch_(-?\d+)")
 _COUNT = re.compile(r"_buckets_(\d+)")
+_DELTA = re.compile(r"_batch=(-?\d+)")
 
 
 def join_uri(base: str, *parts: str) -> str:
@@ -297,3 +325,24 @@ def read_for_keys(spark, current: str, keys, pk_cols: list[str],
         return commit_state(df, current, batch_id, nxt, touched)
 
     return rows, commit
+
+
+def write_delta(df, log_dir: str, batch_id: int, *partition_cols: str) -> None:
+    """Write ``df`` as batch ``batch_id``'s delta in the batch-delta log
+    ``log_dir``, partitioned by ``_batch`` and then ``partition_cols``
+    (rules in the module docstring)."""
+    from pyspark.sql import functions as F
+
+    fresh = not exists(log_dir)
+    (df.withColumn("_batch", F.lit(int(batch_id)))
+     .write.mode("overwrite").partitionBy("_batch", *partition_cols)
+     .option("partitionOverwriteMode", "dynamic").parquet(log_dir))
+    if fresh and not delta_batches(log_dir):
+        _delete(*_resolve_fs(log_dir))
+
+
+def delta_batches(log_dir: str) -> list[int]:
+    """The batch ids in the batch-delta log ``log_dir``, ascending."""
+    f, p = _resolve_fs(log_dir)
+    return sorted(int(m[1]) for i in _children(f, p)
+                  if (m := _DELTA.fullmatch(i.base_name)))

@@ -4,14 +4,13 @@ a live event feed.
 The absorbing-chain recursion (plans/relational14.absorption_from_counts)
 is a pure function of the (src, dst) TRANSITION COUNT table, and
 counts are LINEAR — so the live state is the fold of per-batch
-transition-count deltas, the same exactly-once discipline as
-streaming/agreement.py (``_batch=<id>`` dynamic-partition overwrite;
-replays replace their own delta).  Per batch the transition write is
+transition-count deltas, kept in a batch-delta log (statefs module
+docstring, "Batch-delta logs").  Per batch the transition write is
 |types|^2 <= 25 rows regardless of batch size.
 
 Batch-boundary transitions ARE counted (round-8 ADVICE fix): alongside
-the per-batch delta the sink keeps a per-user LAST-EVENT table
-(user_id, ts, event_id, event_type, partitioned by ``_batch``), and
+the per-batch delta the sink keeps a per-user LAST-EVENT log
+(user_id, ts, event_id, event_type, a second batch-delta log), and
 each ingest joins the folded last-event state of all EARLIER batches
 against this batch's per-user FIRST event to emit the straddling
 (src, dst) pairs.  Because the boundary join reads only partitions
@@ -80,37 +79,36 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     """Write this batch's transition delta — within-batch lead() pairs
     PLUS cross-boundary pairs against the carried last-event state —
     and this batch's per-user last events (both idempotent per batch
-    id via dynamic-partition overwrite)."""
+    id)."""
     delta = batch_transitions(batch)
     boundary = _boundary_transitions(spark, batch, batch_id, state_dir)
     if boundary is not None:
         delta = (delta.unionByName(boundary)
                  .groupBy("src", "dst").agg(F.sum("n").alias("n")))
-    (delta.withColumn("_batch", F.lit(batch_id))
-     .write.mode("overwrite").partitionBy("_batch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(statefs.join_uri(state_dir, _TRANSITIONS)))
-    (_batch_last_events(batch).withColumn("_batch", F.lit(batch_id))
-     .write.mode("overwrite").partitionBy("_batch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(statefs.join_uri(state_dir, _LAST_EVENTS)))
+    statefs.write_delta(delta, statefs.join_uri(state_dir, _TRANSITIONS),
+                        batch_id)
+    statefs.write_delta(_batch_last_events(batch),
+                        statefs.join_uri(state_dir, _LAST_EVENTS), batch_id)
 
 
 def compact_last_events(spark: SparkSession, state_dir: str,
                         upto_batch: int) -> None:
     """Log-compact the last-event state: fold every partition with
     ``_batch <= upto_batch`` into ONE per-user row stored under
-    ``_batch=upto_batch``, then drop the superseded partitions.  The
-    folded content any LATER batch's boundary join reads is identical
+    ``_batch=upto_batch``, then drop the older partitions.  The folded
+    content any LATER batch's boundary join reads is identical
     (per-user max over the same rows), so ingest behavior is
     unchanged; what compaction gives up is replayability of batches
     <= upto_batch — so only ever compact up to the last COMMITTED
     checkpoint (the same contract as the reference's binlog-position
-    GC, cdc_tombstone_gc_plan).  Keeps the state bounded by |users|
-    plus one partition per batch since the last compaction, instead of
-    growing with total batch count."""
+    GC, cdc_tombstone_gc_plan).  The fold lands before any partition
+    is deleted, so a crash anywhere leaves rows the per-user max
+    absorbs.  Keeps the state bounded by |users| plus one partition
+    per batch since the last compaction, instead of growing with total
+    batch count."""
     last_dir = statefs.join_uri(state_dir, _LAST_EVENTS)
-    if not statefs.exists(last_dir):
+    batches = statefs.delta_batches(last_dir)
+    if not batches or batches[0] > upto_batch:
         return
     folded = (spark.read.parquet(last_dir)
               .filter(F.col("_batch") <= F.lit(upto_batch))
@@ -121,19 +119,11 @@ def compact_last_events(spark: SparkSession, state_dir: str,
                       F.col("e.event_id").alias("event_id"),
                       F.col("e.event_type").alias("event_type"))
               .localCheckpoint(eager=True))  # sever lineage from the
-    # paths we are about to delete (read-overwrite hazard)
-    for name in [f for f in _list_batch_partitions(spark, last_dir)
-                 if f <= upto_batch]:
-        statefs.rmtree(statefs.join_uri(last_dir, f"_batch={name}"))
-    (folded.withColumn("_batch", F.lit(upto_batch))
-     .write.mode("overwrite").partitionBy("_batch")
-     .option("partitionOverwriteMode", "dynamic").parquet(last_dir))
-
-
-def _list_batch_partitions(spark: SparkSession, last_dir: str) -> list[int]:
-    rows = (spark.read.parquet(last_dir)
-            .select("_batch").distinct().collect())
-    return [int(r["_batch"]) for r in rows]
+    # paths we are about to overwrite and delete (read-overwrite hazard)
+    statefs.write_delta(folded, last_dir, upto_batch)
+    for b in batches:
+        if b < upto_batch:
+            statefs.rmtree(statefs.join_uri(last_dir, f"_batch={b}"))
 
 
 def current_transitions(spark: SparkSession, state_dir: str) -> DataFrame:

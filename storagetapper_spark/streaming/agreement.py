@@ -1,12 +1,9 @@
 """Streaming rater-agreement monitor: Cohen's kappa over a live feed.
 
 The 3x3 confusion-cell counts behind kappa are LINEAR, so the live
-state is the fold of per-batch cell deltas — the same exactly-once
-delta discipline as streaming/cms.py and streaming/target_encoding.py
-(deltas land under ``_batch=<id>`` partitions with dynamic partition
-overwrite, so an at-least-once replay replaces its own delta instead
-of double counting).  Per batch the write is <= 9 rows regardless of
-batch size.
+state is the fold of per-batch cell deltas, kept in a batch-delta log
+(statefs module docstring, "Batch-delta logs").  Per batch the write
+is <= 9 rows regardless of batch size.
 
 Serving routes the folded cells through the REGISTERED query's own
 expression (plans/mleval2.kappa_from_cells), so the streaming path
@@ -22,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.plans.mleval2 import kappa_from_cells, kappa_raters
 
 
@@ -33,20 +31,9 @@ def batch_cells(rows: DataFrame) -> DataFrame:
 
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str) -> None:
-    """Write this batch's cell delta (idempotent per batch id).
-
-    Idempotence contract: dynamic partition overwrite replaces only
-    the partitions PRESENT in the replayed delta — exactly right for
-    at-least-once redelivery of the identical batch (the supported
-    contract, matching streaming/cms.py and target_encoding.py), but a
-    replay that now produces an EMPTY delta writes no partition and
-    leaves the stale ``_batch`` rows in place.  A reprocessing that can
-    shrink a batch to zero rows must statefs.rmtree the partition
-    first."""
-    (batch_cells(batch).withColumn("_batch", F.lit(batch_id))
-     .write.mode("overwrite").partitionBy("_batch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(state_dir))
+    """Write this batch's cell delta (idempotent per batch id; an
+    empty replay keeps the old delta, see statefs "Batch-delta logs")."""
+    statefs.write_delta(batch_cells(batch), state_dir, batch_id)
 
 
 def current_cells(spark: SparkSession, state_dir: str) -> DataFrame:

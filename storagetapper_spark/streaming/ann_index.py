@@ -8,8 +8,8 @@ Partitioning by cell is the point: a search probes n_probe cells, so
 the scan prunes to n_probe/n_centroids of the corpus via partition
 pruning — no bespoke index format, just layout.
 
-Replay safety: batches write with DYNAMIC partition overwrite into
-their own `_batch=N` partition, so a checkpoint-replayed batch
+The cells are a batch-delta log split by cell (statefs module
+docstring, "Batch-delta logs"), so a checkpoint-replayed batch
 replaces itself instead of appending duplicates
 (tests/test_ann_index_stream.py proves idempotence).
 
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storagetapper_spark.operators.similarity import cosine
-from storagetapper_spark.statefs import join_uri
+from storagetapper_spark.statefs import join_uri, write_delta
 
 
 def _normed(C) -> np.ndarray:
@@ -63,16 +63,8 @@ def apply_ingest_batch(spark, batch_df: DataFrame, index_dir: str,
                        centroids, batch_id: int, id_col: str = "vec_id",
                        vec_col: str = "embedding") -> None:
     """Pure batch form (the sink wraps it; tests call it directly)."""
-    assigned = (assign_cells(batch_df, centroids, id_col, vec_col)
-                .withColumn("_batch", F.lit(int(batch_id))))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (assigned.write.mode("overwrite")
-         .partitionBy("_batch", "centroid_id")
-         .parquet(join_uri(index_dir, "cells")))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_delta(assign_cells(batch_df, centroids, id_col, vec_col),
+                join_uri(index_dir, "cells"), batch_id, "centroid_id")
 
 
 def ivf_ingest_sink(stream: DataFrame, index_dir: str, checkpoint_dir: str,
@@ -80,13 +72,11 @@ def ivf_ingest_sink(stream: DataFrame, index_dir: str, checkpoint_dir: str,
                     vec_col: str = "embedding",
                     trigger_available_now: bool = True):
     """foreachBatch maintenance of the cell-partitioned index."""
-    spark = stream.sparkSession
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        apply_ingest_batch(spark, batch_df, index_dir, centroids,
-                           batch_id, id_col, vec_col)
+        apply_ingest_batch(batch_df.sparkSession, batch_df, index_dir,
+                           centroids, batch_id, id_col, vec_col)
 
     writer = (stream.writeStream
               .foreachBatch(process_batch)

@@ -9,11 +9,9 @@ a definite "no" skips the state lookup entirely; a "maybe" falls
 through to the exact path, so replay/duplication never corrupts
 results (no false negatives; false positives only cost a lookup).
 
-Exactly-once discipline: per-batch deltas land under ``_batch=<id>``
-partitions with per-write dynamic partition overwrite, so an
-at-least-once replay replaces its own delta.  Per batch the write is
-<= m/64 word rows regardless of batch size; the fold reads
-m/64 x n_batches rows.
+The per-batch deltas are a batch-delta log (statefs module
+docstring, "Batch-delta logs").  Per batch the write is <= m/64 word
+rows regardless of batch size; the fold reads m/64 x n_batches rows.
 
 Positions are salted md5 (not xxhash64) so tests — and any
 cross-engine audit, cf. sketch_bloom_fp_audit in plans/sketches.py —
@@ -25,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.operators.bloom import _MASKS, md5_positions
 
 _M_BITS = 4096
@@ -50,11 +49,7 @@ def _batch_words(batch: DataFrame, key_col: str) -> DataFrame:
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str, key_col: str = "doc_id") -> None:
     """Write this batch's bitmap word delta (idempotent per id)."""
-    delta = _batch_words(batch, key_col)
-    (delta.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(state_dir))
+    statefs.write_delta(_batch_words(batch, key_col), state_dir, batch_id)
 
 
 def current_filter(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -2,12 +2,10 @@
 documents stream in; the live sketch is the sum of deltas (count-min is
 linear, so batch-wise addition IS the sketch of the union).
 
-Same exactly-once discipline as streaming/importance.py: deltas land
-under ``_batch=<id>`` partitions with dynamic partition overwrite, so
-an at-least-once replay replaces its own delta.  Per batch the write is
-≤ d·w (= 1024) counter rows regardless of batch size; the fold reads
-1024 × n_batches rows and a compaction pass can collapse them any
-time.
+The deltas are a batch-delta log (statefs module docstring,
+"Batch-delta logs").  Per batch the write is ≤ d·w (= 1024) counter
+rows regardless of batch size; the fold reads 1024 × n_batches rows
+and a compaction pass can collapse them any time.
 """
 
 from __future__ import annotations
@@ -15,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.plans.sketches import (_CMS_D, _cell_dyn)
 
 
@@ -33,12 +32,7 @@ def _batch_cells(docs: DataFrame) -> DataFrame:
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str) -> None:
     """Write this batch's CMS cell-count delta (idempotent per id)."""
-    delta = _batch_cells(batch)
-    # per-write dynamic overwrite — never mutate the session conf
-    (delta.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(state_dir))
+    statefs.write_delta(_batch_cells(batch), state_dir, batch_id)
 
 
 def current_sketch(spark: SparkSession, state_dir: str) -> DataFrame:

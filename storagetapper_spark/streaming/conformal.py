@@ -10,15 +10,16 @@ is a grid-sized cumulative scan, never a corpus sort.
 
 Incremental == batch bit-exactly: the recovered threshold equals
 plans/mleval.ml_conformal_split's two-pass-rank tau on the same rows
-(tested).  Exactly-once: per-batch deltas land under ``_batch=<id>``
-partitions with per-write dynamic overwrite, so replays replace their
-own delta.
+(tested).  The per-batch deltas are a batch-delta log (statefs module
+docstring, "Batch-delta logs").
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from storagetapper_spark import statefs
 
 
 def batch_alpha_grid(batch: DataFrame) -> DataFrame:
@@ -34,11 +35,7 @@ def batch_alpha_grid(batch: DataFrame) -> DataFrame:
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str) -> None:
     """Write this batch's grid delta (idempotent per id)."""
-    (batch_alpha_grid(batch)
-     .withColumn("_batch", F.lit(batch_id))
-     .write.mode("overwrite").partitionBy("_batch")
-     .option("partitionOverwriteMode", "dynamic")
-     .parquet(state_dir))
+    statefs.write_delta(batch_alpha_grid(batch), state_dir, batch_id)
 
 
 def current_grid(spark: SparkSession, state_dir: str) -> DataFrame:

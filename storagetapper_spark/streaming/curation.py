@@ -17,10 +17,11 @@ allows a join against the pipeline's own output):
 3. LEFT ANTI join against the accepted-hashes state table —
    cross-batch dedup with state bounded by distinct ACCEPTED docs,
    not raw stream volume,
-4. append the survivors under `_batch=<id>` partitions: at-least-once
-   replays of a batch overwrite their own partition (dynamic partition
-   overwrite), so output is exactly-once per batch id — the same
-   commit discipline as streaming/semantic.py.
+4. append the survivors, and their hashes, to batch-delta logs
+   (statefs module docstring, "Batch-delta logs"), so output is
+   exactly-once per batch id.  A replayed batch finds its own hashes
+   accepted, so its delta is empty and the first run's partitions
+   stay.
 
 State and output live under one root; all filesystem access goes
 through pyarrow.fs (statefs) so `s3a://`-style roots work unchanged.
@@ -35,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from storagetapper_spark import statefs
 
 MIN_TOKENS = 10
 ACCEPT_LANGS = ("en",)
@@ -57,8 +60,6 @@ def curate_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     whose shingle overlap reaches the contamination threshold are
     rejected per batch (operators/contamination.decontaminate — the
     benchmark shingle set broadcasts, the batch scans once)."""
-    from storagetapper_spark.sinks.files import _resolve_fs
-
     n_in = batch.count()
     gated = quality_gate(batch)
     if benchmark is not None:
@@ -75,11 +76,8 @@ def curate_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                .select("h", "_row.*"))
     n_gated = winners.count()
 
-    hashes_path = f"{root}/accepted_hashes"
-    fs, fs_path = _resolve_fs(hashes_path)
-    info = fs.get_file_info(fs_path)
-    import pyarrow.fs as pafs
-    if info.type != pafs.FileType.NotFound:
+    hashes_path = statefs.join_uri(root, "accepted_hashes")
+    if statefs.exists(hashes_path):
         seen = spark.read.parquet(hashes_path).select("h")
         fresh = winners.join(seen, "h", "left_anti")
     else:
@@ -87,15 +85,8 @@ def curate_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     fresh = fresh.localCheckpoint(eager=True)  # pin BEFORE state writes
     n_fresh = fresh.count()
 
-    # per-write dynamic overwrite — never mutate the session conf
-    (fresh.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(f"{root}/curated"))
-    (fresh.select("h").withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(hashes_path))
+    statefs.write_delta(fresh, statefs.join_uri(root, "curated"), batch_id)
+    statefs.write_delta(fresh.select("h"), hashes_path, batch_id)
     return {"batch_id": batch_id, "n_in": n_in, "n_gated": n_gated,
             "n_accepted": n_fresh}
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
-                                        join_uri)
+                                        join_uri, write_delta)
 
 
 def train_baseline(df: DataFrame, series_col: str = "event_type",
@@ -124,20 +124,15 @@ def cusum_sink(event_stream: DataFrame, baseline: DataFrame,
         # Series absent from the frozen baseline (a new event_type
         # appearing mid-stream) can't be monitored — surface them in a
         # side table instead of silently dropping them (ADVICE r3).
-        # Batch-partitioned dynamic overwrite, NOT append: an
-        # at-least-once replay that crashed after this write but before
-        # the state commit replaces its own _batch partition instead of
-        # duplicating rows (ADVICE r4 — the replay guard above only
-        # protects the folded state, not this side table).
+        # A batch-delta log, NOT an append: a replay that crashed after
+        # this write but before the state commit replaces its own
+        # delta instead of duplicating rows (ADVICE r4 — the replay
+        # guard above only protects the folded state, not this table).
         unmatched = (daily.select(series_col).distinct()
                      .join(F.broadcast(base.select(series_col)),
                            series_col, "left_anti"))
-        if not unmatched.isEmpty():
-            (unmatched.withColumn("_batch", F.lit(batch_id))
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("_batch")
-             .parquet(join_uri(state_dir, "cusum", "unmonitored")))
+        write_delta(unmatched, join_uri(state_dir, "cusum", "unmonitored"),
+                    batch_id)
         state = spark.read.parquet(cur) if exists(cur) else None
         commit_state(fold_cusum_batch(state, daily, base, series_col), cur,
                      batch_id)

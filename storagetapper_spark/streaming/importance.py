@@ -3,10 +3,9 @@
 
 The model is just two 64-bucket count tables (target and raw) plus
 totals — perfectly mergeable state, so the streaming form stores
-PER-BATCH DELTAS under ``_batch=<id>`` partitions (dynamic partition
-overwrite → at-least-once replays replace their own delta instead of
-double-counting, the same commit discipline as streaming/semantic.py)
-and the current model is one 64-row aggregate over all deltas.
+PER-BATCH DELTAS in a batch-delta log (statefs module docstring,
+"Batch-delta logs") and the current model is one 64-row aggregate
+over all deltas.
 
 Scoring a batch under the up-to-date model (deltas INCLUDING the
 batch) makes the streaming weights equal the batch query's weights on
@@ -24,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.plans.datapipe5 import _DSIR_B
 
 
@@ -43,11 +43,7 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     delta = ex.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("d_raw"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("d_tgt"))
-    # per-write dynamic overwrite — never mutate the session conf
-    (delta.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(state_dir))
+    statefs.write_delta(delta, state_dir, batch_id)
 
 
 def current_model(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -2,13 +2,11 @@
 new/retained/resurrected/churned decomposition
 (plans/relational11.events_user_lifecycle) as events stream in.
 
-State architecture = the delta-partition discipline of
-streaming/importance.py / semantic.py: each batch writes its DISTINCT
-(user_id, day) presence pairs under a ``_batch=<id>`` partition with
-dynamic partition overwrite, so an at-least-once replay REPLACES its
-own delta instead of double-counting — exactly-once presence without a
-mutable state store.  The decomposition is then one window pass over
-the folded presence table.
+State architecture: each batch writes its DISTINCT (user_id, day)
+presence pairs to a batch-delta log (statefs module docstring,
+"Batch-delta logs") — exactly-once presence without a mutable state
+store.  The decomposition is then one window pass over the folded
+presence table.
 
 Why presence-deltas instead of per-user last-seen state: lifecycle
 classification of day d changes RETROACTIVELY when a user's earlier
@@ -25,19 +23,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
+
 
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str) -> None:
     """Write this batch's distinct (user_id, day) presence delta
-    (idempotent per batch id via dynamic partition overwrite)."""
+    (idempotent per batch id)."""
     pres = (batch.select("user_id",
                          F.col("ts").cast("date").alias("day"))
             .distinct())
-    # per-write dynamic overwrite — never mutate the session conf
-    (pres.withColumn("_batch", F.lit(batch_id))
-         .write.mode("overwrite").partitionBy("_batch")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(state_dir))
+    statefs.write_delta(pres, state_dir, batch_id)
 
 
 def current_lifecycle(spark: SparkSession, state_dir: str) -> DataFrame:

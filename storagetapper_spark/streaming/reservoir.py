@@ -4,11 +4,9 @@ documents stream in.
 
 The bottom-k-by-hash sketch is MERGEABLE — bottom-k(A ∪ B) =
 bottom-k(bottom-k(A) ∪ bottom-k(B)) — so the streaming form stores
-each batch's own bottom-k as a PER-BATCH DELTA under ``_batch=<id>``
-partitions (dynamic partition overwrite → an at-least-once replay
-replaces its own delta instead of double-sampling, the commit
-discipline shared with streaming/importance.py / semantic.py), and the
-current sample is one more bottom-k over the union of deltas.
+each batch's own bottom-k as a PER-BATCH DELTA in a batch-delta log
+(statefs module docstring, "Batch-delta logs"), and the current
+sample is one more bottom-k over the union of deltas.
 
 At 100 TB: each batch ranks only its own rows (map-side
 WindowGroupLimit ships ≤ k per stratum per task); the state read is
@@ -20,8 +18,8 @@ just the same bottom-k, by mergeability).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.operators.sampling import stratified_reservoir
 
 
@@ -32,10 +30,7 @@ def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     batch id)."""
     delta = stratified_reservoir(batch, strata_cols, k,
                                  id_col=id_col, salt=salt).drop("rk")
-    (delta.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(state_dir))
+    statefs.write_delta(delta, state_dir, batch_id)
 
 
 def current_sample(spark: SparkSession, state_dir: str,

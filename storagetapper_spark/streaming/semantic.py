@@ -10,9 +10,9 @@ batch of embeddings is
    cells (partition pruning: untouched cells are never read) plus its
    own batch-mates, via one numpy GEMM per cell — new-vs-all
    rectangle, never corpus-vs-corpus;
-3. its duplicate PAIRS are recorded under the batch's own partition
-   (dynamic partition overwrite → a checkpoint-replayed batch replaces
-   its pairs instead of appending);
+3. its duplicate PAIRS are recorded in a batch-delta log (statefs
+   module docstring, "Batch-delta logs"), so a checkpoint-replayed
+   batch replaces its pairs instead of appending;
 4. ingested into the index (apply_ingest_batch), making it "corpus"
    for every later batch.
 
@@ -22,8 +22,8 @@ each qualifying pair (a, b) is emitted exactly once, by the batch in
 which its LATER member arrives.  The protocol is replay-idempotent by
 construction: recomputing a batch's pairs after its own ingest yields
 the same set (a pair with one side in the batch qualifies identically
-whether the batch is already indexed), and the dynamic overwrite
-replaces rather than appends.
+whether the batch is already indexed), and the log write replaces
+rather than appends.
 
 This mirrors the minhash incremental path
 (operators/dedup.minhash_lsh_pairs_incremental) for the embedding
@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from storagetapper_spark.statefs import exists, join_uri
+from storagetapper_spark.statefs import exists, join_uri, write_delta
 from storagetapper_spark.streaming.ann_index import (
     apply_ingest_batch,
     assign_cells,
@@ -131,21 +131,13 @@ def apply_semantic_batch(spark, batch_df: DataFrame, state_dir: str,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding") -> None:
     """Pure batch form (the sink wraps it; tests call it directly):
-    record the batch's pairs under `_batch={id}`, then ingest the
-    batch into the index.  Both writes are dynamic-partition
-    overwrites, so any at-least-once replay replaces itself."""
+    record the batch's pairs, then ingest the batch into the index.
+    Both are batch-delta log writes, so any at-least-once replay
+    replaces itself."""
     index_dir = join_uri(state_dir, "index")
-    pairs = (semantic_pairs_batch(spark, batch_df, index_dir, centroids,
-                                  threshold, id_col, vec_col)
-             .withColumn("_batch", F.lit(int(batch_id))))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (pairs.write.mode("overwrite").partitionBy("_batch")
-         .parquet(join_uri(state_dir, "pairs")))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    pairs = semantic_pairs_batch(spark, batch_df, index_dir, centroids,
+                                 threshold, id_col, vec_col)
+    write_delta(pairs, join_uri(state_dir, "pairs"), batch_id)
     apply_ingest_batch(spark, batch_df, index_dir, centroids, batch_id,
                        id_col, vec_col)
 
@@ -157,7 +149,7 @@ def semantic_dedup_sink(stream: DataFrame, state_dir: str,
                         vec_col: str = "embedding",
                         trigger_available_now: bool = True):
     """foreachBatch ingest-time dedup: pairs + index maintained
-    per-batch under the replay-safe dynamic-overwrite protocol."""
+    per-batch as replay-safe batch-delta logs."""
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return

@@ -1,10 +1,8 @@
 """Streaming target-encoding maintenance: per-category (n, Σy) label
 moments are LINEAR, so the live encoding state is the fold of
-per-batch deltas — the same exactly-once delta discipline as
-streaming/cms.py (deltas land under ``_batch=<id>`` partitions with
-dynamic partition overwrite; an at-least-once replay replaces its own
-delta).  Per batch the write is |categories| rows regardless of batch
-size.
+per-batch deltas, kept in a batch-delta log (statefs module
+docstring, "Batch-delta logs").  Per batch the write is |categories|
+rows regardless of batch size.
 
 Serving derives the plans/ml2.ml_target_encoding_loo table from the
 folded state: for TRAINING rows (which are in the state) the encoding
@@ -20,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
+
 _M = "100.0"  # smoothing pseudo-count (matches plans/ml2._TE_M)
 
 
@@ -33,11 +33,8 @@ def batch_moments(rows: DataFrame, cat_col: str, y_col: str) -> DataFrame:
 def ingest_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
                  state_dir: str, cat_col: str, y_col: str) -> None:
     """Write this batch's per-category moment delta (idempotent per id)."""
-    delta = batch_moments(batch, cat_col, y_col)
-    (delta.withColumn("_batch", F.lit(batch_id))
-          .write.mode("overwrite").partitionBy("_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(state_dir))
+    statefs.write_delta(batch_moments(batch, cat_col, y_col), state_dir,
+                        batch_id)
 
 
 def current_moments(spark: SparkSession, state_dir: str) -> DataFrame:

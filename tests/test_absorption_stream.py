@@ -6,8 +6,13 @@ the boundary-carry last-event state must recover every straddling
 pair) — plus replay idempotence and probability bounds on the served
 rows."""
 
+import os
+
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from storagetapper_spark import statefs
 from storagetapper_spark.plans.common import events_t
 from storagetapper_spark.plans.registry import QUERIES
 from storagetapper_spark.streaming import absorption as AB
@@ -104,7 +109,6 @@ def test_compaction_preserves_boundary_and_results(spark, sf_dir,
                   AB.current_absorption(spark, plain).collect())
     assert got == want
     # the folded state is one partition, bounded by |users|
-    import os
     last = os.path.join(compacted, "last_events")
     parts_on_disk = sorted(d for d in os.listdir(last)
                            if d.startswith("_batch="))
@@ -124,3 +128,51 @@ def test_replay_idempotent_and_bounds(spark, sf_dir, tmp_path):
     assert after == before
     for r in AB.current_absorption(spark, state).collect():
         assert 0 <= r.one_step_nano <= r.absorb_8_nano <= 1_000_000_000
+
+
+def _quarters(spark, sf_dir):
+    """The events split by time into four batches: users straddle
+    every boundary."""
+    ev = events_t(spark, sf_dir)
+    c = ev.selectExpr(*[
+        f"CAST(percentile_cont({q}) WITHIN GROUP (ORDER BY unix_micros(ts))"
+        f" AS BIGINT)" for q in (0.25, 0.5, 0.75)]).collect()[0]
+    us = F.unix_micros(F.col("ts"))
+    return [ev.filter(us <= c[0]), ev.filter((us > c[0]) & (us <= c[1])),
+            ev.filter((us > c[1]) & (us <= c[2])), ev.filter(us > c[2])]
+
+
+@pytest.mark.parametrize("target,name,after", [
+    (DataFrameWriter, "parquet", 0),   # the fold write
+    (statefs, "rmtree", 0),            # the first partition delete
+    (statefs, "rmtree", 1),            # the second partition delete
+], ids=["fold_write", "rmtree_1", "rmtree_2"])
+def test_compaction_crash_loses_no_last_event(spark, sf_dir, tmp_path,
+                                              monkeypatch, target, name,
+                                              after):
+    """A crash inside compact_last_events leaves last events the
+    per-user fold still sees: ingest continues and ends equal to an
+    uncompacted run."""
+    parts = _quarters(spark, sf_dir)
+    plain, crashed = str(tmp_path / "plain"), str(tmp_path / "crashed")
+    for i, p in enumerate(parts):
+        AB.ingest_batch(spark, p, i, plain)
+    for i, p in enumerate(parts[:3]):
+        AB.ingest_batch(spark, p, i, crashed)
+    real, calls = getattr(target, name), []
+
+    def crashing(*a, **k):
+        calls.append(a)
+        if len(calls) > after:
+            raise RuntimeError(f"crash in {name}")
+        return real(*a, **k)
+    monkeypatch.setattr(target, name, crashing)
+    with pytest.raises(RuntimeError):
+        AB.compact_last_events(spark, crashed, upto_batch=2)
+    monkeypatch.undo()
+    AB.ingest_batch(spark, parts[3], 3, crashed)
+    got = sorted(tuple(r) for r in
+                 AB.current_transitions(spark, crashed).collect())
+    want = sorted(tuple(r) for r in
+                  AB.current_transitions(spark, plain).collect())
+    assert got == want

@@ -85,3 +85,27 @@ def test_sink_end_to_end(spark, sf_dir, tmp_path):
     assert read_index(spark, idx).count() == 60
     # layout really is cell-partitioned (partition pruning surface)
     assert glob.glob(f"{idx}/cells/_batch=*/centroid_id=*")
+
+
+def test_sink_keeps_every_batch(spark, sf_dir, tmp_path):
+    """Three files drained one per trigger: each micro-batch writes its
+    own ``_batch=`` partitions and leaves the earlier ones in place."""
+    import os
+
+    from storagetapper_spark.streaming.ann_index import ivf_ingest_sink
+
+    emb = t(spark, sf_dir, "embeddings").where("vec_id < 60")
+    cents = _centroids(emb)
+    feed = str(tmp_path / "feed")
+    for i in range(3):
+        (emb.where(F.col("vec_id") % 3 == i).coalesce(1)
+         .write.mode("append").parquet(feed))
+    idx, ckpt = str(tmp_path / "ivf"), str(tmp_path / "ckpt")
+    stream = (spark.readStream.schema(emb.schema)
+              .option("maxFilesPerTrigger", 1).parquet(feed))
+    ivf_ingest_sink(stream, idx, ckpt, cents).awaitTermination(120)
+    got = sorted(r.vec_id for r in read_index(spark, idx).collect())
+    assert got == list(range(60))
+    assert sorted(d for d in os.listdir(f"{idx}/cells")
+                  if d.startswith("_batch=")) == [
+        "_batch=0", "_batch=1", "_batch=2"]

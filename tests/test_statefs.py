@@ -349,3 +349,68 @@ def test_bucketed_rewrite_crash_keeps_marker_and_finishes(
     assert sorted(r[:2] for r in _rows(spark, cur)) == sorted(
         kept + [(k, f"v{k}") for b in (1, 3) for k in by[b]])
     assert assert_only_current(table, 0) == 4
+
+
+# Batch-delta logs: statefs.write_delta writes each batch's delta as its
+# own ``_batch=<id>`` partition, whatever the session's overwrite mode.
+
+def _log(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _files(path):
+    """{relative data file path: mtime} of everything under ``path``."""
+    return {os.path.relpath(os.path.join(d, n), path):
+            os.path.getmtime(os.path.join(d, n))
+            for d, _, names in os.walk(path) for n in names
+            if n.endswith(".parquet")}
+
+
+def test_write_delta_replay_replaces_only_its_own_batch(spark, tmp_path):
+    log = str(tmp_path / "log")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    statefs.write_delta(_df(spark, [(1, "a"), (2, "b")]), log, 0)
+    statefs.write_delta(_df(spark, [(3, "c")]), log, 1)
+    sibling = _files(os.path.join(log, "_batch=1"))
+    statefs.write_delta(_df(spark, [(1, "a"), (2, "b")]), log, 0)
+    assert _log(spark, log) == [(1, "a", 0), (2, "b", 0), (3, "c", 1)]
+    statefs.write_delta(_df(spark, [(1, "a2")]), log, 0)
+    assert _log(spark, log) == [(1, "a2", 0), (3, "c", 1)]
+    assert _files(os.path.join(log, "_batch=1")) == sibling
+    assert statefs.delta_batches(log) == [0, 1]
+    assert spark.conf.get(key) == mode
+
+
+def test_write_delta_extra_partition_column(spark, tmp_path):
+    """With a second partition column a replay replaces the (batch,
+    cell) partitions it writes; the same cell of another batch stays."""
+    log = str(tmp_path / "cells")
+
+    def cells(rows):
+        return spark.createDataFrame(rows, "pk long, cell int")
+    statefs.write_delta(cells([(1, 0), (2, 1)]), log, 0, "cell")
+    statefs.write_delta(cells([(3, 0)]), log, 1, "cell")
+    sibling = _files(os.path.join(log, "_batch=1"))
+    statefs.write_delta(cells([(1, 0), (2, 1)]), log, 0, "cell")
+    assert _log(spark, log) == [(1, 0, 0), (2, 0, 1), (3, 1, 0)]
+    assert sorted(os.path.dirname(p) for p in _files(log)) == [
+        "_batch=0/cell=0", "_batch=0/cell=1", "_batch=1/cell=0"]
+    statefs.write_delta(cells([(4, 0), (2, 1)]), log, 0, "cell")
+    assert _log(spark, log) == [(2, 0, 1), (3, 1, 0), (4, 0, 0)]
+    assert _files(os.path.join(log, "_batch=1")) == sibling
+
+
+def test_write_delta_empty_delta_writes_nothing(spark, tmp_path):
+    """An empty delta creates no directory, and a replay whose delta is
+    now empty keeps the batch's earlier partitions."""
+    log = str(tmp_path / "log")
+    statefs.write_delta(_df(spark, []), log, 0)
+    assert not os.path.exists(log)
+    assert statefs.delta_batches(log) == []
+    statefs.write_delta(_df(spark, [(1, "a")]), log, 1)
+    before = _files(log)
+    statefs.write_delta(_df(spark, []), log, 1)
+    statefs.write_delta(_df(spark, []), log, 2)
+    assert _files(log) == before
+    assert _log(spark, log) == [(1, "a", 1)]

@@ -64,6 +64,18 @@ def test_replay_idempotent(spark, tmp_path):
     assert before == after
 
 
+def test_batch_that_accepts_nothing_leaves_no_state(spark, tmp_path):
+    """A first batch whose every doc fails the gate writes no state, so
+    the next batch curates instead of reading an empty log."""
+    root = str(tmp_path / "cur")
+    s0 = curate_batch(spark, _docs(spark, [(1, SHORT, "en")]), 0, root)
+    assert s0["n_accepted"] == 0
+    s1 = curate_batch(spark, _docs(spark, [(2, GOOD, "en")]), 1, root)
+    assert s1["n_accepted"] == 1
+    curated = spark.read.parquet(f"{root}/curated")
+    assert [r.doc_id for r in curated.collect()] == [2]
+
+
 def test_stream_accumulation_equals_one_shot(spark, tmp_path):
     rows = [(i, f"{GOOD} doc {i % 7}", "en") for i in range(30)]
     # streamed in 3 batches
