@@ -6,8 +6,6 @@ the boundary-carry last-event state must recover every straddling
 pair) — plus replay idempotence and probability bounds on the served
 rows."""
 
-import os
-
 import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
@@ -109,6 +107,7 @@ def test_compaction_preserves_boundary_and_results(spark, sf_dir,
                   AB.current_absorption(spark, plain).collect())
     assert got == want
     # the folded state is one partition, bounded by |users|
+    import os
     last = os.path.join(compacted, "last_events")
     parts_on_disk = sorted(d for d in os.listdir(last)
                            if d.startswith("_batch="))
