@@ -22,7 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from storagetapper_spark.operators.graph import symmetrize
+from storagetapper_spark.operators.graph import (iterate, pin, release,
+                                                 symmetrize)
 from storagetapper_spark.operators.text import normalize_text
 
 
@@ -491,37 +492,31 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     pointer-jump (component[u] = component[component[u]]), so
     convergence is O(log diameter) rounds, not O(diameter) — a
     400-node chain resolves in ~9 rounds where plain propagation needs
-    400 (and would silently stop wrong at max_iters).  Every round's
-    labels are truncated with an eager localCheckpoint: each round
-    references the previous generation THREE times (propagation, jump,
-    convergence check), so an unmaterialized lineage grows ~3^k and
-    OOMs Catalyst by round ~17 (observed at 8g heap) — persist alone
-    does NOT cut the logical plan.  On a cluster, point
-    spark.sparkContext.setCheckpointDir at durable storage and swap
-    localCheckpoint for checkpoint if executor loss matters; only the
-    edge list and the (node, comp) table ever shuffle.
-    Deterministic, no driver-side graph state.
+    400 (and would silently stop wrong at max_iters).  The rounds run on
+    operators/graph.iterate: each round references the previous
+    generation three times (propagation, jump, convergence sum), so
+    every generation is checkpointed, and the superseded one is
+    released.  Convergence (r10, guide §2.4): labels are monotonically
+    non-increasing per node and the node set is fixed, so sum(comp)
+    strictly decreases iff ANY label changed — that one exact integer
+    (decimal(38,0), overflow-safe at any node-id scale) is the ladder's
+    ``until``, and its scan is also the action that materializes the
+    generation.  On a cluster, point spark.sparkContext.setCheckpointDir
+    at durable storage and swap localCheckpoint for checkpoint if
+    executor loss matters; only the edge list and the (node, comp)
+    table ever shuffle.  Deterministic, no driver-side graph state.
     """
-    sym = symmetrize(edges, a_col, b_col).select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")).distinct()
-    sym.persist()
-    labels = (sym.groupBy("src").agg(F.min("dst").alias("nbr_min"))
-                 .select(F.col("src").alias("node"),
-                         F.least("src", "nbr_min").alias("comp"))
-                 .localCheckpoint(eager=True))
-    # Convergence scalar (r10, guide §2.4): labels are monotonically
-    # non-increasing per node and the node set is fixed, so
-    # sum(comp) strictly decreases iff ANY label changed.  Tracking
-    # that one exact integer (decimal(38,0) — overflow-safe at any
-    # node-id scale) replaces the former per-round join+filter+count
-    # convergence job (2 extra shuffles/round) with a single scan
-    # of the just-checkpointed generation.
-    def _label_sum(df: DataFrame):
-        return df.agg(F.sum(F.col("comp").cast("decimal(38,0)"))
-                      .alias("_s")).collect()[0]._s
+    sym = pin(symmetrize(edges, a_col, b_col).select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")).distinct())
+    seed = (sym.groupBy("src").agg(F.min("dst").alias("nbr_min"))
+            .select(F.col("src").alias("node"),
+                    F.least("src", "nbr_min").alias("comp")))
 
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iters):
+    def label_sum(labels: DataFrame):
+        return labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))
+                          .alias("_s")).collect()[0]._s
+
+    def step(labels: DataFrame) -> DataFrame:
         # propagate: candidate label for dst = min over neighbors' comps
         prop = (sym.join(labels, sym.src == labels.node)
                    .groupBy("dst").agg(F.min("comp").alias("nbr_comp")))
@@ -532,21 +527,13 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
         # ids, so comp[comp[u]] <= comp[u]) — doubles reach per round
         m = labels.select(F.col("node").alias("_mn"),
                           F.col("comp").alias("_mc"))
-        new_labels = (stepped.join(m, stepped.comp == m._mn, "left")
-                      .select("node",
-                              F.least("comp", F.coalesce("_mc", "comp"))
-                               .alias("comp"))
-                      .localCheckpoint(eager=True))
-        new_sum = _label_sum(new_labels)
-        # free the superseded generation's checkpoint blocks — without
-        # this every round's labels stay pinned in executor storage for
-        # the whole run (ADVICE r4)
-        prev, labels = labels, new_labels
-        prev.unpersist()
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    sym.unpersist()
+        return (stepped.join(m, stepped.comp == m._mn, "left")
+                .select("node",
+                        F.least("comp", F.coalesce("_mc", "comp"))
+                        .alias("comp")))
+
+    labels = iterate(seed, step, max_iters, until=label_sum)
+    release(sym)
     return labels
 
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.graph import iterate, release
+
 
 def occurrence_count(text: Column, marker: str) -> Column:
     """# of occurrences of ``marker`` via the length/replace identity —
@@ -347,14 +349,14 @@ def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text",
     pair text), merge it greedily everywhere, repeat.  Returns the merge
     table (round, pair, n) — the artifact a tokenizer ships.
 
-    The iterative shape follows the engine's persisted-generation rule
-    (SCALE.md / connected_components): each round's stream is eagerly
-    localCheckpoint-ed so lineage never compounds.  Since r10 the
+    The rounds are one operators/graph.iterate ladder, so each round's
+    stream is checkpointed and lineage never compounds.  Since r10 the
     stream is one token ARRAY per document (see _bpe_train_loop): a
     round costs one Arrow pass for the per-batch pair Counter, one
     tiny (pair, n) shuffle, a 1-row collect, and one Arrow merge pass
     — no doc-keyed exchanges or sorts at all."""
-    merges, _ = _bpe_train_loop(docs, rounds, text_col, id_col)
+    merges, stream = _bpe_train_loop(docs, rounds, text_col, id_col)
+    release(stream)
     return docs.sparkSession.createDataFrame(
         merges, "round int, pair string, n bigint")
 
@@ -402,20 +404,23 @@ def _bpe_train_loop(docs: DataFrame, rounds: int, text_col: str,
     order by construction.  The greedy semantics are identical: within
     a run of consecutive candidates the island/odd-row selection picks
     the 1st, 3rd, … — exactly what the left-to-right scan does (see
-    test_bpe_merge's reference checks)."""
+    test_bpe_merge's reference checks).
+
+    The rounds run on operators/graph.iterate: a round collects the
+    pinned generation's top pair, and the merged stream is the next
+    generation.  Once no pair is left, the remaining rounds copy the
+    stream unchanged."""
     import pandas as pd
 
-    stream = (docs.select(id_col,
-                          F.split(F.col(text_col), " ").alias("toks"))
-              .filter(F.col("toks").isNotNull())
-              .localCheckpoint(eager=True))
     merges = []
-    for r in range(1, rounds + 1):
+
+    def step(stream: DataFrame) -> DataFrame:
         top = (array_pair_counts(stream)
                .orderBy(F.desc("n"), "pair").limit(1).collect())
         if not top:
-            break
+            return stream
         pair, n = top[0]["pair"], int(top[0]["n"])
+        merges.append((len(merges) + 1, pair, n))
         x, y = pair.split(" ", 1)
 
         def merge(batches, x=x, y=y):
@@ -435,10 +440,12 @@ def _bpe_train_loop(docs: DataFrame, rounds: int, text_col: str,
                     out.append(b)
                 yield pd.DataFrame({id_col: pdf[id_col], "toks": out})
 
-        nxt = stream.mapInPandas(merge, f"{id_col} long, toks array<string>")
-        old, stream = stream, nxt.localCheckpoint(eager=True)
-        old.unpersist()
-        merges.append((r, pair, n))
+        return stream.mapInPandas(merge, f"{id_col} long, toks array<string>")
+
+    stream = iterate(docs.select(id_col,
+                                 F.split(F.col(text_col), " ").alias("toks"))
+                     .filter(F.col("toks").isNotNull()),
+                     step, rounds)
     return merges, stream
 
 
@@ -447,7 +454,7 @@ def bpe_encode_stats(docs: DataFrame, rounds: int = 3,
                      id_col: str = "doc_id") -> DataFrame:
     """The inference side of BPE: train ``rounds`` merges and report the
     per-document compression they buy — (id, n_before, n_after, saved).
-    Same persisted-generation loop as :func:`bpe_train`; the stats are
+    Same checkpointed-generation ladder as :func:`bpe_train`; the stats are
     two doc-keyed counts joined on the id."""
     _, stream = _bpe_train_loop(docs, rounds, text_col, id_col)
     before = docs.select(

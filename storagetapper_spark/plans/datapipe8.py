@@ -15,10 +15,12 @@ search, hourly activity heatmap, and iterative k-core decomposition.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import pin
+from storagetapper_spark.operators.graph import iterate, pin
 from storagetapper_spark.plans.common import t
 from storagetapper_spark.plans.graph2 import _EDGE_SQL, _adj, _edges
 
@@ -236,44 +238,36 @@ _KCORE_ROUNDS = 12
 def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     """k-core decomposition of the co-purchase graph (k=2,3): repeated
     peeling of nodes with alive-degree < k.  The iterative-fixpoint
-    operator shape: each round is one equi-join + agg over
-    localCheckpoint-ed generations (the connected_components lesson —
-    persist never truncates lineage).  Both engines run the identical
+    operator shape: each round is one equi-join + agg, and the rounds
+    are one operators/graph.iterate ladder whose ``until`` is the alive
+    count — that count is the one action that materializes a
+    generation, and an unchanged count is the fixpoint (equal-count ⇒
+    equal-set under monotone peeling).  Both engines run the identical
     {_KCORE_ROUNDS}-round bound, so results match even mid-convergence;
     at the tested SFs peeling reaches fixpoint in ≤ 5 rounds.
 
-    r11 (VERDICT r10 #4, guide §1.2/§2.6): the per-round action count
-    is halved — generations checkpoint LAZILY and the fixpoint count()
-    is the action that materializes them (the old eager checkpoint +
-    separate count paid two scheduler round-trips per round); round 1
-    degrees come straight off the adjacency (every node is alive, so
-    the two alive-joins were no-op filters); and the k=2 / k=3 ladders
-    run in two driver threads so one ladder's scheduler gaps back-fill
-    with the other's tasks (FIFO scheduling, shared cached adjacency —
-    materialized BEFORE the threads fork so neither recomputes it).
-    Peeling math is unchanged: identical joins, same generation bound,
-    equal-count ⇒ equal-set under monotone peeling."""
+    Round 1 degrees come straight off the adjacency (every node is
+    alive, so the two alive-joins would be no-op filters), and the
+    k=2 / k=3 ladders run in two driver threads so one ladder's
+    scheduler gaps back-fill with the other's tasks (FIFO scheduling,
+    the edge list pinned BEFORE the threads fork so neither recomputes
+    it)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    e = _edges(spark, sf).persist()
-    adj = pin(_adj(e))
+    e = pin(_edges(spark, sf))
+    adj = _adj(e)
 
     def peel(k: int) -> DataFrame:
-        alive, prev_n = None, None
-        for _ in range(_KCORE_ROUNDS):
-            if alive is None:
-                deg = adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-            else:
-                av = alive.select(F.col("u").alias("vv"))
-                deg = (adj.join(alive, "u")
-                       .join(av, F.col("v") == F.col("vv"))
-                       .groupBy("u").agg(F.count(F.lit(1)).alias("d")))
-            alive = (deg.filter(F.col("d") >= k).select("u")
-                     .localCheckpoint(eager=False))
-            n = alive.count()  # one action: materializes the checkpoint
-            if n == prev_n:
-                break  # fixpoint: further rounds are no-ops
-            prev_n = n
+        def step(alive: DataFrame) -> DataFrame:
+            av = alive.select(F.col("u").alias("vv"))
+            return (adj.join(alive, "u")
+                    .join(av, F.col("v") == F.col("vv"))
+                    .groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+                    .filter(F.col("d") >= k).select("u"))
+
+        seed = (adj.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+                .filter(F.col("d") >= k).select("u"))
+        alive = iterate(seed, step, _KCORE_ROUNDS - 1, until=DataFrame.count)
         al2 = alive.select(F.col("u").alias("pa2"))
         al3 = alive.select(F.col("u").alias("pb2"))
         core_edges = (e.join(al2, F.col("pa") == F.col("pa2"))
@@ -284,11 +278,8 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
                     F.count(F.lit(1)).alias("n_core_edges"))))
 
     with ThreadPoolExecutor(max_workers=len(_KCORE_KS)) as pool:
-        out_rows = list(pool.map(peel, _KCORE_KS))
-    out = out_rows[0]
-    for r in out_rows[1:]:
-        out = out.unionAll(r)
-    return out.orderBy("k")
+        return reduce(DataFrame.unionAll,
+                      pool.map(peel, _KCORE_KS)).orderBy("k")
 
 
 def _kcore_sql() -> str:

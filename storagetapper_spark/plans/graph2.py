@@ -18,10 +18,13 @@ the final expression (floor·10⁶ — hash-stable, SCALE.md discipline).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import pin, symmetrize
+from storagetapper_spark.operators.graph import (iterate, pin, release,
+                                                 symmetrize)
 from storagetapper_spark.plans.common import (copurchase_pairs,
                                               order_baskets, t)
 
@@ -287,13 +290,11 @@ def graph_minhash_link_prediction(spark: SparkSession,
     Estimates converge on the exact form's ranking for high-Jaccard
     pairs — the regime link prediction cares about; both exact forms
     stay registered for audit."""
-    e = _edges(spark, sf).persist()
-    adj = _adj(e)
-    # one pin covers both: the final action reads sig three times (band
-    # explode + both signature join sides) and e twice (adjacency
-    # lineage + the existing-edge anti-join); computing sig caches e
-    # on the way
-    sig = pin(adj.groupBy("u").agg(*[
+    # e feeds the sig pin and the existing-edge anti-join; the final
+    # action reads sig three times (band explode + both signature join
+    # sides)
+    e = pin(_edges(spark, sf))
+    sig = pin(_adj(e).groupBy("u").agg(*[
         F.min(F.md5(F.concat_ws("|", F.lit(str(i)),
                                 F.col("v").cast("string"))))
          .alias(f"mh_{i}") for i in range(_MH_H)]))
@@ -413,30 +414,23 @@ def graph_bfs_distance(spark: SparkSession, sf: str) -> DataFrame:
     Fixed-depth unrolled frontier expansion — each hop is one equi-join
     frontier⋈adj followed by a distinct and an accumulated-visited
     anti-join; at 100 TB this is the standard iterative BFS whose
-    frontier is checkpointed per generation (operators/graph.py's
-    persisted-generation pattern).  The hop count is bounded, so the
-    whole profile is one lazy plan here."""
-    # the one action reads adj once per hop plus the source agg (e needs
-    # no persist of its own: adj is its only consumer)
+    frontier is pinned per generation (operators/graph.pin): the next
+    hop, the visited set and the profile row all read it."""
+    # adj is read once per hop plus the source agg (e needs no pin of
+    # its own: adj is its only consumer)
     adj = pin(_adj(_edges(spark, sf)))
     src = adj.agg(F.min("u").alias("u"))  # 1 row
-    visited = src.select("u").persist()
-    frontier = visited
+    visited = frontier = src.select("u")
     rows = [src.select(F.lit(0).alias("dist"),
                        F.count(F.lit(1)).alias("n_nodes"))]
-    counts = None
     for hop in range(1, _BFS_HOPS + 1):
-        nxt = (frontier.join(adj, "u")
-               .select(F.col("v").alias("u")).distinct()
-               .join(visited, "u", "left_anti").persist())
-        rows.append(nxt.agg(F.lit(hop).alias("dist"),
-                            F.count(F.lit(1)).alias("n_nodes")))
-        visited = visited.unionAll(nxt).persist()
-        frontier = nxt
-    counts = rows[0]
-    for r in rows[1:]:
-        counts = counts.unionAll(r)
-    return counts.orderBy("dist")
+        frontier = pin(frontier.join(adj, "u")
+                       .select(F.col("v").alias("u")).distinct()
+                       .join(visited, "u", "left_anti"))
+        rows.append(frontier.agg(F.lit(hop).alias("dist"),
+                                 F.count(F.lit(1)).alias("n_nodes")))
+        visited = visited.unionAll(frontier)
+    return reduce(DataFrame.unionAll, rows).orderBy("dist")
 
 
 BFS_SQL = f"""
@@ -533,22 +527,21 @@ _LPA_ROUNDS = 3
 
 
 def _lpa_labels(adj: DataFrame) -> DataFrame:
-    """(u, l): min node id within ``_LPA_ROUNDS`` hops of u — the
+    """(u, l), pinned: min node id within ``_LPA_ROUNDS`` hops of u — the
     min-label propagation ladder over adjacency (u, v).  Each round
     reads the previous generation twice (the union side and the join
-    side), so every generation is an eager localCheckpoint: persist()
-    never truncates the plan, and a lazy ladder re-executes ~2^rounds
-    times (measured 6.3–7.5 s lazy vs 3.8–4.0 s eager)."""
-    labels = (adj.select("u").distinct()
-              .select("u", F.col("u").alias("l"))
-              .localCheckpoint(eager=True))
-    for _ in range(_LPA_ROUNDS):
+    side), so it runs on operators/graph.iterate (a lazy ladder
+    re-executes ~2^rounds times: measured 6.3–7.5 s lazy vs 3.8–4.0 s
+    checkpointed)."""
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (adj.join(labels.withColumnRenamed("u", "v"), "v")
                .select("u", "l"))
-        labels = (labels.unionByName(nbr)
-                  .groupBy("u").agg(F.min("l").alias("l"))
-                  .localCheckpoint(eager=True))
-    return labels
+        return (labels.unionByName(nbr)
+                .groupBy("u").agg(F.min("l").alias("l")))
+
+    return iterate(adj.select("u").distinct()
+                   .select("u", F.col("u").alias("l")),
+                   step, _LPA_ROUNDS)
 
 
 def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
@@ -567,9 +560,9 @@ def graph_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: each round is one equi-join frontier (adj ⋈ labels,
     shuffle on node id) + one map-side-combined min aggregation over
     checkpointed generations (:func:`_lpa_labels`)."""
-    e = _edges(spark, sf).persist()
-    adj = _adj(e).persist()
-    labels = _lpa_labels(adj)
+    e = pin(_edges(spark, sf))
+    labels = _lpa_labels(_adj(e))
+    release(e)
     sizes = labels.groupBy("l").agg(F.count(F.lit(1)).alias("size"))
     return (sizes.groupBy("size")
             .agg(F.count(F.lit(1)).alias("n_communities"))
@@ -630,45 +623,30 @@ def graph_hits(spark: SparkSession, sf: str) -> DataFrame:
                         F.col("l_partkey").alias("p"))
                 .distinct())
 
-    def norm(df: DataFrame, key: str, eager: bool = False) -> DataFrame:
-        # r10 (guide §1.2): persist the half-step result — the max
-        # subquery AND the normalize both read it, so the unpersisted
-        # form evaluated each half-step's join+agg twice per round.
-        # The max broadcast materializes the persist before the probe
-        # side reads it (the join stage cannot launch without the
-        # broadcast value), so no cold-cache race.
-        df = df.persist()
-        out = (df.crossJoin(F.broadcast(df.agg(F.max("s").alias("m"))))
-               .select(key, F.expr(f"s * {_HITS_PPM} div m").alias("s")))
-        if eager:
-            # eager checkpoint only where a generation feeds TWO
-            # consumers (a2 → h2 AND the authority top-k) — without it
-            # the second consumer replays the whole join ladder (the
-            # LPA persisted-generation lesson).
-            out = out.localCheckpoint(eager=True)
-            df.unpersist()
-        # r11 (guide §1.2): singly-consumed half-steps (a1→h1, h1→a2,
-        # h2→hub top-k) stay LAZY — their former per-step eager
-        # checkpoint jobs were pure scheduler round-trips (3 of the
-        # query's 6 actions); the persisted pre-norm aggregates still
-        # pin each half-step to one evaluation inside the consuming
-        # job.  Interleaved A/B (best-of-3 × 3 rounds, noisy box):
-        # 4.71/4.39/4.62 vs 4.94/4.88/4.49 s — small but same-signed
-        # in every paired round.
-        return out
+    def norm(s: DataFrame, key: str) -> DataFrame:
+        # ppm re-normalization of a pinned half-step: the max broadcast
+        # and the probe side both read the pin, never the join below it
+        return (s.crossJoin(F.broadcast(s.agg(F.max("s").alias("m"))))
+                .select(key, F.expr(f"s * {_HITS_PPM} div m").alias("s")))
 
-    a1 = norm(edges.groupBy("p").agg(F.count(F.lit(1)).alias("s")), "p")
-    h1 = norm(edges.join(a1, "p").groupBy("c").agg(F.sum("s").alias("s")),
-              "c")
-    a2 = norm(edges.join(h1, "c").groupBy("p").agg(F.sum("s").alias("s")),
-              "p", eager=True)
-    h2 = norm(edges.join(a2, "p").groupBy("c").agg(F.sum("s").alias("s")),
-              "c")
-    top_a = (a2.orderBy(F.desc("s"), "p").limit(15)
+    def half(prev: DataFrame) -> DataFrame:
+        # one half-step: Σ of the other side's normalized scores per key
+        on = prev.columns[0]
+        key = "c" if on == "p" else "p"
+        return (edges.join(norm(prev, on), on)
+                .groupBy(key).agg(F.sum("s").alias("s")))
+
+    # a1 → h1 → a2 is one ladder; h2 is pinned off a2, and both stay
+    # for the two top-k reads, which no longer read the edges
+    a2 = iterate(edges.groupBy("p").agg(F.count(F.lit(1)).alias("s")),
+                 half, 2)
+    h2 = pin(half(a2))
+    release(edges)
+    top_a = (norm(a2, "p").orderBy(F.desc("s"), "p").limit(15)
              .select(F.lit("authority").alias("role"),
                      F.col("p").alias("node_id"),
                      F.col("s").alias("score_ppm")))
-    top_h = (h2.orderBy(F.desc("s"), "c").limit(15)
+    top_h = (norm(h2, "c").orderBy(F.desc("s"), "c").limit(15)
              .select(F.lit("hub").alias("role"),
                      F.col("c").alias("node_id"),
                      F.col("s").alias("score_ppm")))
@@ -849,7 +827,7 @@ def _triangles_degree_oriented(e: DataFrame) -> DataFrame:
 def _triangles_from_oriented(oe: DataFrame) -> DataFrame:
     """The triangle wedge-close join over an ALREADY-oriented edge
     table — split out (r10) so callers that also need oe for degree
-    stats can persist and share one evaluation."""
+    stats can pin and share one evaluation."""
     a1, a2, e3 = oe.alias("a1"), oe.alias("a2"), oe.alias("e3")
     rank_lt = (F.col("a1.dst_deg") < F.col("a2.dst_deg")) | (
         (F.col("a1.dst_deg") == F.col("a2.dst_deg"))
@@ -1056,9 +1034,9 @@ def graph_ktruss(spark: SparkSession, sf: str) -> DataFrame:
     Scale: each round is one degree-oriented triangle enumeration
     (O(m^1.5) wedge bound, see _degree_oriented_edges) + an edge-keyed
     agg + a broadcast-sized semi-join back onto the edge list; rounds
-    are persisted so lineage never re-derives round 1 inside round 2."""
+    are pinned so lineage never re-derives round 1 inside round 2."""
     k_minus_2 = 2
-    e0 = _edges(spark, sf).localCheckpoint(eager=True)
+    e0 = pin(_edges(spark, sf))
 
     def peel(e: DataFrame) -> DataFrame:
         sup = _edge_support(e)
@@ -1067,18 +1045,11 @@ def graph_ktruss(spark: SparkSession, sf: str) -> DataFrame:
                 .filter(F.coalesce(F.col("sup"), F.lit(0)) >= k_minus_2)
                 .select("pa", "pb"))
 
-    # EAGER checkpoint per peel generation: persist() never truncates
-    # the LOGICAL plan, and round 2 references round 1's whole pipeline
-    # many times (the audited unrolled lineage was ~12.7k exchanges) —
-    # localCheckpoint cuts planning to round size (the LPA lesson).
-    # r11 note: examined for the kcore lazy-checkpoint treatment and
-    # deliberately LEFT eager — e0/e1 are each referenced several times
-    # inside the caller's single action (peel + both round counts), and
-    # an unmaterialized checkpoint raced by concurrent stages recomputes
-    # its lineage (the dedup.py persist-race lesson); kcore is safe only
-    # because its per-round count() materializes each generation before
-    # any reuse.
-    e1 = peel(e0).localCheckpoint(eager=True)
+    # a pin per peel generation: round 2 references round 1's whole
+    # pipeline many times (the audited unrolled lineage was ~12.7k
+    # exchanges), and e0/e1 are each read several times by the caller's
+    # one action (peel + both round counts)
+    e1 = pin(peel(e0))
     e2 = peel(e1)
     s1 = (e0.agg(F.count(F.lit(1)).alias("edges_in"))
           .crossJoin(e1.agg(F.count(F.lit(1)).alias("edges_kept")))
@@ -1149,11 +1120,11 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     / (4m^2), one micro-floored division at the end — no doubles
     anywhere, so both engines agree bit-for-bit.
 
-    Scale: the LPA rounds are the registered query's persisted
+    Scale: the LPA rounds are the registered query's checkpointed
     generations; e_c is one edges-to-labels double equi-join; d_c one
     degree join; the community table is node-bounded."""
-    e = _edges(spark, sf).persist()
-    adj = _adj(e).persist()
+    e = pin(_edges(spark, sf))
+    adj = _adj(e)
     labels = _lpa_labels(adj)
     la = labels.select(F.col("u").alias("pa"), F.col("l").alias("l1"))
     lb = labels.select(F.col("u").alias("pb"), F.col("l").alias("l2"))

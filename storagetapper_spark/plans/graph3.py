@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import pin, symmetrize
+from storagetapper_spark.operators.graph import pin, release, symmetrize
 from storagetapper_spark.plans.common import (copurchase_pairs,
                                               order_baskets, t)
 
@@ -47,12 +47,12 @@ def graph_louvain_move_round(spark: SparkSession, sf: str) -> DataFrame:
     sym = symmetrize(edges, "pa", "pb", "w").select(
         F.col("pa").alias("i"), F.col("pb").alias("j"), "w")
     # deg feeds lbl and both q4 accountings, lbl feeds tot/nbr/base/cand
-    # — persist the tiny per-node tables (r10, guide §5).
-    deg = sym.groupBy("i").agg(F.sum("w").alias("k")).persist()
+    # — pin the tiny per-node tables (r10, guide §5).
+    deg = pin(sym.groupBy("i").agg(F.sum("w").alias("k")))
     m2df = deg.agg(F.sum("k").alias("m2"))
     part = t(spark, sf, "part").select(
         F.col("p_partkey").alias("i"), F.col("p_brand").alias("c"))
-    lbl = deg.join(part, "i").select("i", "k", "c").persist()
+    lbl = pin(deg.join(part, "i").select("i", "k", "c"))
     tot = lbl.groupBy("c").agg(F.sum("k").alias("tot"))
     # per (node, neighbor community): total edge weight into it
     nbr = (sym.join(lbl.select(F.col("i").alias("j"),
@@ -94,6 +94,7 @@ def graph_louvain_move_round(spark: SparkSession, sf: str) -> DataFrame:
                         F.when(F.col("b.g") > stay,
                                F.col("b.cj")).otherwise(F.col("c"))
                         .alias("c_new")))
+    release(lbl)  # moved is its last reader
 
     # r11 (VERDICT r10 #4): BOTH modularity accountings in one pass —
     # a stacked explode tags every edge/degree row 0=before/1=after,

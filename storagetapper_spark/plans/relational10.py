@@ -1381,10 +1381,11 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
     (then id), which provably bounds per-vertex wedge fan-out by
     out-degree ≤ √(2|E|); the id orientation here keeps the oracle
     simple on the thresholded (n_ab ≥ 2) basket graph."""
+    from storagetapper_spark.operators.graph import pin, release
     from storagetapper_spark.plans.graph2 import _edges
 
-    e = _edges(spark, sf).persist()
-    n_edges = e.count()  # eager: three branches below reuse the cache
+    e = pin(_edges(spark, sf))  # three counts below read it
+    n_edges = e.count()
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     wedges = e1.join(e2, F.col("e1.pb") == F.col("e2.pa"))
     n_wedges = wedges.count()
@@ -1392,6 +1393,7 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
         e3, (F.col("e3.pa") == F.col("e1.pa"))
         & (F.col("e3.pb") == F.col("e2.pb")))
     n_tri = tri.count()
+    release(e)
     ratio = round(n_tri / n_wedges, 6) if n_wedges else 0.0
     return spark.createDataFrame(
         [(n_edges, n_wedges, n_tri, ratio)],

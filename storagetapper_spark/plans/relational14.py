@@ -208,9 +208,10 @@ def absorption_from_counts(counts: DataFrame) -> DataFrame:
     rowsum = counts.groupBy("src").agg(F.sum("n").alias("rs"))
     # Eager localCheckpoint, not persist(): the streaming monitor calls
     # this per batch, and persisted plans would accumulate cache entries
-    # forever (CacheManager never drops them on GC).  Checkpoint blocks
-    # are released by the ContextCleaner once the DataFrame is
-    # unreferenced; both tables are <= |types|^2 rows (round-8 ADVICE).
+    # forever (CacheManager never drops them on GC).  The ContextCleaner
+    # frees checkpoint blocks only after a later driver-JVM GC collects
+    # the unreferenced DataFrame, so they linger until then (a probe saw
+    # 2 of 5 freed); both tables are <= |types|^2 rows (round-8 ADVICE).
     p = (counts.join(rowsum, "src")
          .filter(F.col("src") != _AB_STATE).localCheckpoint(eager=True))
     r = (p.filter(F.col("dst") == _AB_STATE)

@@ -45,6 +45,18 @@ _SLOW = {
     "test_streaming_history.py::test_scd2_sink_end_to_end",
     "test_streaming_curation.py::test_gate_dedup_and_cross_batch",
     "test_streaming_curation.py::test_replay_idempotent",
+    # the query-level cache check: five graph queries stay in the
+    # default lane, the other thirteen run here
+    *(f"test_graph.py::test_graph_query_leaves_no_cache_entry[{q}]"
+      for q in ("graph_jaccard_link_prediction", "graph_ra_link_prediction",
+                "graph_jaccard_link_prediction_capped",
+                "graph_minhash_link_prediction",
+                "graph_degree_assortativity",
+                "graph_clustering_coefficient",
+                "graph_triangles_degree_oriented", "graph_rich_club",
+                "graph_ktruss", "graph_louvain_move_round",
+                "graph_pagerank_copurchase", "graph_triangles",
+                "graph_ppr_brand")),
 }
 
 

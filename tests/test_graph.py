@@ -1,5 +1,7 @@
 """operators/graph: pagerank's two iteration styles and known-graph
-sanity, symmetrize's row multiset and single read."""
+sanity, symmetrize's row multiset and single read, and the pin /
+release / iterate rule — down to the graph-family queries leaving no
+cache-manager entry behind."""
 
 import math
 from collections import Counter
@@ -7,7 +9,13 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import pagerank, symmetrize
+from storagetapper_spark.operators import graph
+from storagetapper_spark.operators.dedup import connected_components
+from storagetapper_spark.operators.graph import (pagerank, pin, release,
+                                                 symmetrize)
+from storagetapper_spark.plans.common import order_baskets
+from storagetapper_spark.plans.graph2 import _lpa_labels
+from storagetapper_spark.plans.registry import QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -117,28 +125,103 @@ def test_symmetrize_scans_an_unpersisted_input_once(spark):
     assert plan.count("Aggregate [") == 1, plan
 
 
-def _cached_plans(df):
-    """Initial physical plan of every cached table ``df`` reads (an
-    adaptive plan prints its final plan above the initial one)."""
-    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
-    return [leaves.apply(i).cachedPlan().toString()
-            .split("== Initial Plan ==")[-1]
-            for i in range(leaves.size())
-            if leaves.apply(i).nodeName() == "InMemoryRelation"]
-
-
-def test_pagerank_adjacency_reads_the_edge_input_once(spark):
-    """The persisted adjacency (edge + out-strength) evaluates an
+def test_pagerank_adjacency_reads_the_edge_input_once(spark, monkeypatch):
+    """The pinned adjacency (edge + out-strength) evaluates an
     unpersisted pair aggregate once: the out-strength is a window over
     the edges, not a join back to their own groupBy."""
     pairs = (spark.range(60).select((F.col("id") % 9).alias("id_a"),
                                     (F.col("id") % 9 + 1 + F.col("id") % 4)
                                     .alias("id_b"))
              .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("w")))
-    spark.catalog.clearCache()
-    ranks = pagerank(pairs, iterations=2, dedup=False, weight_col="w")
-    adj = [p for p in _cached_plans(ranks) if "out_w" in p]
-    assert adj, _cached_plans(ranks)
+    plans = []
+
+    def recording_pin(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return pin(df)
+
+    monkeypatch.setattr(graph, "pin", recording_pin)
+    pagerank(pairs, iterations=2, dedup=False, weight_col="w")
+    adj = [p for p in plans if "out_w" in p]
+    assert adj, plans
     for plan in adj:
         assert plan.count("Range (") == 1, plan
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _rdd_id(pinned):
+    return pinned._jdf.queryExecution().analyzed().rdd().id()
+
+
+def test_iterate_releases_superseded_generations(spark):
+    """A ladder keeps only the generation it returns: connected
+    components on a 200-node chain (~9 rounds) and the 3-round LPA
+    ladder each leave exactly their result pinned."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(199)],
+                                  "id_a long, id_b long")
+    before = _persistent_rdds(spark)
+    labels = connected_components(chain)
+    assert {r.comp for r in labels.collect()} == {0}
+    assert _persistent_rdds(spark) - before <= {_rdd_id(labels)}
+    release(labels)
+
+    adj = symmetrize(chain, "id_a", "id_b").select(
+        F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+    before = _persistent_rdds(spark)
+    lpa = _lpa_labels(adj)
+    assert _persistent_rdds(spark) - before == {_rdd_id(lpa)}
+    assert lpa.filter("u = 10").first().l == 7  # min id within 3 hops
+    release(lpa)
+
+
+def test_release_raises_on_a_frame_that_is_not_pinned(spark):
+    df = spark.range(10)
+    derived = pin(df).select("id")
+    persisted = df.filter("id > 2").persist()
+    gone = pin(df)
+    release(gone)
+    for frame in (df, derived, persisted, gone):
+        with pytest.raises(ValueError, match="not a live pin"):
+            release(frame)
+    persisted.unpersist()
+
+
+def test_pinned_frame_is_readable_until_released(spark):
+    pinned = pin(spark.range(100).select((F.col("id") % 7).alias("k")))
+    spark.catalog.clearCache()  # a cache-manager reset does not touch it
+    pinned.unpersist()          # nor does DataFrame.unpersist()
+    assert pinned.count() == 100
+    assert _rdd_id(pinned) in _persistent_rdds(spark)
+    release(pinned)
+    assert _rdd_id(pinned) not in _persistent_rdds(spark)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        pinned.count()
+
+
+# the graph family: every query whose materializing sites go through
+# operators/graph; the first five (the ladders and pin-heavy plans) run
+# in the default lane, the rest in the slow lane (tests/conftest.py)
+GRAPH_FAMILY = [
+    "graph_label_propagation", "graph_hits", "graph_kcore",
+    "graph_bfs_distance", "graph_modularity",
+    "graph_jaccard_link_prediction", "graph_ra_link_prediction",
+    "graph_jaccard_link_prediction_capped", "graph_minhash_link_prediction",
+    "graph_degree_assortativity", "graph_clustering_coefficient",
+    "graph_triangles_degree_oriented", "graph_rich_club", "graph_ktruss",
+    "graph_louvain_move_round", "graph_pagerank_copurchase",
+    "graph_triangles", "graph_ppr_brand",
+]
+
+
+@pytest.mark.parametrize("name", GRAPH_FAMILY)
+def test_graph_query_leaves_no_cache_entry(spark, sf_dir, name):
+    """After the query runs, the only cache-manager entry left is the
+    basket pin of skew.basket_units, which an unpersist of a fresh
+    order_baskets plan drops by plan match."""
     spark.catalog.clearCache()
+    QUERIES[name](spark, sf_dir).collect()
+    order_baskets(spark, sf_dir).unpersist()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), name

@@ -1,8 +1,12 @@
 """Audit physical plans of every registry query at a given SF: join
 strategies, pushed filters, exchanges, Python evaluation nodes.
 
-Every query is planned from an empty cache (``clearCache()`` first), so
-a row does not depend on what earlier queries left persisted.
+Every query is planned from an empty cache (``clearCache()`` first, and
+every persistent RDD an earlier query left is unpersisted), so a row
+does not depend on what earlier queries left persisted.  ``rdds=`` is
+the number of persistent RDDs the query leaves once it is planned:
+cache entries it materialized and the checkpoint blocks of its pins
+(operators/graph.pin), which ``clearCache()`` never frees.
 
 Usage: python tools/audit_plans.py [sf_dir]
 """
@@ -24,12 +28,16 @@ def main():
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
 
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
     rows = []
     for name, fn in sorted(QUERIES.items()):
         spark.catalog.clearCache()
+        for rdd in list(persistent().values()):
+            rdd.unpersist(False)
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
+            rdds = persistent().size()
         except Exception as e:  # noqa: BLE001
             rows.append((name, f"ERROR {str(e)[:80]}"))
             continue
@@ -54,7 +62,7 @@ def main():
             flags.append("ROW-PYTHON")
         summary = (f"bhj={stats['bhj']} bnl={stats['bnl']} "
                    f"exch={stats['exch']} "
-                   f"pushed={stats['pushed']} py={stats['py']}"
+                   f"pushed={stats['pushed']} py={stats['py']} rdds={rdds}"
                    + (" ⚠ " + ",".join(flags) if flags else ""))
         rows.append((name, summary))
     for name, s in rows:

@@ -13,8 +13,10 @@ query sweep.
 
 Feed preparation (writing source parquet/json into the work dir) is
 untimed; the timed region is the drain itself.  Feeds are carved from
-the deterministic sf fixtures, split into 3 micro-batches by key so
-cross-batch state folding is actually exercised.
+the deterministic sf fixtures, split by key into 3 one-file sub-dirs,
+and ``_stream`` reads them with ``maxFilesPerTrigger=1`` (a SOURCE
+option: on the writeStream Spark ignores it), so a drain runs 3
+micro-batches and cross-batch state folding is actually exercised.
 
 Each row's ``batches`` is the length of its query's own
 ``recentProgress`` after the drain; the listener's snapshot lags the
@@ -61,14 +63,16 @@ def _stream(spark, feed: str):
     schema = (spark.read.option("recursiveFileLookup", "true")
               .parquet(feed).schema)
     return (spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true").parquet(feed))
+            .option("recursiveFileLookup", "true")
+            .option("maxFilesPerTrigger", 1).parquet(feed))
 
 
 def _write_batches(df, feed: str, key, n: int = 3) -> int:
-    """Untimed feed prep: n parquet sub-dirs, split deterministically."""
+    """Untimed feed prep: n one-file parquet sub-dirs, split
+    deterministically — one micro-batch each under ``_stream``."""
     cnt = df.count()
     for i in range(n):
-        (df.where(key % n == i)
+        (df.where(key % n == i).coalesce(1)
          .write.mode("overwrite").parquet(os.path.join(feed, f"b{i}")))
     return cnt
 
@@ -76,7 +80,6 @@ def _write_batches(df, feed: str, key, n: int = 3) -> int:
 def _foreach_drain(stream, ckpt: str, sink_fn):
     q = (stream.writeStream.foreachBatch(sink_fn)
          .option("checkpointLocation", ckpt)
-         .option("maxFilesPerTrigger", 1)
          .trigger(availableNow=True).start())
     q.awaitTermination(600)
     return q
@@ -574,7 +577,11 @@ def main() -> int:
                 "supplied batches/state_rows/state_memory_bytes above",
     }
     sfname = os.path.basename(os.path.normpath(args.sf)).replace("sf", "")
-    payload = {"sf": float(sfname), "modules": results}
+    payload = {"sf": float(sfname), "modules": results,
+               "box": {"nproc": os.cpu_count(),
+                       "loadavg_end": os.getloadavg(),
+                       "SPARK_GRAFT_CPUS":
+                           os.environ.get("SPARK_GRAFT_CPUS")}}
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "STREAM_BENCH.json")
     if args.modules:  # partial run: merge into the existing artifact
@@ -582,6 +589,7 @@ def main() -> int:
             with open(out) as f:
                 prev = json.load(f)
             prev["modules"].update(results)
+            prev["box"] = payload["box"]
             payload = prev
         except (OSError, ValueError):
             pass
