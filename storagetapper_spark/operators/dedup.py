@@ -22,8 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from storagetapper_spark.operators.graph import (iterate, pin, release,
-                                                 symmetrize)
+from storagetapper_spark.operators.graph import symmetrize
+from storagetapper_spark.operators.pin import iterate, pin, release
 from storagetapper_spark.operators.text import normalize_text
 
 
@@ -101,7 +101,7 @@ def shingle_grams(df: DataFrame, bucket_cols: list[str],
 
     Split out so a query that needs BOTH the sketch and the exact
     pipeline over the same corpus (dedup_minhash_calibration) can
-    persist ONE tokenize+explode pass instead of paying the
+    pin ONE tokenize+explode pass instead of paying the
     regex-normalize scan once per operator (~0.7 s warm at sf0.1,
     measured with the noop sink).
     """
@@ -263,9 +263,8 @@ def minhash_lsh_incremental(corpus_sig: DataFrame, new_docs: DataFrame,
     normally persisted parquet updated per ingest.
     """
     assert num_hashes % bands == 0
-    new_sig = minhash_signature(new_docs, text_col, id_col, num_hashes,
-                                shingle_n).persist()
-    new_sig.count()
+    new_sig = pin(minhash_signature(new_docs, text_col, id_col, num_hashes,
+                                    shingle_n))
     mh = [f"mh_{i}" for i in range(num_hashes)]
     new_b = _band_signature(new_sig, id_col, num_hashes, bands) \
         .withColumn("_new", F.lit(True))
@@ -319,9 +318,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # signature expression re-evaluates it per emitted row (measured
     # 250s vs <1s at sf0.1).  At 100 TB this is the checkpointed
     # signature table.
-    sig = minhash_signature(df, text_col, id_col, num_hashes, shingle_n,
-                            grams=grams).persist()
-    sig.count()
+    sig = pin(minhash_signature(df, text_col, id_col, num_hashes,
+                                shingle_n, grams=grams))
     banded = _band_signature(sig, id_col, num_hashes, bands)
     if star_threshold is not None:
         from pyspark.sql import Window
@@ -329,13 +327,13 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
         # ALL window columns in one pass over one (band, band_key)
         # exchange — branching with filters afterwards would otherwise
         # recompute the banded lineage per branch (measured 14 vs 4
-        # exchanges).  The persist below is the branch point.
+        # exchanges).  The pin below is the branch point.
         w = Window.partitionBy("band", "band_key")
-        sized = banded.select(
+        sized = pin(banded.select(
             "*", F.count(F.lit(1)).over(w).alias("_bsz"),
             F.expr(f"min({id_col})").over(w).alias("_hub"),
             *[F.expr(f"min_by(mh_{i}, {id_col})").over(w)
-               .alias(f"_hub_mh_{i}") for i in range(num_hashes)]).persist()
+              .alias(f"_hub_mh_{i}") for i in range(num_hashes)]))
         small = sized.where(F.col("_bsz") <= star_threshold) \
                      .drop("_bsz", "_hub",
                            *[f"_hub_mh_{i}" for i in range(num_hashes)])
@@ -405,13 +403,13 @@ def ngram_jaccard_pairs(df: DataFrame, bucket_cols: list[str],
     # each (bucket, sh)'s doc ids exactly once (the SET semantics);
     # sort_array + slice keeps the strict id_a < id_b orientation, so
     # the per-pair shared-gram count is identical.
-    baskets = (grams.groupBy(*bucket_cols, F.col("_g").alias("sh"))
-               .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
+    baskets = pin(grams.groupBy(*bucket_cols, F.col("_g").alias("sh"))
+                  .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
     # a pair lives in exactly ONE bucket (each doc has one bucket row),
     # so grouping by the bucket keys too leaves n_inter unchanged and
     # lets keep_bucket callers feed connected_components_blocked.
-    # The explode is size-guarded and pins baskets
-    # (operators/skew.basket_units); sz reads the pinned baskets: a doc
+    # The explode is size-guarded (operators/skew.basket_units) and,
+    # like sz, reads the pinned baskets: a doc
     # sits in one basket per distinct (bucket, gram), so its basket
     # count is its distinct-gram count.
     from storagetapper_spark.operators.skew import guarded_pair_explode
@@ -493,7 +491,7 @@ def connected_components(edges: DataFrame, a_col: str = "id_a",
     convergence is O(log diameter) rounds, not O(diameter) — a
     400-node chain resolves in ~9 rounds where plain propagation needs
     400 (and would silently stop wrong at max_iters).  The rounds run on
-    operators/graph.iterate: each round references the previous
+    operators/pin.iterate: each round references the previous
     generation three times (propagation, jump, convergence sum), so
     every generation is checkpointed, and the superseded one is
     released.  Convergence (r10, guide §2.4): labels are monotonically
@@ -586,17 +584,16 @@ def simhash_near_pairs(df: DataFrame, id_col: str = "doc_id",
     at least one exact band (pigeonhole) → band-equality join, then
     exact popcount filter."""
     width = 64 // blocks
-    banded = df.select(
-        id_col, fp_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.shiftrightunsigned(F.col(fp_col), b * width)
-                      .bitwiseAND(F.lit((1 << width) - 1)).alias("bkey"))
-            for b in range(blocks)
-        ])).alias("bk"),
-    ).select(id_col, fp_col, "bk.band", "bk.bkey")
-    banded = banded.persist()
-    banded.count()  # eager: self-join over lazy persist recomputes lineage
+    # a self-join over a lazy input recomputes it
+    banded = pin(df.select(
+            id_col, fp_col,
+            F.explode(F.array(*[
+                F.struct(F.lit(b).alias("band"),
+                         F.shiftrightunsigned(F.col(fp_col), b * width)
+                          .bitwiseAND(F.lit((1 << width) - 1)).alias("bkey"))
+                for b in range(blocks)
+            ])).alias("bk"),
+        ).select(id_col, fp_col, "bk.band", "bk.bkey"))
     a, b = banded.alias("a"), banded.alias("b")
     xor = F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}"))
     return (
@@ -623,10 +620,11 @@ def ngram_containment_pairs(df: DataFrame, bucket_cols: list[str],
     # the same basket-array intersection build as ngram_jaccard_pairs
     # (collect_set == per-(bucket, gram) distinct doc ids; sort_array +
     # slice keeps the id_a < id_b orientation, so n_inter is identical);
-    # the guarded explode pins baskets and sz reads them.
-    baskets = (shingle_grams(df, bucket_cols, text_col, id_col, shingle_n)
-               .groupBy(*bucket_cols, F.col("_g").alias("sh"))
-               .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
+    # the guarded explode and sz read the pinned baskets.
+    baskets = pin(shingle_grams(df, bucket_cols, text_col, id_col,
+                                shingle_n)
+                  .groupBy(*bucket_cols, F.col("_g").alias("sh"))
+                  .agg(F.sort_array(F.collect_set(id_col)).alias("ids")))
     from storagetapper_spark.operators.skew import guarded_pair_explode
 
     inter = (guarded_pair_explode(baskets, "ids", "id_a", "id_b")
@@ -675,8 +673,7 @@ def dup_ngram_fraction(df: DataFrame, text_col: str = "text",
         F.explode(F.regexp_extract_all(norm, F.lit(pat), 1)).alias("sh"))
     shorts = (df.select(F.col(id_col), norm.alias("sh"))
                 .filter(F.size(F.split("sh", " ")) < shingle_n))
-    inst = grams.unionByName(shorts).persist()
-    inst.count()
+    inst = pin(grams.unionByName(shorts))
     docfreq = (inst.distinct().groupBy("sh")
                .agg(F.count(F.lit(1)).alias("_df")))
     return (inst.join(docfreq, "sh")
@@ -721,9 +718,8 @@ def lsh_verified_pairs(df: DataFrame, text_col: str = "text",
              .otherwise(F.regexp_extract_all(norm, F.lit(pat), 1)))
          .alias("_sh"))
     # r10 (guide §5): both join sides read the same shingle sets —
-    # persist so the normalize+shingle regex runs once, not twice.
-    sets = (sets.select(id_col, "_sh", F.size("_sh").alias("_sz"))
-            .persist())
+    # pin so the normalize+shingle regex runs once, not twice.
+    sets = pin(sets.select(id_col, "_sh", F.size("_sh").alias("_sz")))
     a = sets.select(F.col(id_col).alias("id_a"),
                     F.col("_sh").alias("_sh_a"), F.col("_sz").alias("_sz_a"))
     b = sets.select(F.col(id_col).alias("id_b"),

@@ -1,27 +1,6 @@
-"""Graph primitives over edge DataFrames: ``pin`` / ``release`` /
-``iterate`` (the one materialize-and-release rule), ``symmetrize``
-(both orientations of an edge list in one read) and ``pagerank``.
-
-The rule.  A table that one later action reads from several subtrees,
-or that an iterative loop reads across rounds, is materialized by ONE
-job into a truncated plan and freed as soon as nothing reads it:
-
-- ``pin(df)`` is ``df.localCheckpoint(eager=True)``: one job, the plan
-  is cut at the pin, and the Spark cache manager holds no entry for it.
-  Only the RETURNED frame is materialized, so every reader reads it.
-- ``release(*pinned)`` frees pins now.  ``DataFrame.unpersist()`` and
-  ``spark.catalog.clearCache()`` never free checkpoint blocks; only
-  the checkpointed RDD's own unpersist does.  A released pin cannot be
-  read again.
-- ``iterate(seed, step, rounds, until)`` is the ladder: every
-  generation is checkpointed and materialized by one action (``until``
-  when given, else the pin), and the generation it supersedes is
-  released.  A lazy generation read twice per round would re-derive
-  the whole k-deep lineage (~2^k plans), and persist() never truncates
-  a plan, so no ladder keeps a lazy or persisted generation.
-
-A pin the returned (lazy) result still reads stays until that result
-is garbage-collected; everything else is released by its site.
+"""Graph primitives over edge DataFrames: ``symmetrize`` (both
+orientations of an edge list in one read) and ``pagerank``.  Tables
+they materialize go through operators/pin.
 
 pagerank() complements operators/dedup.connected_components
 (min-label propagation): link-analysis scoring for quality weighting
@@ -34,57 +13,10 @@ co-partitioned.
 
 from __future__ import annotations
 
-from typing import Any, Callable
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def pin(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` with one job and return the pinned frame (an
-    eager local checkpoint; see the module rule).  Read the returned
-    frame, never ``df``; free it with :func:`release`."""
-    return df.localCheckpoint(eager=True)
-
-
-def release(*pinned: DataFrame) -> None:
-    """Free the checkpoint blocks of frames returned by :func:`pin` or
-    :func:`iterate`.  Raises ValueError, before freeing anything, on a
-    frame that is not a live pin (a derived frame, a persisted one, or
-    a pin already released)."""
-    plans = [df._jdf.queryExecution().analyzed() for df in pinned]
-    for plan in plans:
-        if (plan.nodeName() != "LogicalRDD"
-                or not plan.rdd().getStorageLevel().isValid()):
-            raise ValueError(f"not a live pin: {plan.nodeName()}")
-    for plan in plans:
-        plan.rdd().unpersist(False)
-
-
-def iterate(seed: DataFrame, step: Callable[[DataFrame], DataFrame],
-            rounds: int,
-            until: Callable[[DataFrame], Any] | None = None) -> DataFrame:
-    """Up to ``rounds`` applications of ``step`` from ``seed`` → the last
-    generation, pinned and owned by the caller.
-
-    Generation 0 is ``seed`` itself.  Each generation is checkpointed and
-    materialized by ONE action: ``until(generation)`` when given (it must
-    read every row, e.g. a count or a sum; its value is the convergence
-    scalar), otherwise the pin's own job.  Once a generation is
-    materialized its predecessor is released.  With ``until`` the ladder
-    stops early when a generation's value equals its predecessor's."""
-    eager = until is None
-    gen = seed.localCheckpoint(eager=eager)
-    last = until(gen) if until else None
-    for _ in range(rounds):
-        nxt = step(gen).localCheckpoint(eager=eager)
-        value = until(nxt) if until else None
-        release(gen)
-        gen = nxt
-        if until and value == last:
-            break
-        last = value
-    return gen
+from storagetapper_spark.operators.pin import iterate, pin, release
 
 
 def symmetrize(edges: DataFrame, a: str, b: str, *carry: str) -> DataFrame:

@@ -50,9 +50,9 @@ def two_pass_rank(df: DataFrame, order: Sequence[Column | str],
     column-pruned scan that is the right trade at any scale (scanning
     twice beats caching a corpus); but when the input lineage is
     expensive (aggregations, windows, a previous rank pass), pass a
-    persisted+materialized frame — and NEVER chain rank passes on each
+    pinned frame (operators/pin) — and NEVER chain rank passes on each
     other's output (each link doubles the planned lineage; rank
-    independent passes over one cached input and join, as
+    independent passes over one pinned input and join, as
     rfm_segments does).
     """
     part = list(partition)

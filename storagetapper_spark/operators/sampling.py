@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storagetapper_spark.operators.pin import pin
+
 #: 2^64-scale denominator for md5-prefix-as-uniform
 _DENOM = float(1 << 60)
 
@@ -224,14 +226,14 @@ def budget_cut(df: DataFrame, score_col: str, weight_col: str,
     """
     from pyspark.sql import Window
 
-    # r10 (guide §8): persist the narrow (id, score, weight) proxy —
-    # the histogram pass, the bucket-sum collect and the final
-    # candidate window all read it, and without the cache each pass
+    # r10 (guide §8): pin the narrow (id, score, weight) proxy — the
+    # histogram pass, the bucket-sum collect and the final candidate
+    # window all read it, and without the pin each pass
     # re-derived the weights from the raw input (for corpus_budget_cut
     # that is three full tokenize passes over the document text).
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(score_col).cast("long").alias("_score"),
-                     F.col(weight_col).cast("long").alias("_w")).persist()
+    base = pin(df.select(F.col(id_col).alias("_id"),
+                         F.col(score_col).cast("long").alias("_score"),
+                         F.col(weight_col).cast("long").alias("_w")))
     lo, hi = base.agg(F.min("_score"), F.max("_score")).first()
     if lo is None:
         return base.select(F.col("_id").alias(id_col),

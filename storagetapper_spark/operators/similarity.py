@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storagetapper_spark.operators.pin import pin
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -362,9 +364,9 @@ def semantic_dedup(corpus: DataFrame, n_centroids: int = 16,
             pdf["cell"] = (Vn @ Cn.T).argmax(axis=1).astype("int32")
             yield pdf[[id_col, vec_col, "cell"]]
 
-    assigned = (corpus.select(id_col, vec_col)
-                .mapInPandas(assign, assign_schema).persist())
-    assigned.count()   # materialize: pairs + decision join both read it
+    # pairs + decision join both read it
+    assigned = pin(corpus.select(id_col, vec_col)
+                   .mapInPandas(assign, assign_schema))
     # r10: cell-blocked pairs are block-local -> one-pass union-find
     pairs = embedding_near_dup(assigned, id_col=id_col, vec_col=vec_col,
                                threshold=threshold, block_col="cell",

@@ -13,8 +13,9 @@ whether a plan survives a 1000-executor, 100 TB run.
   (no Exchange in the plan) — the Spark analog of the reference's "one
   Kafka partition per key range" layout.
 - ``guarded_pair_explode`` / ``basket_units``: the one pair-guard rule
-  for basket-array pair builds — pin the basket table, read its largest
-  basket, explode in place or spread hot baskets' chunk-pair units.
+  for basket-array pair builds — over a pinned basket table, read its
+  largest basket, explode in place or spread hot baskets' chunk-pair
+  units.
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from storagetapper_spark.operators.pin import require_pinned
 
 _log = logging.getLogger(__name__)
 
@@ -69,12 +72,12 @@ def basket_units(baskets: DataFrame, arr: str = "ps",
     where sortedness makes every x<y), so any per-pair expression
     evaluated per unit reproduces the unguarded result bit-for-bit.
 
-    The rule: pin ``baskets`` (persist) and run ONE aggregate,
-    ``max(size(arr))`` and ``count_if(size(arr) > cap)``; that action
-    both materializes the pin and returns the two numbers, which are
-    logged.  Every later reader of ``baskets`` — this helper's output
-    and the caller's other subtrees — reads the cache through the cache
-    manager, so the basket aggregate runs once.
+    The rule: ``baskets`` must be a live pin (operators/pin.pin; the
+    caller pinned it, so this helper's output and the caller's other
+    subtrees read one materialized table), else ValueError.  ONE
+    aggregate over it, ``max(size(arr))`` and
+    ``count_if(size(arr) > cap)``, returns the two numbers, which are
+    logged.
 
     - max ≤ cap (ALL baskets on TPC-H-shaped data, order size ≤ ~7):
       one self unit per basket, no repartition — the upstream groupBy
@@ -90,7 +93,7 @@ def basket_units(baskets: DataFrame, arr: str = "ps",
       user-specified count is exempt, and defaultParallelism keeps it
       cluster-sized rather than a local constant.
     """
-    baskets.persist()
+    require_pinned(baskets)
     size = F.size(arr)
     mx, n_over = baskets.agg(F.max(size), F.count_if(size > cap)).first()
     mx = mx or 0  # max over an empty basket table is NULL
@@ -130,8 +133,8 @@ def guarded_pair_explode(baskets: DataFrame, arr: str = "ps",
     passed through plus ``a``/``b`` — an EXACT multiset match of the
     unguarded ``pair_list_expr`` explode (and of the pre-r10
     distinct + self-join) for any cap/chunk.  One explode over the
-    units of :func:`basket_units`, which pins ``baskets`` and picks the
-    in-place or the spread shape from what it observed."""
+    units of :func:`basket_units`, which requires ``baskets`` pinned
+    and picks the in-place or the spread shape from what it observed."""
     keepc = [F.col(c) for c in keep]
     cross = (f"flatten(transform(_u.xs, x -> transform(_u.ys, "
              f"y -> named_struct('{a}', x, '{b}', y))))")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import iterate, release
+from storagetapper_spark.operators.pin import iterate, pin, release
 
 
 def occurrence_count(text: Column, marker: str) -> Column:
@@ -220,13 +220,12 @@ def repeated_passages(df: DataFrame, text_col: str = "text", k: int = 8,
     At 100 TB every wide op is keyed by gram or doc_id — never all-pairs.
     """
     # r10 (guide §5): the exploded window table feeds BOTH the gram-
-    # frequency agg and the join back — persist the narrow (doc_id,
-    # gram) rows so the text is tokenized once, as the docstring
-    # promises (plan-wise the two references otherwise re-run the
-    # generator).
-    exploded = df.select(id_col,
-                         F.explode(token_windows(F.col(text_col), k))
-                          .alias("gram")).persist()
+    # frequency agg and the join back — pin the narrow (doc_id, gram)
+    # rows so the text is tokenized once, as the docstring promises
+    # (plan-wise the two references otherwise re-run the generator).
+    exploded = pin(df.select(id_col,
+                             F.explode(token_windows(F.col(text_col), k))
+                             .alias("gram")))
     gram_docs = (exploded.groupBy("gram")
                  .agg(F.count(F.lit(1)).alias("n_docs"))
                  .filter(F.col("n_docs") >= min_docs))
@@ -349,7 +348,7 @@ def bpe_train(docs: DataFrame, rounds: int = 3, text_col: str = "text",
     pair text), merge it greedily everywhere, repeat.  Returns the merge
     table (round, pair, n) — the artifact a tokenizer ships.
 
-    The rounds are one operators/graph.iterate ladder, so each round's
+    The rounds are one operators/pin.iterate ladder, so each round's
     stream is checkpointed and lineage never compounds.  Since r10 the
     stream is one token ARRAY per document (see _bpe_train_loop): a
     round costs one Arrow pass for the per-batch pair Counter, one
@@ -406,7 +405,7 @@ def _bpe_train_loop(docs: DataFrame, rounds: int, text_col: str,
     the 1st, 3rd, … — exactly what the left-to-right scan does (see
     test_bpe_merge's reference checks).
 
-    The rounds run on operators/graph.iterate: a round collects the
+    The rounds run on operators/pin.iterate: a round collects the
     pinned generation's top pair, and the merged stream is the next
     generation.  Once no pair is left, the remaining rounds copy the
     stream unchanged."""

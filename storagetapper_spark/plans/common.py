@@ -7,6 +7,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.operators.skew import guarded_pair_explode
 
 
@@ -36,10 +37,12 @@ def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket table behind every co-purchase graph.  One groupBy(orderkey)
     shuffle; collect_set is the per-order distinct of the oracles'
     ``SELECT DISTINCT l_orderkey, l_partkey``, and the sort gives pair
-    builds their strict pa < pb orientation."""
-    return (t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
+    builds their strict pa < pb orientation.  Returned pinned
+    (operators/pin): the pair guard and the caller's other readers read
+    the one materialized table."""
+    return pin(t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+               .groupBy("l_orderkey")
+               .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")))
 
 
 def copurchase_pairs(baskets: DataFrame) -> DataFrame:
@@ -48,11 +51,10 @@ def copurchase_pairs(baskets: DataFrame) -> DataFrame:
     ``ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey``
     grouped by pair, built from :func:`order_baskets` instead.
 
-    The pairs come from ``skew.guarded_pair_explode``, whose one action
-    pins ``baskets`` and picks the in-place or the hot-basket spread
-    explode (same pair multiset either way), so the caller's other
-    readers of ``baskets`` hit the cache.  Callers apply their own
-    support threshold (``n_ab >= 2`` for the strong graph); a caller
+    The pairs come from ``skew.guarded_pair_explode`` over the pinned
+    ``baskets``; its one action picks the in-place or the hot-basket
+    spread explode (same pair multiset either way).  Callers apply
+    their own support threshold (``n_ab >= 2`` for the strong graph); a caller
     that selects only (pa, pb) gets a plain distinct — the unused count
     is pruned."""
     return (guarded_pair_explode(baskets, "ps", "pa", "pb")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from storagetapper_spark.operators import dedup as D
 from storagetapper_spark.operators import similarity as S
 from storagetapper_spark.operators import text as X
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 
@@ -1072,11 +1073,9 @@ def dedup_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     # r11 (guide §1.2): both pipelines shingle the SAME corpus with the
     # SAME n — build the token-occurrence table once and share it
     # (operators/dedup.shingle_grams; ~0.7 s warm per avoided
-    # tokenize+explode pass at sf0.1).  Lazy persist is race-free here:
-    # the LSH side's sig.count() is the first action and references
-    # grams exactly once; the exact side then reads the cache.
-    grams = D.shingle_grams(docs, ["lang", "source"],
-                            shingle_n=_SHINGLE_N).persist()
+    # tokenize+explode pass at sf0.1), pinned: both sides read it.
+    grams = pin(D.shingle_grams(docs, ["lang", "source"],
+                                shingle_n=_SHINGLE_N))
     est = D.minhash_lsh_pairs(docs, num_hashes=_MH_HASHES, bands=4,
                               shingle_n=_SHINGLE_N, grams=grams)
     exact = D.ngram_jaccard_pairs(docs, bucket_cols=["lang", "source"],

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.operators.ranks import ntile_from_rank, two_pass_rank
 from storagetapper_spark.operators.text import word_count
 from storagetapper_spark.plans.common import t
@@ -106,10 +107,11 @@ def sample_negatives_contrastive(spark: SparkSession, sf: str) -> DataFrame:
     unbounded fan-out; md5 draws make the sample replayable."""
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_partkey")
     o = t(spark, sf, "orders").select("o_orderkey", "o_custkey")
-    pos = (li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-           .select(F.col("o_custkey").alias("c"),
-                   F.col("l_partkey").alias("p"))
-           .distinct().persist())
+    # the pool collect and the per-user draw read it
+    pos = pin(li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+              .select(F.col("o_custkey").alias("c"),
+                      F.col("l_partkey").alias("p"))
+              .distinct())
     # r10 (guide §2.4): the candidate pool is 100 part ids — collect it
     # (k-bounded, the model-collect convention) and do the whole
     # negative draw as NARROW array expressions after ONE groupBy(c):

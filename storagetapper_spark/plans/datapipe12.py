@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from storagetapper_spark.operators import dedup as D
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 QUERIES: dict = {}
@@ -135,11 +136,11 @@ def dedup_winnowing_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """
     # r10 (guide §5): the winnowing pipeline (shingle regex + sliding
     # window) is referenced by per_doc, freq and both sides of the
-    # bucket join — persist the narrow (doc_id, fp_hash) set so the
-    # text is fingerprinted once, not four times.
-    fp = (D.winnow_fingerprints(t(spark, sf, "documents"),
-                                shingle_n=_SHINGLE_N, window_w=_WIN_W)
-          .select("doc_id", "fp_hash").distinct().persist())
+    # bucket join — pin the narrow (doc_id, fp_hash) set so the text
+    # is fingerprinted once, not four times.
+    fp = pin(D.winnow_fingerprints(t(spark, sf, "documents"),
+                                   shingle_n=_SHINGLE_N, window_w=_WIN_W)
+             .select("doc_id", "fp_hash").distinct())
     per_doc = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fp"))
     freq = (fp.groupBy("fp_hash").agg(F.count(F.lit(1)).alias("_docs"))
               .filter((F.col("_docs") >= 2) & (F.col("_docs") <= _FP_DOC_CAP)))
@@ -404,10 +405,10 @@ def sample_dsir_importance(spark: SparkSession, sf: str) -> DataFrame:
     bucket = F.pmod(F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10)
                     .cast("long"), F.lit(_DSIR_BUCKETS)).alias("bucket")
     # r10 (guide §5): the token stream feeds five readouts (both count
-    # tables, both totals, the per-doc sum) — persist the narrow
+    # tables, both totals, the per-doc sum) — pin the narrow
     # (doc_id, source, bucket) rows so the normalize+tokenize+md5
     # pipeline runs once.
-    tb = toks.select("doc_id", "source", bucket).persist()
+    tb = pin(toks.select("doc_id", "source", bucket))
     src_cnt = tb.groupBy("bucket").agg(F.count(F.lit(1)).alias("cs"))
     tgt_cnt = (tb.filter(F.col("source") == "src0")
                .groupBy("bucket").agg(F.count(F.lit(1)).alias("ct")))

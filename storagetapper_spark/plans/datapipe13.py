@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 QUERIES: dict = {}
@@ -129,8 +130,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf: str) -> DataFrame:
          .cast("long"))
     y = (F.col("label") == 1).cast("long")
     # r10 (guide §5): sc feeds the min/max pass and the binning agg —
-    # persist the narrow (v, y) projection so embeddings scan once.
-    sc = emb.select(v.alias("v"), y.alias("y")).persist()
+    # pin the narrow (v, y) projection so embeddings scan once.
+    sc = pin(emb.select(v.alias("v"), y.alias("y")))
     mm = sc.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
     binned = (sc.crossJoin(F.broadcast(mm))
               .select(F.expr(f"(v - mn) * {_ISO_BINS} div (mx - mn + 1)")
@@ -223,7 +224,7 @@ def recsys_coverage_diversity(spark: SparkSession, sf: str) -> DataFrame:
     # 5.1-6.1s vs 2.9s at sf0.1); the `!=` self-join emits both
     # orientations in one pass.  sim (referenced by the top-k window
     # AND the intra-list re-score) and recs (three readouts) are
-    # persisted so the pair build runs once (guide §5).
+    # pinned so the pair build runs once (guide §5).
     li = (t(spark, sf, "lineitem")
           .select("l_orderkey", "l_partkey").distinct())
     a, b = li.alias("a"), li.alias("b")
@@ -240,18 +241,16 @@ def recsys_coverage_diversity(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("n_orders").alias("n_b"))
     cos = (F.col("n_ab").cast("double")
            / F.sqrt((F.col("n_a") * F.col("n_b")).cast("double")))
-    sim = (cooc.join(F.broadcast(ca), F.col("pa") == F.col("ka"))
-           .join(F.broadcast(cb), F.col("pb") == F.col("kb"))
-           .select("pa", "pb", "n_ab",
-                   F.floor(cos * 1_000_000).cast("long")
-                   .alias("cos_micro"))
-           .persist())
+    sim = pin(cooc.join(F.broadcast(ca), F.col("pa") == F.col("ka"))
+              .join(F.broadcast(cb), F.col("pb") == F.col("kb"))
+              .select("pa", "pb", "n_ab",
+                      F.floor(cos * 1_000_000).cast("long")
+                      .alias("cos_micro")))
     w = Window.partitionBy("pa").orderBy(
         F.desc("cos_micro"), F.desc("n_ab"), F.asc("pb"))
-    recs = (sim.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _RECS_K)
-            .select("pa", "rk", "pb")
-            .persist())
+    recs = pin(sim.withColumn("rk", F.row_number().over(w))
+               .filter(F.col("rk") <= _RECS_K)
+               .select("pa", "rk", "pb"))
     r1 = recs.select("pa", F.col("rk").alias("r1"), F.col("pb").alias("x"))
     r2 = recs.select(F.col("pa").alias("pa2"), F.col("rk").alias("r2"),
                      F.col("pb").alias("y"))
@@ -347,14 +346,12 @@ def _unigram_prep(spark: SparkSession, sf: str):
 
     docs = t(spark, sf, "documents")
     # r10 (guide §5): the word-frequency table feeds the vocabulary
-    # build (collected) AND the Viterbi mapInPandas — persist the
+    # build (collected) AND the Viterbi mapInPandas — pin the
     # vocabulary-bounded table so the corpus tokenizes once.
-    words = (docs.select(F.explode(F.split(normalize_text(F.col("text")),
-                                           " ")).alias("word"))
-             .filter((F.length("word") >= 1)
-                     & (F.length("word") <= _UNI_MAXLEN))
-             .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-             .persist())
+    words = pin(docs.select(F.explode(F.split(
+        normalize_text(F.col("text")), " ")).alias("word"))
+        .filter((F.length("word") >= 1) & (F.length("word") <= _UNI_MAXLEN))
+        .groupBy("word").agg(F.count(F.lit(1)).alias("freq")))
     subs = words.select(
         "freq",
         F.explode(F.expr(f"""flatten(transform(sequence(1, {_UNI_MAXPIECE}),

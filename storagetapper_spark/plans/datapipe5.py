@@ -1021,8 +1021,8 @@ def tokenizer_bpe_train(spark: SparkSession, sf: str) -> DataFrame:
     Iterative-with-exact-oracle: the DuckDB oracle unrolls the same 3
     rounds as nested CTEs (top-pair selection is a deterministic scalar
     subquery per round), so even the loop's data-dependent choices are
-    hash-checked.  Spark side follows the persisted-generation rule —
-    eager localCheckpoint per round, positions renumbered so the
+    hash-checked.  Spark side runs on the operators/pin.iterate ladder
+    — one checkpointed generation per round, positions renumbered so the
     gaps-and-islands greedy merge stays correct on round ≥ 2."""
     from storagetapper_spark.operators.text import bpe_train
 

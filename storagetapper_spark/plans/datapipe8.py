@@ -20,7 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import iterate, pin
+from storagetapper_spark.operators.pin import iterate, pin
 from storagetapper_spark.plans.common import t
 from storagetapper_spark.plans.graph2 import _EDGE_SQL, _adj, _edges
 
@@ -239,7 +239,7 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     """k-core decomposition of the co-purchase graph (k=2,3): repeated
     peeling of nodes with alive-degree < k.  The iterative-fixpoint
     operator shape: each round is one equi-join + agg, and the rounds
-    are one operators/graph.iterate ladder whose ``until`` is the alive
+    are one operators/pin.iterate ladder whose ``until`` is the alive
     count — that count is the one action that materializes a
     generation, and an unchanged count is the fixpoint (equal-count ⇒
     equal-set under monotone peeling).  Both engines run the identical

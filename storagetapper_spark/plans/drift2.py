@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _DEC = "decimal(19,0)"
@@ -39,28 +40,26 @@ def drift_ks_by_feature(spark: SparkSession, sf: str) -> DataFrame:
                     "'discount_pct', dv) AS (feat, v)"))
     # r10 (guide §1.2): per_v is value-grid-bounded but its lineitem
     # scan+stack lineage fed two branches (tot + the cumulative
-    # window), and cum feeds two more (maxd + arg) — persisting both
+    # window), and cum feeds two more (maxd + arg) — pinning both
     # tiny aggregates keeps the fact scan to ONE evaluation.
-    per_v = (long.groupBy("feat", "v")
-             .agg(F.sum(F.when(F.col("is_a"), 1).otherwise(0))
-                  .alias("c_a"),
-                  F.sum(F.when(F.col("is_a"), 0).otherwise(1))
-                  .alias("c_b"))
-             .persist())
+    per_v = pin(long.groupBy("feat", "v")
+                .agg(F.sum(F.when(F.col("is_a"), 1).otherwise(0))
+                     .alias("c_a"),
+                     F.sum(F.when(F.col("is_a"), 0).otherwise(1))
+                     .alias("c_b")))
     tot = per_v.groupBy("feat").agg(F.sum("c_a").alias("n_a"),
                                     F.sum("c_b").alias("n_b"))
     w = (Window.partitionBy("feat").orderBy("v")
          .rowsBetween(Window.unboundedPreceding, 0))
-    cum = (per_v.select(
-        "feat", "v",
-        F.sum("c_a").over(w).alias("cum_a"),
-        F.sum("c_b").over(w).alias("cum_b"))
-        .join(F.broadcast(tot), "feat")
-        .select("feat", "v", "n_a", "n_b",
-                F.abs(F.col("cum_a").cast(_DEC) * F.col("n_b").cast(_DEC)
-                      - F.col("cum_b").cast(_DEC)
-                      * F.col("n_a").cast(_DEC)).alias("diff"))
-        .persist())
+    cum = pin(per_v.select(
+           "feat", "v",
+           F.sum("c_a").over(w).alias("cum_a"),
+           F.sum("c_b").over(w).alias("cum_b"))
+           .join(F.broadcast(tot), "feat")
+           .select("feat", "v", "n_a", "n_b",
+                   F.abs(F.col("cum_a").cast(_DEC) * F.col("n_b").cast(_DEC)
+                         - F.col("cum_b").cast(_DEC)
+                         * F.col("n_a").cast(_DEC)).alias("diff")))
     maxd = cum.groupBy("feat").agg(F.max("diff").alias("maxd"))
     arg = (cum.join(F.broadcast(maxd), "feat")
            .filter(F.col("diff") == F.col("maxd"))

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _EPS = 20000          # radius in centi-units (plane is [0, 1e6)^2)
@@ -130,10 +131,10 @@ def geo_dbscan_core(spark: SparkSession, sf: str) -> DataFrame:
     deliberately out of scope here (this query is the per-point
     classifier every DBSCAN run starts with)."""
     pts = _points(spark, sf)
-    # one grid join, persisted: the degree pass and the border pass
+    # one grid join, pinned: the degree pass and the border pass
     # both consume it without recomputing the 3x3 probe explode
-    within = (_grid_pairs(pts).filter(F.col("d2") <= _EPS * _EPS)
-              .select("id_a", "id_b").persist())
+    within = pin(_grid_pairs(pts).filter(F.col("d2") <= _EPS * _EPS)
+                 .select("id_a", "id_b"))
     deg = (pts.join(within.groupBy("id_a")
                     .agg(F.count(F.lit(1)).alias("n_nb"))
                     .withColumnRenamed("id_a", "id"), "id", "left")

@@ -23,8 +23,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import (iterate, pin, release,
-                                                 symmetrize)
+from storagetapper_spark.operators.graph import symmetrize
+from storagetapper_spark.operators.pin import iterate, pin, release
 from storagetapper_spark.plans.common import (copurchase_pairs,
                                               order_baskets, t)
 
@@ -414,7 +414,7 @@ def graph_bfs_distance(spark: SparkSession, sf: str) -> DataFrame:
     Fixed-depth unrolled frontier expansion — each hop is one equi-join
     frontier⋈adj followed by a distinct and an accumulated-visited
     anti-join; at 100 TB this is the standard iterative BFS whose
-    frontier is pinned per generation (operators/graph.pin): the next
+    frontier is pinned per generation (operators/pin.pin): the next
     hop, the visited set and the profile row all read it."""
     # adj is read once per hop plus the source agg (e needs no pin of
     # its own: adj is its only consumer)
@@ -530,7 +530,7 @@ def _lpa_labels(adj: DataFrame) -> DataFrame:
     """(u, l), pinned: min node id within ``_LPA_ROUNDS`` hops of u — the
     min-label propagation ladder over adjacency (u, v).  Each round
     reads the previous generation twice (the union side and the join
-    side), so it runs on operators/graph.iterate (a lazy ladder
+    side), so it runs on operators/pin.iterate (a lazy ladder
     re-executes ~2^rounds times: measured 6.3–7.5 s lazy vs 3.8–4.0 s
     checkpointed)."""
     def step(labels: DataFrame) -> DataFrame:

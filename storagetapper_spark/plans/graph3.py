@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from storagetapper_spark.operators.graph import pin, release, symmetrize
+from storagetapper_spark.operators.graph import symmetrize
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.plans.common import (copurchase_pairs,
                                               order_baskets, t)
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import events_t, t
 
 _GD_ITERS = 10
@@ -32,15 +33,14 @@ def _features(spark: SparkSession, sf: str) -> DataFrame:
     event value exceed the global mean?"""
     ev = events_t(spark, sf)
     # r10 (guide §5): per_user feeds both the global-mean aggregate and
-    # the feature projection — persist the narrow per-user rollup so
+    # the feature projection — pin the narrow per-user rollup so
     # events scan once.
-    per_user = (ev.groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n_ev"),
-                     F.sum(F.when(F.col("event_type") == "view", 1)
-                           .otherwise(0)).alias("n_view"),
-                     F.sum(F.round(F.col("value") * 100).cast("long"))
-                     .alias("val_cents"))
-                .persist())
+    per_user = pin(ev.groupBy("user_id")
+                   .agg(F.count(F.lit(1)).alias("n_ev"),
+                        F.sum(F.when(F.col("event_type") == "view", 1)
+                              .otherwise(0)).alias("n_view"),
+                        F.sum(F.round(F.col("value") * 100).cast("long"))
+                        .alias("val_cents")))
     g = per_user.agg(F.sum("val_cents").alias("tv"),
                      F.sum("n_ev").alias("tn"))
     return (per_user.crossJoin(F.broadcast(g))
@@ -68,7 +68,8 @@ def ml_logistic_gd(spark: SparkSession, sf: str) -> DataFrame:
     and training accuracy."""
     import math
 
-    feats = _features(spark, sf).persist()
+    # every round's gradient and the accuracy read the features
+    feats = pin(_features(spark, sf))
     n = feats.count()
     w = [0, 0, 0]  # nano units
     for _ in range(_GD_ITERS):
@@ -310,12 +311,12 @@ def ml_kmeans_lloyd(spark: SparkSession, sf: str) -> DataFrame:
     (shuffle carries K×64 rows per task); driver traffic is K×64
     integers per round — the canonical distributed Lloyd.  Output:
     (k, dim, c_micro, n_members, inertia_k) — K×64 rows."""
-    xq = (t(spark, sf, "embeddings")
-          .select("vec_id",
-                  F.transform(F.col("embedding"),
-                              lambda x: F.floor(x.cast("double") * 1000000)
-                              .cast("long")).alias("xq"))
-          .persist())
+    # the seeds and every round's passes read it
+    xq = pin(t(spark, sf, "embeddings")
+             .select("vec_id",
+                     F.transform(F.col("embedding"),
+                                 lambda x: F.floor(x.cast("double") * 1000000)
+                                 .cast("long")).alias("xq")))
     seeds = (xq.filter(F.col("vec_id") < _KM_K)
              .select("vec_id", "xq").collect())
     cent = {int(r.vec_id): [int(v) for v in r.xq] for r in seeds}
@@ -684,12 +685,13 @@ def ml_boosted_stumps(spark: SparkSession, sf: str) -> DataFrame:
     micro units (residual^2 = 1e12-scale); widen the SSE accumulators
     to DECIMAL(38,0) past that."""
     emb = t(spark, sf, "embeddings")
-    base = emb.select(
+    # read by tot, g1 and the residual passes
+    base = pin(emb.select(
         (F.col("label").cast("long") * 1000000).alias("y"),
         F.floor(F.element_at("embedding", 1).cast("double") * 1000000)
         .cast("long").alias("f1"),
         F.floor(F.element_at("embedding", 2).cast("double") * 1000000)
-        .cast("long").alias("f2")).persist()
+        .cast("long").alias("f2")))
     tot = base.agg(F.sum("y").alias("s_all"),
                    F.count(F.lit(1)).alias("n_all"),
                    F.sum(F.col("y") * F.col("y")).alias("ss_all"))

@@ -31,6 +31,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.plans.common import t
 
 _DIM = 64          # fixture embedding dimension
@@ -86,7 +87,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf: str) -> DataFrame:
     reduction) with a driver-side eigh — the standard tall-skinny PCA
     split."""
     cq, m = _centered(spark, sf)
-    cq = cq.persist()
+    cq = pin(cq)  # the trace and every round read it
 
     trace = int(cq.select(
         F.aggregate(F.transform("cq", lambda c: c * c),
@@ -113,7 +114,7 @@ def embedding_pca_power_iteration(spark: SparkSession, sf: str) -> DataFrame:
         norm = math.sqrt(float(norm2))
         # identical expression to the oracle: double(y)/norm*1e6, floored
         v = [math.floor(float(yy) / norm * 1000000.0) for yy in y]
-    cq.unpersist()
+    release(cq)
 
     growth_share_micro = math.floor(norm / float(trace) * 1000000.0)
     rows = [(j, m[j], v[j], growth_share_micro) for j in range(_DIM)]

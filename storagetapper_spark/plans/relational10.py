@@ -13,9 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin, release
+from storagetapper_spark.operators.similarity import cosine
 from storagetapper_spark.plans.common import (copurchase_pairs,
                                               order_baskets, t)
-from storagetapper_spark.operators.similarity import cosine
 
 QUERIES: dict = {}
 
@@ -268,9 +269,9 @@ def overlapping_orders(spark: SparkSession, sf: str) -> DataFrame:
     # a.o_orderkey < b.o_orderkey; the symmetric 30-day predicate is
     # |datediff| <= 30, evaluated inside the fold.  Only the per-customer
     # pair COUNT leaves the map side.
-    baskets = (o.groupBy("o_custkey")
-               .agg(F.sort_array(F.collect_list(
-                   F.struct("o_orderkey", "o_orderdate"))).alias("os")))
+    baskets = pin(o.groupBy("o_custkey")
+                  .agg(F.sort_array(F.collect_list(
+                      F.struct("o_orderkey", "o_orderdate"))).alias("os")))
     # r11 (guide §2.2/§2.5): the O(s²) in-task pair fold is size-guarded
     # — a customer with more than _PAIR_CAP orders decomposes into
     # redistributed chunk-pair units (operators/skew.basket_units), so
@@ -335,12 +336,12 @@ def price_outliers_mad(spark: SparkSession, sf: str) -> DataFrame:
     unchanged; the exact form is kept here for the oracle."""
     li = t(spark, sf, "lineitem").select("l_partkey", "l_extendedprice")
     p = t(spark, sf, "part").select("p_partkey", "p_brand")
-    # r10: persist the narrow priced projection — the median pass, the
+    # r10: pin the narrow priced projection — the median pass, the
     # MAD pass and the final fence count each consumed it, re-paying
     # the scan + broadcast join three times per run.
-    priced = (li.join(F.broadcast(p),
-                      F.col("l_partkey") == F.col("p_partkey"))
-              .select("p_brand", "l_extendedprice").persist())
+    priced = pin(li.join(F.broadcast(p),
+                         F.col("l_partkey") == F.col("p_partkey"))
+                 .select("p_brand", "l_extendedprice"))
     med = (priced.groupBy("p_brand")
            .agg(F.percentile("l_extendedprice", 0.5).alias("med")))
     dev = (priced.join(F.broadcast(med), "p_brand")
@@ -459,7 +460,7 @@ def text_lm_score(spark: SparkSession, sf: str) -> DataFrame:
     corpus itself, then score each document by its cross-entropy under
     that model — gibberish and boilerplate land far from the corpus
     mean.  ONE explode pass builds the sparse doc×bigram count matrix
-    (persisted eagerly — both the model and the scoring derive from
+    (pinned — both the model and the scoring derive from
     it, and the house rule is never to let a generator recompute under
     a self-referencing lineage); the model (~|alphabet|² rows) folds
     out of the matrix and broadcasts back; the per-doc score is then
@@ -489,9 +490,9 @@ def text_lm_score(spark: SparkSession, sf: str) -> DataFrame:
             if ids:
                 yield pd.DataFrame({"doc_id": ids, "bg": bgs, "c": cs})
 
-    mat = (norm.mapInPandas(_bigram_counts, "doc_id long, bg string, c long")
-           .persist())
-    mat.count()  # eager: one explode feeds both branches below
+    # one explode feeds both branches below
+    mat = pin(norm.mapInPandas(_bigram_counts,
+                               "doc_id long, bg string, c long"))
     model = mat.groupBy("bg").agg(F.sum("c").alias("n"))
     total = model.agg(F.sum("n").cast("double").alias("t"))
     scored = (mat.join(F.broadcast(model), "bg")
@@ -535,7 +536,7 @@ def graph_pagerank_copurchase(spark: SparkSession, sf: str) -> DataFrame:
     pairs — bounded by basket size, never all-pairs).
     operators/graph.pagerank runs a fixed 5-iteration push: each round
     shuffles only the edge list, and the rounds form one lazy plan over
-    the persisted adjacency.  Output is
+    the pinned adjacency.  Output is
     pr scaled by node count (≈1.0 at uniform) rounded to 5dp — the
     fixed iteration count keeps it deterministic and oracle-checkable
     against a 5×-unrolled SQL recursion."""
@@ -595,10 +596,9 @@ def market_basket_rules(spark: SparkSession, sf: str) -> DataFrame:
     engine-portable to the last bit before rounding."""
     # ONE basket table feeds all three readouts: its row count IS the
     # distinct-order count, its explode gives the per-item order
-    # frequencies, and copurchase_pairs' pin serves both from the cache
+    # frequencies, and copurchase_pairs reads the same pin
     baskets = order_baskets(spark, sf)
-    n_orders = baskets.agg(F.count(F.lit(1))
-                           .cast("double").alias("n_orders"))
+    n_orders = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     item = (baskets.select(F.explode("ps").alias("l_partkey"))
             .groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_item")))
     pairs = copurchase_pairs(baskets).filter(F.col("n_ab") >= 2)
@@ -612,19 +612,25 @@ def market_basket_rules(spark: SparkSession, sf: str) -> DataFrame:
     p_ab = F.col("n_ab") / F.col("n_orders")
     p_a = F.col("n_a") / F.col("n_orders")
     p_b = F.col("n_b") / F.col("n_orders")
+    # lift = n_ab·n_orders / (n_a·n_b): exact BIGINT products, one
+    # shared final division (the r9 idiom; the three-quotient form
+    # drifted a half-ulp from DuckDB's at sf0.001)
+    lift = ((F.col("n_ab") * F.col("n_orders")).cast("double")
+            / (F.col("n_a") * F.col("n_b")).cast("double"))
     return joined.select(
         "pa", "pb", "n_ab",
         F.round(p_ab, 6).alias("support"),
         F.round(F.col("n_ab") / F.col("n_a"), 6).alias("conf_a_b"),
         F.round(F.col("n_ab") / F.col("n_b"), 6).alias("conf_b_a"),
-        F.round(p_ab / (p_a * p_b), 4).alias("lift"),
+        F.round(lift, 4).alias("lift"),
         F.round(F.log(p_ab / (p_a * p_b)) / -F.log(p_ab), 4).alias("npmi"),
     ).orderBy("pa", "pb")
 
 
 BASKET_SQL = """
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-n AS (SELECT CAST(count(DISTINCT l_orderkey) AS DOUBLE) AS n_orders FROM li),
+n AS (SELECT CAST(count(DISTINCT l_orderkey) AS DOUBLE) AS n_orders,
+             CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_int FROM li),
 item AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_item
          FROM li GROUP BY l_partkey),
 pairs AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb,
@@ -636,9 +642,8 @@ SELECT pa, pb, n_ab,
        round(n_ab / n.n_orders, 6) AS support,
        round(n_ab / CAST(ia.n_item AS DOUBLE), 6) AS conf_a_b,
        round(n_ab / CAST(ib.n_item AS DOUBLE), 6) AS conf_b_a,
-       round((n_ab / n.n_orders)
-             / ((ia.n_item / n.n_orders) * (ib.n_item / n.n_orders)), 4)
-         AS lift,
+       round(CAST(n_ab * n.n_int AS DOUBLE)
+             / CAST(ia.n_item * ib.n_item AS DOUBLE), 4) AS lift,
        round(ln((n_ab / n.n_orders)
                 / ((ia.n_item / n.n_orders) * (ib.n_item / n.n_orders)))
              / -ln(n_ab / n.n_orders), 4) AS npmi
@@ -1381,7 +1386,6 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
     (then id), which provably bounds per-vertex wedge fan-out by
     out-degree ≤ √(2|E|); the id orientation here keeps the oracle
     simple on the thresholded (n_ab ≥ 2) basket graph."""
-    from storagetapper_spark.operators.graph import pin, release
     from storagetapper_spark.plans.graph2 import _edges
 
     e = pin(_edges(spark, sf))  # three counts below read it
@@ -1755,15 +1759,14 @@ def survival_km(spark: SparkSession, sf: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (F.col("ts").cast("double")
            - F.lag(F.col("ts").cast("double"), 1).over(w))
-    sess = (ev.withColumn("new_sess",
-                          F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-            .withColumn("session_id", F.sum("new_sess").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("user_id", "session_id")
-            .agg(F.unix_micros(F.min("ts")).alias("s_us"),
-                 F.unix_micros(F.max("ts")).alias("e_us"))
-            .persist())
-    # r10 (guide §5/§1.2): sess persisted (the horizon and the grid both
+    sess = pin(ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800),
+                                                1).otherwise(0))
+               .withColumn("session_id", F.sum("new_sess").over(
+                   w.rowsBetween(Window.unboundedPreceding, 0)))
+               .groupBy("user_id", "session_id")
+               .agg(F.unix_micros(F.min("ts")).alias("s_us"),
+                    F.unix_micros(F.max("ts")).alias("e_us")))
+    # r10 (guide §5/§1.2): sess pinned (the horizon and the grid both
     # need it), horizon from the rollup itself (max(e_us) == max(ts) —
     # every event is in a session), and the at-risk total from an
     # unbounded frame on the duration grid instead of the former eager
@@ -1878,12 +1881,12 @@ def attribution_linear(spark: SparkSession, sf: str) -> DataFrame:
          .rowsBetween(Window.unboundedPreceding, -1))
     # r10 (guide §5): ep is referenced five times in the final plan
     # (touches, purchases and the raw-touch side, × the credited/direct
-    # branches) — persist the narrow windowed projection so the
+    # branches) — pin the narrow windowed projection so the
     # user-keyed window pass over events runs once.
-    ep = ev.withColumn(
+    ep = pin(ev.withColumn(
         "p_idx",
         F.coalesce(F.sum(F.when(F.col("event_type") == "purchase", 1)
-                         .otherwise(0)).over(w), F.lit(0))).persist()
+                         .otherwise(0)).over(w), F.lit(0))))
     touches = (ep.filter(F.col("event_type") != "purchase")
                .groupBy("user_id", "p_idx")
                .agg(F.count(F.lit(1)).alias("n_touches")))
@@ -2550,13 +2553,13 @@ def winsorized_prices(spark: SparkSession, sf: str) -> DataFrame:
     the boundary round."""
     li = t(spark, sf, "lineitem").select("l_partkey", "l_extendedprice")
     p = t(spark, sf, "part").select("p_partkey", "p_type")
-    # r10: persist the narrow priced projection (fence pass + clamp
-    # pass both consume it), and compute both fences from ONE
+    # r10: pin the narrow priced projection (fence pass + clamp pass
+    # both consume it), and compute both fences from ONE
     # percentile(col, array(...)) sort buffer instead of two — same
     # exact algorithm and interpolation, half the agg memory.
-    priced = (li.join(F.broadcast(p),
-                      F.col("l_partkey") == F.col("p_partkey"))
-              .select("p_type", "l_extendedprice").persist())
+    priced = pin(li.join(F.broadcast(p),
+                         F.col("l_partkey") == F.col("p_partkey"))
+                 .select("p_type", "l_extendedprice"))
     fences = (priced.groupBy("p_type")
               .agg(F.percentile("l_extendedprice",
                                 F.array(F.lit(0.05), F.lit(0.95)))
@@ -3203,18 +3206,18 @@ def price_outliers_mad_tpr(spark: SparkSession, sf: str) -> DataFrame:
     p = t(spark, sf, "part").select("p_partkey", "p_brand")
     # r10 (guide §5): the broadcast join feeds the median rank pass
     # (2 evaluations inside exact_percentiles), the deviation table and
-    # the final fence count — persist the narrow (brand, price)
+    # the final fence count — pin the narrow (brand, price)
     # projection once; same for dev (the MAD rank pass + final agg).
-    priced = (li.join(F.broadcast(p),
-                      F.col("l_partkey") == F.col("p_partkey"))
-              .select("p_brand", "l_extendedprice").persist())
+    priced = pin(li.join(F.broadcast(p),
+                         F.col("l_partkey") == F.col("p_partkey"))
+                 .select("p_brand", "l_extendedprice"))
     med = (exact_percentiles(priced, "l_extendedprice", [0.5],
                              F.floor(F.col("l_extendedprice") / F.lit(2000.0)),
                              partition=["p_brand"])
            .withColumnRenamed("p_0_5", "med"))
-    dev = (priced.join(F.broadcast(med), "p_brand")
-           .withColumn("adev", F.abs(F.col("l_extendedprice") - F.col("med")))
-           .persist())
+    dev = pin(priced.join(F.broadcast(med), "p_brand")
+              .withColumn("adev",
+                          F.abs(F.col("l_extendedprice") - F.col("med"))))
     mad = (exact_percentiles(dev, "adev", [0.5],
                              F.floor(F.col("adev") / F.lit(1000.0)),
                              partition=["p_brand"])

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.plans.common import events_t, t
 
 
@@ -126,14 +127,14 @@ def events_markov_stationary(spark: SparkSession, sf: str) -> DataFrame:
     pairs = (ev.select(F.col("event_type").alias("src"),
                        F.lead("event_type").over(w).alias("dst"))
              .filter(F.col("dst").isNotNull()))
-    # r10 (guide §5): counts feeds rowsum and the p join — materialize
-    # the |types|² table so the window pass over events runs once.
-    counts = (pairs.groupBy("src", "dst")
-              .agg(F.count(F.lit(1)).alias("n"))
-              .localCheckpoint(eager=True))
+    # r10 (guide §5): counts feeds rowsum and the p join — pin the
+    # |types|² table so the window pass over events runs once; p is
+    # read by the state count and every round.
+    counts = pin(pairs.groupBy("src", "dst")
+                 .agg(F.count(F.lit(1)).alias("n")))
     rowsum = counts.groupBy("src").agg(F.sum("n").alias("rs"))
-    p = (counts.join(rowsum, "src")
-         .select("src", "dst", "n", "rs").persist())
+    p = pin(counts.join(rowsum, "src").select("src", "dst", "n", "rs"))
+    release(counts)
     states = p.select(F.col("src").alias("s")).distinct()
     k = states.count()
     v = states.select(F.col("s"),
@@ -204,21 +205,21 @@ def absorption_from_counts(counts: DataFrame) -> DataFrame:
     """The absorbing-chain recursion over a (src, dst, n) transition
     COUNT table — factored so the streaming fold (streaming/
     absorption.py) serves the registered query's exact generations
-    over its folded state.  See events_absorption_funnel."""
+    over its folded state.  See events_absorption_funnel.
+
+    Returns a collected (driver-local) frame: p and r, the pins every
+    generation reads, are released before it returns, so the streaming
+    monitor, which calls this per batch, keeps no block of any earlier
+    batch (the pin rule, operators/pin).  The result has |types| rows
+    and both pins <= |types|^2 (round-8 ADVICE)."""
     rowsum = counts.groupBy("src").agg(F.sum("n").alias("rs"))
-    # Eager localCheckpoint, not persist(): the streaming monitor calls
-    # this per batch, and persisted plans would accumulate cache entries
-    # forever (CacheManager never drops them on GC).  The ContextCleaner
-    # frees checkpoint blocks only after a later driver-JVM GC collects
-    # the unreferenced DataFrame, so they linger until then (a probe saw
-    # 2 of 5 freed); both tables are <= |types|^2 rows (round-8 ADVICE).
-    p = (counts.join(rowsum, "src")
-         .filter(F.col("src") != _AB_STATE).localCheckpoint(eager=True))
-    r = (p.filter(F.col("dst") == _AB_STATE)
-         .select(F.col("src").alias("s"),
-                 F.floor(F.lit(float(_MK_SCALE)) * F.col("n").cast("double")
-                         / F.col("rs").cast("double"))
-                 .cast("long").alias("rnano")).localCheckpoint(eager=True))
+    p = pin(counts.join(rowsum, "src").filter(F.col("src") != _AB_STATE))
+    r = pin(p.filter(F.col("dst") == _AB_STATE)
+            .select(F.col("src").alias("s"),
+                    F.floor(F.lit(float(_MK_SCALE))
+                            * F.col("n").cast("double")
+                            / F.col("rs").cast("double"))
+                    .cast("long").alias("rnano")))
     states = p.select(F.col("src").alias("s")).distinct()
     a = states.join(r, "s", "left").select(
         "s", F.coalesce("rnano", F.lit(0)).cast("long").alias("m"))
@@ -236,12 +237,15 @@ def absorption_from_counts(counts: DataFrame) -> DataFrame:
                      (F.coalesce("rnano", F.lit(0))
                       + F.coalesce("flow", F.lit(0)))
                      .cast("long").alias("m")))
-    return (a.join(r, "s", "left")
-            .select(F.col("s").alias("event_type"),
-                    F.coalesce("rnano", F.lit(0)).cast("long")
-                    .alias("one_step_nano"),
-                    F.col("m").alias(f"absorb_{_AB_HORIZON}_nano"))
-            .orderBy("event_type"))
+    out = (a.join(r, "s", "left")
+           .select(F.col("s").alias("event_type"),
+                   F.coalesce("rnano", F.lit(0)).cast("long")
+                   .alias("one_step_nano"),
+                   F.col("m").alias(f"absorb_{_AB_HORIZON}_nano"))
+           .orderBy("event_type"))
+    rows = out.collect()
+    release(p, r)
+    return counts.sparkSession.createDataFrame(rows, out.schema)
 
 
 def events_absorption_funnel(spark: SparkSession, sf: str) -> DataFrame:
@@ -265,13 +269,13 @@ def events_absorption_funnel(spark: SparkSession, sf: str) -> DataFrame:
                        F.lead("event_type").over(w).alias("dst"))
              .filter(F.col("dst").isNotNull()))
     # r10 (guide §5): absorption_from_counts references counts twice
-    # (rowsum + the p join) before its own checkpoint — materialize the
-    # |types|² table eagerly so the user-keyed window pass over events
-    # runs once.
-    counts = (pairs.groupBy("src", "dst")
-              .agg(F.count(F.lit(1)).alias("n"))
-              .localCheckpoint(eager=True))
-    return absorption_from_counts(counts)
+    # (rowsum + the p join) before its own pin — pin the |types|²
+    # table so the user-keyed window pass over events runs once.
+    counts = pin(pairs.groupBy("src", "dst")
+                 .agg(F.count(F.lit(1)).alias("n")))
+    out = absorption_from_counts(counts)
+    release(counts)
+    return out
 
 
 def _absorption_sql() -> str:

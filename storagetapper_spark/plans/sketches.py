@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _CMS_D = 4      # hash rows
@@ -49,7 +50,7 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
     asserted by the oracle match since both engines build the identical
     deterministic matrix.  Cell build and readback are equi-joins on
     (row, cell); the sketch itself is 1024 counters."""
-    cnt = _token_counts(spark, sf).persist()
+    cnt = pin(_token_counts(spark, sf))  # the cells and the top-k read it
     rows = F.explode(F.array(
         *[F.lit(r) for r in range(_CMS_D)])).alias("r")
     cells = (cnt.select("tok", "n", rows)

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _DEC = "decimal(19,0)"
@@ -152,13 +153,12 @@ def stats_levene_brown_forsythe(spark: SparkSession, sf: str) -> DataFrame:
                     * (1 - F.col("l_discount")) * 100).cast("long")
     base = li.select(F.col("l_returnflag").alias("g"), cents.alias("c"))
     # r10 (guide §1.2): base was scanned three times (sizes, grid, the
-    # deviation pass).  The (g, c) grid — domain-bounded — is persisted
+    # deviation pass).  The (g, c) grid — domain-bounded — is pinned
     # and every downstream readout is a cnt-weighted fold over it:
     # sizes = Σ cnt, and the deviation moments weight each grid value
     # by its multiplicity (exact integers/decimals, so the weighted
     # sums equal the former per-row sums bit-for-bit).
-    grid = (base.groupBy("g", "c").agg(F.count(F.lit(1)).alias("cnt"))
-            .persist())
+    grid = pin(base.groupBy("g", "c").agg(F.count(F.lit(1)).alias("cnt")))
     sizes = grid.groupBy("g").agg(F.sum("cnt").alias("n_g"))
     w = (Window.partitionBy("g").orderBy("c")
          .rowsBetween(Window.unboundedPreceding, 0))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import events_t
 
 _GAP_US = 1800 * 1000000
@@ -28,15 +29,14 @@ def _session_items(spark: SparkSession, sf: str, with_cohort: bool):
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = (F.col("ts").cast("double")
            - F.lag(F.col("ts").cast("double"), 1).over(w))
-    sess = (ev.withColumn("new_sess",
-                          F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-            .withColumn("session_id", F.sum("new_sess").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-            .groupBy("user_id", "session_id")
-            .agg(F.unix_micros(F.min("ts")).alias("s_us"),
-                 F.unix_micros(F.max("ts")).alias("e_us"))
-            .persist())
-    # r10 (guide §5/§1.2): the per-session rollup is persisted (both
+    sess = pin(ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800),
+                                                1).otherwise(0))
+               .withColumn("session_id", F.sum("new_sess").over(
+                   w.rowsBetween(Window.unboundedPreceding, 0)))
+               .groupBy("user_id", "session_id")
+               .agg(F.unix_micros(F.min("ts")).alias("s_us"),
+                    F.unix_micros(F.max("ts")).alias("e_us")))
+    # r10 (guide §5/§1.2): the per-session rollup is pinned (both
     # estimators referenced items twice → the two-window sessionize ran
     # twice), and the censoring horizon comes from the rollup itself —
     # max(e_us) over sessions == max(ts) over events, because every

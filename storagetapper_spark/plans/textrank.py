@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _QUERY_TERMS = ["spark", "merge", "window"]
@@ -215,11 +216,11 @@ def text_query_expansion_prf(spark: SparkSession, sf: str) -> DataFrame:
     distinct-doc counts, and each term's weight is one IEEE expression
     micro-floored.  Scale: the shuffles are R-sized (candidate
     postings prune through a broadcast semi-join before the df
-    distinct); the corpus cost is the tokenization scan, persisted so
+    distinct); the corpus cost is the tokenization scan, pinned so
     the four consumers (dl, tf, cand, df) share ONE pass — at 100 TB
     these are the postings/doclen INDEX tables, materialized once and
     reused across every search, never rebuilt per query."""
-    toks = _toks(spark, sf).persist()
+    toks = pin(_toks(spark, sf))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     nstats = dl.agg(F.count(F.lit(1)).alias("n_docs"),
                     F.sum("dl").alias("sum_dl"))

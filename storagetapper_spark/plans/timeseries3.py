@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import events_t, t
 
 
@@ -29,24 +30,23 @@ def gapfill_daily_locf(spark: SparkSession, sf: str) -> DataFrame:
     (hypertable/rollup-style engines ship this as time_bucket_gapfill +
     locf)."""
     ev = t(spark, sf, "events")
-    # r10 (guide §5/§1.2): daily is persisted and the calendar bounds +
+    # r10 (guide §5/§1.2): daily is pinned and the calendar bounds +
     # type list fold out of it (min(day) over the rollup == min(ts)::date
     # because day = to_date(ts) is monotone in the date, and every type
     # with an event has a daily row) — ONE events scan instead of three.
-    daily = (ev.groupBy("event_type",
-                        F.to_date(F.date_trunc("DAY", F.col("ts"))).alias("day"))
-               .agg(F.count(F.lit(1)).alias("n_events"),
-                    # portable exact mean: exact BIGINT cents sum +
-                    # shared double divisions, NO round on the
-                    # quotient.  A raw double avg's partial order
-                    # varies per run (the round-8 rfm flake); decimal
-                    # avg diverges at half boundaries (DuckDB routes
-                    # through double, observed 38.37875 → .3788 vs
-                    # .3787); BIGINT→double is the one portable cast.
-                    (F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
-                     .cast("double") / F.count(F.lit(1)) / 100.0)
-                    .alias("avg_value"))
-               .persist())
+    daily = pin(ev.groupBy("event_type", F.to_date(F.date_trunc(
+                    "DAY", F.col("ts"))).alias("day"))
+                  .agg(F.count(F.lit(1)).alias("n_events"),
+                       # portable exact mean: exact BIGINT cents sum +
+                       # shared double divisions, NO round on the
+                       # quotient.  A raw double avg's partial order
+                       # varies per run (the round-8 rfm flake); decimal
+                       # avg diverges at half boundaries (DuckDB routes
+                       # through double, observed 38.37875 → .3788 vs
+                       # .3787); BIGINT→double is the one portable cast.
+                       (F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+                        .cast("double") / F.count(F.lit(1)) / 100.0)
+                       .alias("avg_value")))
     bounds = daily.agg(F.min("day").alias("d0"),
                        F.max("day").alias("d1"))
     types = daily.select("event_type").distinct()

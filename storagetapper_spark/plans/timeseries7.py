@@ -25,6 +25,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.plans.common import t
 
 _M = 7          # weekly season
@@ -74,11 +75,10 @@ def ts_holt_winters_additive(spark: SparkSession, sf: str) -> DataFrame:
                   F.col("c_nationkey") == F.col("n_nationkey"))
             .select("n_name", F.col("o_orderdate").cast("date")
                     .alias("day")))
-    # r10 (guide §5): cnt feeds bounds AND the dense left join — persist
+    # r10 (guide §5): cnt feeds bounds AND the dense left join — pin
     # the tiny (nation, day) grid so the orders⨝customer join runs once.
-    cnt = (base.groupBy("n_name", "day")
-           .agg(F.count(F.lit(1)).cast("double").alias("y"))
-           .persist())
+    cnt = pin(base.groupBy("n_name", "day")
+              .agg(F.count(F.lit(1)).cast("double").alias("y")))
     bounds = cnt.groupBy("n_name").agg(F.min("day").alias("d0"),
                                        F.max("day").alias("d1"))
     cal = bounds.select(

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storagetapper_spark.operators.pin import pin
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -58,12 +60,13 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     batch dead-letter split.  Callers write the bad side to a DLQ path
     and alert on its count, exactly like the streaming DLQ.
 
-    The parsed frame is cached first: Spark disallows referencing ONLY
-    the corrupt-record column against raw files (the parser would have
-    to re-read just to report corruption — see SPARK-21610); caching
+    The parsed frame is pinned first (operators/pin): Spark disallows
+    referencing ONLY the corrupt-record column against raw files (the
+    parser would have to re-read just to report corruption — see
+    SPARK-21610); the pin's plan no longer reads the files, and it
     materializes the parse once, which is also what you want when both
     splits are consumed."""
-    df = df.cache()
+    df = pin(df)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = (df.filter(F.col(CORRUPT_COL).isNotNull())
              .select(F.col(CORRUPT_COL).alias("raw")))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from storagetapper_spark import statefs
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.plans.relational14 import absorption_from_counts
 
 _TRANSITIONS = "transitions"
@@ -110,17 +111,18 @@ def compact_last_events(spark: SparkSession, state_dir: str,
     batches = statefs.delta_batches(last_dir)
     if not batches or batches[0] > upto_batch:
         return
-    folded = (spark.read.parquet(last_dir)
-              .filter(F.col("_batch") <= F.lit(upto_batch))
-              .groupBy("user_id")
-              .agg(F.max(F.struct("ts", "event_id", "event_type"))
-                   .alias("e"))
-              .select("user_id", F.col("e.ts").alias("ts"),
-                      F.col("e.event_id").alias("event_id"),
-                      F.col("e.event_type").alias("event_type"))
-              .localCheckpoint(eager=True))  # sever lineage from the
-    # paths we are about to overwrite and delete (read-overwrite hazard)
+    # pinned: severs the lineage from the paths we are about to
+    # overwrite and delete (read-overwrite hazard)
+    folded = pin(spark.read.parquet(last_dir)
+                 .filter(F.col("_batch") <= F.lit(upto_batch))
+                 .groupBy("user_id")
+                 .agg(F.max(F.struct("ts", "event_id", "event_type"))
+                      .alias("e"))
+                 .select("user_id", F.col("e.ts").alias("ts"),
+                         F.col("e.event_id").alias("event_id"),
+                         F.col("e.event_type").alias("event_type")))
     statefs.write_delta(folded, last_dir, upto_batch)
+    release(folded)
     for b in batches:
         if b < upto_batch:
             statefs.rmtree(statefs.join_uri(last_dir, f"_batch={b}"))

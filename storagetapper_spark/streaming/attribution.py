@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
                                         join_uri)
 
@@ -29,22 +30,20 @@ _CHANNELS = ["view", "click"]
 
 
 def fold_attribution_batch(state: DataFrame | None, batch: DataFrame,
-                           ) -> tuple[DataFrame, DataFrame]:
+                           ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Fold one batch of raw events (user_id, event_id, event_type, ts,
     value) into the episode state.
 
-    Returns (new_state, credits): new_state has one row per user with
-    open touch counts; credits holds this batch's per-channel credit
-    increments (channel, credit, n_credits).  Pure batch form — the
-    sink wraps it."""
-    spark = batch.sparkSession
+    Returns (new_state, credits, folded): new_state has one row per
+    user with open touch counts; credits holds this batch's
+    per-channel credit increments (channel, credit, n_credits); both
+    read ``folded``, a pin (operators/pin) the caller releases once
+    both are written.  Pure batch form — the sink wraps it."""
     ev = batch.select("user_id", "event_id", "event_type", "ts", "value")
-    if state is not None:
-        seeded_state = state
-    else:
-        seeded_state = spark.createDataFrame(
-            [], "user_id long, n_view long, n_click long")
-    joined = (ev.join(F.broadcast(seeded_state), "user_id", "left"))
+    seeded_state = state if state is not None else (
+        batch.sparkSession.createDataFrame(
+            [], "user_id long, n_view long, n_click long"))
+    joined = ev.join(F.broadcast(seeded_state), "user_id", "left")
 
     out_schema = ("user_id long, kind string, channel string, "
                   "credit double, n long, n_view long, n_click long")
@@ -86,22 +85,17 @@ def fold_attribution_batch(state: DataFrame | None, batch: DataFrame,
                          "n_view": None, "n_click": None})
         return pd.DataFrame(rows)
 
-    folded = joined.groupBy("user_id").applyInPandas(fold, out_schema)
-    folded = folded.persist()
-    folded.count()
-    new_state_rows = (folded.filter(F.col("kind") == "state")
-                      .select("user_id", "n_view", "n_click"))
-    if state is not None:
-        untouched = state.join(new_state_rows.select("user_id"),
-                               "user_id", "left_anti")
-        new_state = new_state_rows.unionByName(untouched)
-    else:
-        new_state = new_state_rows
+    folded = pin(joined.groupBy("user_id").applyInPandas(fold, out_schema))
+    new_state = (folded.filter(F.col("kind") == "state")
+                 .select("user_id", "n_view", "n_click"))
+    if state is not None:  # users absent from the batch keep their row
+        new_state = new_state.unionByName(state.join(
+            new_state.select("user_id"), "user_id", "left_anti"))
     credits = (folded.filter(F.col("kind") == "credit")
                .groupBy("channel")
                .agg(F.sum("credit").alias("credit"),
                     F.sum("n").alias("n_credits")))
-    return new_state, credits
+    return new_state, credits, folded
 
 
 def attribution_sink(event_stream: DataFrame, state_dir: str,
@@ -132,7 +126,7 @@ def attribution_sink(event_stream: DataFrame, state_dir: str,
         bspark = batch_df.sparkSession
         state = (bspark.read.parquet(st_cur)
                  if exists(st_cur) else None)
-        new_state, credits = fold_attribution_batch(state, batch_df)
+        new_state, credits, folded = fold_attribution_batch(state, batch_df)
         # COMMIT ORDER MATTERS: credits first.  Each commit writes its
         # frame before it moves its table, so the credits lineage runs
         # while the episode files it reads are still the pre-batch ones.
@@ -145,6 +139,7 @@ def attribution_sink(event_stream: DataFrame, state_dir: str,
             commit_state(credits, cr_cur, batch_id)
         if st_due:
             commit_state(new_state, st_cur, batch_id)
+        release(folded)
 
     writer = (event_stream.writeStream
               .foreachBatch(process_batch)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storagetapper_spark import statefs
+from storagetapper_spark.operators.pin import pin, release
 
 MIN_TOKENS = 10
 ACCEPT_LANGS = ("en",)
@@ -77,16 +78,16 @@ def curate_batch(spark: SparkSession, batch: DataFrame, batch_id: int,
     n_gated = winners.count()
 
     hashes_path = statefs.join_uri(root, "accepted_hashes")
+    fresh = winners
     if statefs.exists(hashes_path):
         seen = spark.read.parquet(hashes_path).select("h")
         fresh = winners.join(seen, "h", "left_anti")
-    else:
-        fresh = winners
-    fresh = fresh.localCheckpoint(eager=True)  # pin BEFORE state writes
+    fresh = pin(fresh)  # BEFORE the state writes it reads
     n_fresh = fresh.count()
 
     statefs.write_delta(fresh, statefs.join_uri(root, "curated"), batch_id)
     statefs.write_delta(fresh.select("h"), hashes_path, batch_id)
+    release(fresh)
     return {"batch_id": batch_id, "n_in": n_in, "n_gated": n_gated,
             "n_accepted": n_fresh}
 

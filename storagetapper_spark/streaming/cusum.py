@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
                                         join_uri, write_delta)
 
@@ -108,8 +109,7 @@ def cusum_sink(event_stream: DataFrame, baseline: DataFrame,
     """foreachBatch CUSUM monitor over a raw event stream; the state
     commit protocol is in the statefs module docstring."""
     spark = event_stream.sparkSession
-    base = baseline.persist()
-    base.count()
+    base = pin(baseline)  # read by every batch of the stream
     cur = join_uri(state_dir, "cusum", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
                                         join_uri)
 
@@ -91,8 +92,7 @@ def drift_sink(event_stream: DataFrame, reference: DataFrame,
     ``statefs.commit_state`` (protocol in the statefs module docstring;
     a replay is skipped)."""
     spark = event_stream.sparkSession
-    ref = reference.persist()
-    ref.count()
+    ref = pin(reference)  # read by every batch of the stream
     cur = join_uri(state_dir, "drift", "current")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

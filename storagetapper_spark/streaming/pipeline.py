@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storagetapper_spark.operators.merge import latest_state
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.statefs import (commit_state, committed_batch, exists,
                                         join_uri, read_for_keys)
 
@@ -62,19 +63,19 @@ def read_changelog_stream_with_dlq(spark: SparkSession, path: str,
     stream = reader.json(path)
 
     def route(batch_df: DataFrame) -> DataFrame:
-        # Spark requires caching a frame before filtering on the
-        # corrupt-record column alone (it is populated at parse time)
-        batch_df.persist()
+        # Spark refuses a query over raw input that reads the
+        # corrupt-record column alone (it is populated at parse time,
+        # SPARK-21610), so the dead-letter side reads a pin of the batch
+        parsed = pin(batch_df)
         try:
-            bad = batch_df.filter(F.col("_corrupt_record").isNotNull()) \
-                          .select("_corrupt_record")
+            bad = parsed.filter(F.col("_corrupt_record").isNotNull()) \
+                        .select("_corrupt_record")
             if bad.limit(1).count():
                 bad.write.mode("append").text(dead_letter_dir)
-            clean = (batch_df.filter(F.col("_corrupt_record").isNull())
-                             .drop("_corrupt_record"))
-            return clean
         finally:
-            batch_df.unpersist()
+            release(parsed)
+        return (batch_df.filter(F.col("_corrupt_record").isNull())
+                .drop("_corrupt_record"))
 
     return stream, route
 
@@ -185,12 +186,12 @@ def gtid_guarded_upsert_sink(cdc_stream: DataFrame, state_dir: str,
             return
         state = _load_set()
         # read twice (merge, fold): pin the filtered batch once
-        fresh = filter_unexecuted(batch_df, state, gtid_col=gtid_col
-                                  ).localCheckpoint(eager=True)
+        fresh = pin(filter_unexecuted(batch_df, state, gtid_col=gtid_col))
         if not state_done:
             _upsert(spark, cur_path, fresh, pk_cols, seqno_col, op_col,
                     batch_id)
         folded = fold_batch(state, fresh, gtid_col=gtid_col)
+        release(fresh)
         commit_state(spark.createDataFrame([(folded.to_string(),)],
                                            "executed_gtid_set string"),
                      gtid_path, batch_id)

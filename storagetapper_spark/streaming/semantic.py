@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.statefs import exists, join_uri, write_delta
 from storagetapper_spark.streaming.ann_index import (
     apply_ingest_batch,
@@ -103,13 +104,14 @@ def semantic_pairs_frames(new_assigned: DataFrame,
             .applyInPandas(block_pairs, _PAIR_SCHEMA).distinct())
 
 
-def semantic_pairs_batch(spark, batch_df: DataFrame, index_dir: str,
-                         centroids, threshold: float = 0.95,
+def semantic_pairs_batch(spark, new: DataFrame, index_dir: str,
+                         threshold: float = 0.95,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
-    """Duplicate pairs contributed by one batch: (new x current-index)
+    """Duplicate pairs contributed by one batch whose cells are assigned
+    (``new``, an ``assign_cells`` output, read by the touched-cell
+    collect and by the pair build, so pin it): (new x current-index)
     plus (new x new).  Only the batch's touched cells are scanned."""
-    new = (assign_cells(batch_df, centroids, id_col, vec_col).persist())
     touched = [r.centroid_id
                for r in new.select("centroid_id").distinct().collect()]
     cells_dir = join_uri(index_dir, "cells")
@@ -135,9 +137,11 @@ def apply_semantic_batch(spark, batch_df: DataFrame, state_dir: str,
     Both are batch-delta log writes, so any at-least-once replay
     replaces itself."""
     index_dir = join_uri(state_dir, "index")
-    pairs = semantic_pairs_batch(spark, batch_df, index_dir, centroids,
-                                 threshold, id_col, vec_col)
+    new = pin(assign_cells(batch_df, centroids, id_col, vec_col))
+    pairs = semantic_pairs_batch(spark, new, index_dir, threshold,
+                                 id_col, vec_col)
     write_delta(pairs, join_uri(state_dir, "pairs"), batch_id)
+    release(new)
     apply_ingest_batch(spark, batch_df, index_dir, centroids, batch_id,
                        id_col, vec_col)
 

@@ -16,14 +16,15 @@ reference's offset-window bounded redelivery, pipe/kafka.go:43-53).
 
 State per key: (seqno, op, value columns) of the best event seen.
 Output per key per trigger: one conflated row + how many raw events it
-absorbed.  Keys idle longer than ``ttl_ms`` are evicted.
+absorbed.  A key idle longer than ``ttl_ms`` is forgotten on its next
+event.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 
 def conflate_cdc_tws(stream: DataFrame, pk_cols: list[str],
@@ -93,8 +94,8 @@ def conflate_cdc_tws(stream: DataFrame, pk_cols: list[str],
 
 def conflate_cdc(stream: DataFrame, pk_cols: list[str],
                  value_cols: list[str], seqno_col: str = "seqno",
-                 op_col: str = "op", ttl_ms: int | None = None,
-                 proactive_ttl: bool = False) -> DataFrame:
+                 op_col: str = "op",
+                 ttl_ms: int | None = None) -> DataFrame:
     """Conflate a CDC stream to ≤1 output row per key per trigger.
 
     Emitted row = max-seqno event across (this batch ∪ remembered
@@ -102,20 +103,16 @@ def conflate_cdc(stream: DataFrame, pk_cols: list[str],
     the raw events absorbed this trigger (monitoring: conflation ratio
     = input rows / output rows).
 
-    TTL eviction is LAZY by default (r11 perf fix): the state row
-    carries its last-touch processing time and a key idle past
-    ``ttl_ms`` is discarded on its NEXT event, so the plan uses
-    ``NoTimeout`` and an ``availableNow`` drain terminates when the
-    data is drained.  The previous ``ProcessingTimeTimeout`` form kept
-    a registered timeout on every key, and Spark keeps scheduling
-    micro-batches under availableNow until every registered timeout
-    has fired — measured: a 4-row drain with a 1 h TTL was STILL
-    running after 300 s and ~150 empty micro-batches (the source of
-    the 242 s test_stateful runtime; the test only passed because it
-    read partial output after ``awaitTermination`` expired).
-    ``proactive_ttl=True`` restores timeout-driven eviction (which
-    also RECLAIMS idle keys' store memory) for genuinely continuous
-    deployments where the query never drains dry.
+    TTL eviction is LAZY (r11 perf fix): the state row carries its
+    last-touch processing time and a key idle past ``ttl_ms`` is
+    forgotten on its NEXT event, so the plan uses ``NoTimeout`` and an
+    ``availableNow`` drain terminates when the data is drained.  A
+    ``ProcessingTimeTimeout`` form kept a registered timeout on every
+    key, and Spark keeps scheduling micro-batches under availableNow
+    until every registered timeout has fired — measured: a 4-row drain
+    with a 1 h TTL was STILL running after 300 s and ~150 empty
+    micro-batches.  An idle key's state row stays in the store until
+    that key's next event.
     """
     pk_fields = [stream.schema[c] for c in pk_cols]
     val_fields = [stream.schema[c] for c in value_cols]
@@ -133,14 +130,11 @@ def conflate_cdc(stream: DataFrame, pk_cols: list[str],
     def conflate(key, pdf_iter, state: GroupState):
         import pandas as pd
 
-        if state.hasTimedOut:          # idle past TTL: evict, emit nothing
-            state.remove()
-            return
         now_ms = state.getCurrentProcessingTimeMs()
-        best = tuple(state.get)[:-1] if state.exists else None
-        if (best is not None and ttl_ms is not None and not proactive_ttl
-                and now_ms - tuple(state.get)[-1] > ttl_ms):
-            best = None                # lazy eviction on next touch
+        last = tuple(state.get) if state.exists else None
+        # lazy eviction: a key idle past the TTL starts over
+        live = last and (ttl_ms is None or now_ms - last[-1] <= ttl_ms)
+        best = last[:-1] if live else None
         n = 0
         for pdf in pdf_iter:
             if not len(pdf):
@@ -154,8 +148,6 @@ def conflate_cdc(stream: DataFrame, pk_cols: list[str],
         if n == 0:
             return
         state.update((*best, now_ms))
-        if ttl_ms is not None and proactive_ttl:
-            state.setTimeoutDuration(ttl_ms)
         out = {f.name: [k] for f, k in zip(pk_fields, key)}
         out["seqno"], out["op"] = [best[0]], [best[1]]
         for c, v in zip(value_cols, best[2:]):
@@ -163,9 +155,6 @@ def conflate_cdc(stream: DataFrame, pk_cols: list[str],
         out["n_conflated"] = [n]
         yield pd.DataFrame(out)
 
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if (ttl_ms is not None and proactive_ttl)
-               else GroupStateTimeout.NoTimeout)
     return (stream.groupBy(*pk_cols)
                   .applyInPandasWithState(conflate, out_schema, state_schema,
-                                          "update", timeout))
+                                          "update", "NoTimeout"))

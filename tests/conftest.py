@@ -45,9 +45,9 @@ _SLOW = {
     "test_streaming_history.py::test_scd2_sink_end_to_end",
     "test_streaming_curation.py::test_gate_dedup_and_cross_batch",
     "test_streaming_curation.py::test_replay_idempotent",
-    # the query-level cache check: five graph queries stay in the
-    # default lane, the other thirteen run here
-    *(f"test_graph.py::test_graph_query_leaves_no_cache_entry[{q}]"
+    # the query-level cache check: the first five of each list in
+    # tests/test_graph.py stay in the default lane, the rest run here
+    *(f"test_graph.py::test_query_leaves_no_cache_entry[{q}]"
       for q in ("graph_jaccard_link_prediction", "graph_ra_link_prediction",
                 "graph_jaccard_link_prediction_capped",
                 "graph_minhash_link_prediction",
@@ -56,7 +56,27 @@ _SLOW = {
                 "graph_triangles_degree_oriented", "graph_rich_club",
                 "graph_ktruss", "graph_louvain_move_round",
                 "graph_pagerank_copurchase", "graph_triangles",
-                "graph_ppr_brand")),
+                "graph_ppr_brand",
+                "corpus_budget_cut", "dedup_clusters",
+                "dedup_corpus_summary", "dedup_lsh_verified",
+                "dedup_minhash_calibration", "dedup_minhash_lsh",
+                "dedup_minhash_lsh_incr", "dedup_minhash_lsh_star",
+                "dedup_ngram_containment", "dedup_semantic",
+                "dedup_survivorship", "dedup_winnowing_pairs",
+                "embedding_pca_power_iteration", "events_absorption_funnel",
+                "events_markov_stationary", "gapfill_daily_locf",
+                "geo_dbscan_core", "ml_boosted_stumps",
+                "ml_isotonic_calibration", "ml_kmeans_lloyd",
+                "ml_logistic_gd", "overlapping_orders", "price_outliers_mad",
+                "price_outliers_mad_tpr", "recsys_coverage_diversity",
+                "recsys_item_item_cosine", "sample_dsir_importance",
+                "sample_negatives_contrastive", "sample_split_leakage_safe",
+                "sketch_cms_heavy_hitters", "stats_levene_brown_forsythe",
+                "survival_logrank", "survival_nelson_aalen",
+                "text_dup_ngram_fraction", "text_lm_score",
+                "text_query_expansion_prf", "text_repeated_passages",
+                "tokenizer_unigram_viterbi", "ts_holt_winters_additive",
+                "winsorized_prices")),
 }
 
 

@@ -1,6 +1,7 @@
 """operators/graph: pagerank's two iteration styles and known-graph
 sanity, symmetrize's row multiset and single read, and the pin /
-release / iterate rule — down to the graph-family queries leaving no
+release / iterate rule — down to the graph-family queries, and every
+query whose materializing sites moved onto operators/pin, leaving no
 cache-manager entry behind."""
 
 import math
@@ -11,9 +12,8 @@ from pyspark.sql import functions as F
 
 from storagetapper_spark.operators import graph
 from storagetapper_spark.operators.dedup import connected_components
-from storagetapper_spark.operators.graph import (pagerank, pin, release,
-                                                 symmetrize)
-from storagetapper_spark.plans.common import order_baskets
+from storagetapper_spark.operators.graph import pagerank, symmetrize
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.plans.graph2 import _lpa_labels
 from storagetapper_spark.plans.registry import QUERIES
 
@@ -200,9 +200,11 @@ def test_pinned_frame_is_readable_until_released(spark):
         pinned.count()
 
 
-# the graph family: every query whose materializing sites go through
-# operators/graph; the first five (the ladders and pin-heavy plans) run
-# in the default lane, the rest in the slow lane (tests/conftest.py)
+# every query whose materializing sites go through operators/pin: the
+# graph family, then the queries that persisted or checkpointed before
+# (all but embedding_pca_power_iteration and events_absorption_funnel
+# left a cache-manager entry then).  Each list's first five run in the
+# default lane, the rest in the slow lane (tests/conftest.py).
 GRAPH_FAMILY = [
     "graph_label_propagation", "graph_hits", "graph_kcore",
     "graph_bfs_distance", "graph_modularity",
@@ -215,13 +217,34 @@ GRAPH_FAMILY = [
 ]
 
 
-@pytest.mark.parametrize("name", GRAPH_FAMILY)
-def test_graph_query_leaves_no_cache_entry(spark, sf_dir, name):
-    """After the query runs, the only cache-manager entry left is the
-    basket pin of skew.basket_units, which an unpersist of a fresh
-    order_baskets plan drops by plan match."""
+PORTED = [
+    "market_basket_rules", "dedup_ngram_jaccard", "attribution_linear",
+    "drift_ks_by_feature", "survival_km",
+    "corpus_budget_cut", "dedup_clusters", "dedup_corpus_summary",
+    "dedup_lsh_verified", "dedup_minhash_calibration", "dedup_minhash_lsh",
+    "dedup_minhash_lsh_incr", "dedup_minhash_lsh_star",
+    "dedup_ngram_containment", "dedup_semantic", "dedup_survivorship",
+    "dedup_winnowing_pairs", "embedding_pca_power_iteration",
+    "events_absorption_funnel", "events_markov_stationary",
+    "gapfill_daily_locf", "geo_dbscan_core", "ml_boosted_stumps",
+    "ml_isotonic_calibration", "ml_kmeans_lloyd", "ml_logistic_gd",
+    "overlapping_orders", "price_outliers_mad", "price_outliers_mad_tpr",
+    "recsys_coverage_diversity", "recsys_item_item_cosine",
+    "sample_dsir_importance", "sample_negatives_contrastive",
+    "sample_split_leakage_safe", "sketch_cms_heavy_hitters",
+    "stats_levene_brown_forsythe", "survival_logrank",
+    "survival_nelson_aalen", "text_dup_ngram_fraction", "text_lm_score",
+    "text_query_expansion_prf", "text_repeated_passages",
+    "tokenizer_unigram_viterbi", "ts_holt_winters_additive",
+    "winsorized_prices",
+]
+
+
+@pytest.mark.parametrize("name", GRAPH_FAMILY + PORTED)
+def test_query_leaves_no_cache_entry(spark, sf_dir, name):
+    """After the query runs, the cache manager holds no entry: nothing
+    is materialized except through operators/pin."""
     spark.catalog.clearCache()
     QUERIES[name](spark, sf_dir).collect()
-    order_baskets(spark, sf_dir).unpersist()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty(), name

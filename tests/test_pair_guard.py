@@ -12,6 +12,7 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
+from storagetapper_spark.operators.pin import pin, release
 from storagetapper_spark.operators.skew import (
     basket_units,
     guarded_pair_explode,
@@ -20,7 +21,18 @@ from storagetapper_spark.operators.skew import (
 
 
 def _baskets(spark, rows):
-    return spark.createDataFrame(rows, "k int, ps array<int>")
+    # the guard reads a pinned basket table (operators/skew.basket_units)
+    return pin(spark.createDataFrame(rows, "k int, ps array<int>"))
+
+
+def test_basket_units_rejects_a_basket_table_that_is_not_pinned(spark):
+    rows = [(1, [1, 2, 3])]
+    lazy = spark.createDataFrame(rows, "k int, ps array<int>")
+    gone = _baskets(spark, rows)
+    release(gone)
+    for baskets in (lazy, _baskets(spark, rows).select("k", "ps"), gone):
+        with pytest.raises(ValueError, match="not a live pin"):
+            basket_units(baskets, "ps", keep=("k",))
 
 
 def test_guarded_pairs_exact_multiset(spark):
@@ -105,8 +117,8 @@ def test_guard_exact_at_tiny_caps(spark, cap, chunk):
 ], ids=["all_within_cap", "one_over_cap"])
 def test_guard_observes_and_picks_shape(spark, caplog, rows, max_basket,
                                         n_over):
-    # the one pair-guard rule: basket_units pins the baskets, reads the
-    # largest basket and the over-cap count in one action (logged), and
+    # the one pair-guard rule: basket_units reads the pinned baskets'
+    # largest basket and over-cap count in one action (logged), and
     # spreads units only when some basket exceeds the cap
     caplog.set_level(logging.INFO,
                      logger="storagetapper_spark.operators.skew")

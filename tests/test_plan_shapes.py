@@ -162,12 +162,13 @@ def test_kmeans_assign_broadcasts_centroids(spark, sf_dir):
 
 
 def test_lm_score_single_generate_feeds_both_branches(spark, sf_dir):
-    """text_lm_score persists the doc×bigram matrix so the explode runs
-    once; the executed plan must read the cache (InMemory) rather than
-    re-deriving two Generate branches from the raw scan."""
+    """text_lm_score pins the doc×bigram matrix so the explode runs
+    once; the executed plan must read the pin (an ExistingRDD scan)
+    rather than re-deriving two explode branches from the raw scan."""
     df = QUERIES["text_lm_score"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan
+    assert "MapInPandas" not in plan
 
 
 # --- two-pass rank / sweep: no unpartitioned window over the data --------

@@ -4,6 +4,7 @@ applyInPandasWithState (streaming max-seqno-wins with cross-batch state).
 
 import json
 import os
+import time
 
 from pyspark.sql import types as T
 
@@ -25,14 +26,14 @@ def _drop(path, name, events):
             f.write(json.dumps(e) + "\n")
 
 
-def _run(spark, src, ckpt, out_dir):
+def _run(spark, src, ckpt, out_dir, ttl_ms=3_600_000):
     """Drain the feed through conflate_cdc, appending each trigger's
     conflated output to parquet (foreachBatch supports checkpoint
     recovery; the memory sink does not)."""
     stream = read_changelog_stream(spark, src, CDC_SCHEMA,
                                    max_files_per_trigger=1)
     conf = conflate_cdc(stream, pk_cols=["pk"], value_cols=["val"],
-                        ttl_ms=3_600_000)
+                        ttl_ms=ttl_ms)
 
     def emit(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out_dir)
@@ -129,3 +130,25 @@ def test_conflation_tws(spark, tmp_path):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+
+
+def test_idle_key_is_forgotten_on_its_next_event(spark, tmp_path):
+    """Lazy TTL eviction: a key idle past ``ttl_ms`` loses its state on
+    its next event, so an event with a LOWER seqno after the idle gap
+    is emitted as the key's image (within the TTL it would be absorbed,
+    as test_conflation_and_no_regression shows)."""
+    src = str(tmp_path / "feed")
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    ttl_ms = 1_000
+    _drop(src, "b1.json", [{"pk": 1, "val": "v5", "op": "insert",
+                            "seqno": 5}])
+    rows = [(r.pk, r.seqno, r.val) for r in
+            _run(spark, src, ckpt, out_dir, ttl_ms).collect()]
+    assert rows == [(1, 5, "v5")]
+    time.sleep(2 * ttl_ms / 1000)
+    _drop(src, "b2.json", [{"pk": 1, "val": "v2-after-idle",
+                            "op": "insert", "seqno": 2}])
+    rows = sorted((r.pk, r.seqno, r.val, r.n_conflated) for r in
+                  _run(spark, src, ckpt, out_dir, ttl_ms).collect())
+    assert rows == [(1, 2, "v2-after-idle", 1), (1, 5, "v5", 1)]

@@ -37,7 +37,7 @@ def test_incremental_folding_matches_batch_query(spark, sf_dir):
           .select("user_id", "event_id", "event_type", "ts", "value"))
     state, totals = None, {}
     for b in _batches_by_time(ev, 3):
-        state, credits = fold_attribution_batch(state, b)
+        state, credits, _ = fold_attribution_batch(state, b)
         for r in credits.collect():
             c, n = totals.get(r.channel, (0.0, 0))
             totals[r.channel] = (c + r.credit, n + r.n_credits)
@@ -54,12 +54,12 @@ def test_users_absent_from_batch_keep_state(spark):
     b1 = spark.createDataFrame(
         rows, "user_id long, event_id long, event_type string, "
               "ts double, value double")
-    state, _ = fold_attribution_batch(None, b1)
+    state, _, _ = fold_attribution_batch(None, b1)
     only_u1 = spark.createDataFrame(
         [(1, 3, "purchase", 20.0, 100.0)],
         "user_id long, event_id long, event_type string, "
         "ts double, value double")
-    state2, credits = fold_attribution_batch(state, only_u1)
+    state2, credits, _ = fold_attribution_batch(state, only_u1)
     st = {r.user_id: (r.n_view, r.n_click) for r in state2.collect()}
     assert st[2] == (1, 0)        # untouched user keeps the open touch
     assert st[1] == (0, 0)        # purchase closed user 1's episode

@@ -82,8 +82,8 @@ def test_untouched_cells_are_not_scanned(spark, sf_dir, tmp_path):
     apply_semantic_batch(spark, emb, state, C, batch_id=0,
                          threshold=THRESH)
     one = emb.orderBy("vec_id").limit(1)
-    pairs = semantic_pairs_batch(spark, one,
-                                 f"{state}/index", C, threshold=THRESH)
+    pairs = semantic_pairs_batch(spark, assign_cells(one, C),
+                                 f"{state}/index", threshold=THRESH)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     # the index scan must carry a centroid_id partition filter
     assert "centroid_id" in plan

@@ -1,12 +1,14 @@
 """Audit physical plans of every registry query at a given SF: join
 strategies, pushed filters, exchanges, Python evaluation nodes.
 
-Every query is planned from an empty cache (``clearCache()`` first, and
-every persistent RDD an earlier query left is unpersisted), so a row
-does not depend on what earlier queries left persisted.  ``rdds=`` is
-the number of persistent RDDs the query leaves once it is planned:
-cache entries it materialized and the checkpoint blocks of its pins
-(operators/graph.pin), which ``clearCache()`` never frees.
+Every persistent RDD an earlier query left is unpersisted before the
+next query is planned, so a row does not depend on what earlier queries
+left pinned.  ``rdds=`` is the number of persistent RDDs the query
+leaves once it is planned: the checkpoint blocks of the pins
+(operators/pin) its plan still reads.  ``cache=`` is the number of
+cache-manager entries left behind; the package materializes through
+operators/pin only, so it reads 0 everywhere, and the cache is never
+cleared between queries to hide one.
 
 Usage: python tools/audit_plans.py [sf_dir]
 """
@@ -29,15 +31,16 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     persistent = spark.sparkContext._jsc.getPersistentRDDs
+    cache = spark._jsparkSession.sharedState().cacheManager()
     rows = []
     for name, fn in sorted(QUERIES.items()):
-        spark.catalog.clearCache()
         for rdd in list(persistent().values()):
             rdd.unpersist(False)
         try:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
             rdds = persistent().size()
+            cached = cache.numCachedEntries()
         except Exception as e:  # noqa: BLE001
             rows.append((name, f"ERROR {str(e)[:80]}"))
             continue
@@ -62,7 +65,8 @@ def main():
             flags.append("ROW-PYTHON")
         summary = (f"bhj={stats['bhj']} bnl={stats['bnl']} "
                    f"exch={stats['exch']} "
-                   f"pushed={stats['pushed']} py={stats['py']} rdds={rdds}"
+                   f"pushed={stats['pushed']} py={stats['py']} rdds={rdds} "
+                   f"cache={cached}"
                    + (" ⚠ " + ",".join(flags) if flags else ""))
         rows.append((name, summary))
     for name, s in rows:

@@ -1,7 +1,9 @@
 """Local correctness harness mirroring the driver's DuckDB-oracle check:
 run each queries() entry on Spark and its oracle_sql() on DuckDB over the
 same parquet tables, compare row count, column names, and an
-order-insensitive value hash.
+order-insensitive value hash.  A query that leaves an entry in Spark's
+cache manager fails as CACHE_LEFT: the package materializes through
+operators/pin only, which never makes one.
 
 Usage: python tools/check.py [sf_dir] [query_name ...]
 """
@@ -99,6 +101,7 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     results = {}
     for name, fn in qs.items():
         if only and name not in only:
@@ -112,9 +115,11 @@ def main():
             results[name] = ("SPARK_ERROR", str(e).split("\n")[0][:200])
             print(f"✗ {name}: SPARK_ERROR {results[name][1]}")
             continue
-        finally:
-            # a query's leftover pins must not serve or slow the next one
-            spark.catalog.clearCache()
+        if not cache.isEmpty():
+            results[name] = ("CACHE_LEFT", "cache-manager entry left behind")
+            print(f"✗ {name}: CACHE_LEFT ({time.time()-t0:.1f}s)")
+            spark.catalog.clearCache()  # charge the next query only its own
+            continue
         if name not in oracles:
             results[name] = ("ROWS_ONLY", len(srows))
             print(f"~ {name}: rows-only, {len(srows)} rows ({time.time()-t0:.1f}s)")

@@ -20,7 +20,14 @@ micro-batches and cross-batch state folding is actually exercised.
 
 Each row's ``batches`` is the length of its query's own
 ``recentProgress`` after the drain; the listener's snapshot lags the
-asynchronous listener bus.
+asynchronous listener bus.  ``phases_ms`` holds one entry per batch
+from that same log: its ``durationMs`` phases (``triggerExecution`` is
+the whole batch, ``addBatch`` the sink's work) plus ``state_commit``,
+``state_updates`` and ``state_removals``, the state-store times of its
+stateful operators summed over their tasks (task time, so they can
+exceed the batch's wall time).  ``wall_sec`` minus the summed
+``triggerExecution`` is the drain's fixed cost (query start, source
+listing, stop).
 
 Usage: python tools/stream_bench.py [--sf SF_DIR] [module ...]
 """
@@ -75,6 +82,17 @@ def _write_batches(df, feed: str, key, n: int = 3) -> int:
         (df.where(key % n == i).coalesce(1)
          .write.mode("overwrite").parquet(os.path.join(feed, f"b{i}")))
     return cnt
+
+
+def _phases(progress) -> dict:
+    """One batch's ``durationMs`` phases plus its state-store times."""
+    phases = dict(progress.durationMs)
+    for key, field in (("state_commit", "commitTimeMs"),
+                       ("state_updates", "allUpdatesTimeMs"),
+                       ("state_removals", "allRemovalsTimeMs")):
+        phases[key] = sum(getattr(op, field)
+                          for op in progress.stateOperators)
+    return phases
 
 
 def _foreach_drain(stream, ckpt: str, sink_fn):
@@ -554,6 +572,7 @@ def main() -> int:
                 # the query's own progress log is complete once it has
                 # stopped; the listener may not have heard of it yet
                 entry["batches"] = len(q.recentProgress)
+                entry["phases_ms"] = [_phases(p) for p in q.recentProgress]
             # monitor.py telemetry for the query this adapter started
             for qid, p in rec.progress.items():
                 if qid in seen:
@@ -571,7 +590,6 @@ def main() -> int:
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
         finally:
             shutil.rmtree(work, ignore_errors=True)
-            spark.catalog.clearCache()
     results["monitor"] = {
         "note": "measurement instrument: ProgressRecorder listener "
                 "supplied batches/state_rows/state_memory_bytes above",
