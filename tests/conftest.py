@@ -47,7 +47,7 @@ _SLOW = {
     "test_streaming_curation.py::test_replay_idempotent",
     # the query-level cache check: the first five of each list in
     # tests/test_graph.py stay in the default lane, the rest run here
-    *(f"test_graph.py::test_query_leaves_no_cache_entry[{q}]"
+    *(f"test_graph.py::test_graph_query_leaves_no_cache_entry[{q}]"
       for q in ("graph_jaccard_link_prediction", "graph_ra_link_prediction",
                 "graph_jaccard_link_prediction_capped",
                 "graph_minhash_link_prediction",
@@ -56,8 +56,9 @@ _SLOW = {
                 "graph_triangles_degree_oriented", "graph_rich_club",
                 "graph_ktruss", "graph_louvain_move_round",
                 "graph_pagerank_copurchase", "graph_triangles",
-                "graph_ppr_brand",
-                "corpus_budget_cut", "dedup_clusters",
+                "graph_ppr_brand")),
+    *(f"test_graph.py::test_query_leaves_no_cache_entry[{q}]"
+      for q in ("corpus_budget_cut", "dedup_clusters",
                 "dedup_corpus_summary", "dedup_lsh_verified",
                 "dedup_minhash_calibration", "dedup_minhash_lsh",
                 "dedup_minhash_lsh_incr", "dedup_minhash_lsh_star",

@@ -240,11 +240,20 @@ PORTED = [
 ]
 
 
-@pytest.mark.parametrize("name", GRAPH_FAMILY + PORTED)
-def test_query_leaves_no_cache_entry(spark, sf_dir, name):
+def _assert_no_cache_entry(spark, sf_dir, name):
     """After the query runs, the cache manager holds no entry: nothing
     is materialized except through operators/pin."""
     spark.catalog.clearCache()
     QUERIES[name](spark, sf_dir).collect()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty(), name
+
+
+@pytest.mark.parametrize("name", GRAPH_FAMILY)
+def test_graph_query_leaves_no_cache_entry(spark, sf_dir, name):
+    _assert_no_cache_entry(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize("name", PORTED)
+def test_query_leaves_no_cache_entry(spark, sf_dir, name):
+    _assert_no_cache_entry(spark, sf_dir, name)
